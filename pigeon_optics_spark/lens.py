@@ -63,10 +63,12 @@ import traceback
 from dataclasses import dataclass
 from typing import Any, Iterator
 
+import pyarrow as pa
+
 from .paths import DataPath, decode_path, encode_path
 from .reduce import fold, merge_into
 from .session import job_desc
-from .store import DatasetStore
+from .store import SEGMENT_DDL, DatasetStore, _segment_files
 from .values import (
     PMap,
     PSet,
@@ -433,6 +435,26 @@ def map_records(inputs_df, code: str, timeout_ms: float | None = None):
 REDUCED_SCHEMA = "record_id string, value string"
 
 
+def fold_emissions(rows: Iterator[tuple[str, str]]) -> Iterator[tuple[str, str]]:
+    """The merge-reduce fold: ``rows`` is ``(out_id, tagged_json)`` in fold
+    order with every out_id group contiguous; yields ``(out_id,
+    canonical_json(merged))`` per group.  Both the distributed reduce
+    (:func:`reduce_outputs`) and the driver-side small-delta build fold
+    through this one loop."""
+    cur_id = None
+    cur_acc = None
+    for out_id, value in rows:
+        v = tagged_to_value(loads_value(value))
+        if out_id != cur_id:
+            if cur_id is not None:
+                yield cur_id, canonical_json(cur_acc)
+            cur_id, cur_acc = out_id, v
+        else:
+            cur_acc = merge_into(cur_acc, v)
+    if cur_id is not None:
+        yield cur_id, canonical_json(cur_acc)
+
+
 def reduce_outputs(outputs_df, num_partitions: int | None = None, *,
                    presorted: bool = False):
     """Fold all emissions per out_id in deterministic order.
@@ -472,25 +494,19 @@ def reduce_outputs(outputs_df, num_partitions: int | None = None, *,
                                "emit_idx")
 
     def fold_partition(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cur_id = None
-        cur_acc = None
-
-        for pdf in batches:
-            done_ids, done_vals = [], []
-            for row in pdf.itertuples(index=False):
-                v = tagged_to_value(loads_value(row.value))
-                if row.out_id != cur_id:
-                    if cur_id is not None:
-                        done_ids.append(cur_id)
-                        done_vals.append(canonical_json(cur_acc))
-                    cur_id, cur_acc = row.out_id, v
-                else:
-                    cur_acc = merge_into(cur_acc, v)
-            if done_ids:
+        # a group split across Arrow batches folds as one: the fold sees a
+        # single row stream and carries its accumulator over the boundary
+        rows = (pair for pdf in batches
+                for pair in zip(pdf["out_id"].tolist(), pdf["value"].tolist()))
+        done_ids, done_vals = [], []
+        for out_id, value in fold_emissions(rows):
+            done_ids.append(out_id)
+            done_vals.append(value)
+            if len(done_ids) >= 10_000:
                 yield pd.DataFrame({"record_id": done_ids, "value": done_vals})
-        if cur_id is not None:
-            yield pd.DataFrame({"record_id": [cur_id],
-                                "value": [canonical_json(cur_acc)]})
+                done_ids, done_vals = [], []
+        if done_ids:
+            yield pd.DataFrame({"record_id": done_ids, "value": done_vals})
 
     return df.mapInPandas(fold_partition, schema=REDUCED_SCHEMA)
 
@@ -535,10 +551,28 @@ def _cache_name(name: str) -> str:
 
 _EMIT_COLS = ["out_id", "input_idx", "nat_key", "src_rid", "emit_idx", "value"]
 
-#: Incremental rebuilds gather affected-out_id emissions either via a
-#: driver-side ``IN`` list (≤ this many keys: the literal list pushes into
-#: the sorted log's row-group pruning) or via a left-semi join (unbounded).
-#: Module-level so tests can lower it to exercise the semi-join path.
+#: stored emission-log columns (``nat_key`` is derived at read time — r4).
+#: Spark reads pass the DDL, driver reads the arrow schema; both prune the
+#: ``nat_key`` column pre-r4 segments still carry, and read ``version`` as
+#: int64 whatever width the segment's writer used.
+_EMIT_LOG_DDL = ("path string, version long, out_id string, input_idx int, "
+                 "src_rid string, emit_idx int, value string")
+_EMIT_LOG_SCHEMA = pa.schema([
+    ("path", pa.string()), ("version", pa.int64()), ("out_id", pa.string()),
+    ("input_idx", pa.int32()), ("src_rid", pa.string()),
+    ("emit_idx", pa.int32()), ("value", pa.string())])
+
+#: the parsed ``outputs`` JSON of a map row: ``[{i: emit_idx, k: out_id,
+#: v: tagged value JSON}, ...]``
+_EMITS_DDL = "array<struct<i:int,k:string,v:string>>"
+
+#: The driver-side bound of an incremental build.  A delta of at most this
+#: many rows takes the one-job small-delta plan, whose affected keys and
+#: gathered emissions must also stay within it; the Spark plan gathers
+#: affected-out_id emissions via a driver-side ``IN`` list (≤ this many
+#: keys: the literal list pushes into the sorted log's row-group pruning)
+#: or via a left-semi join (unbounded).  Module-level so tests can lower it
+#: to force the Spark plan and its semi-join path.
 AFFECTED_COLLECT_MAX = 10_000
 
 
@@ -564,7 +598,6 @@ def _emit_segments(store: DatasetStore, author: str, name: str) -> list[str]:
     format on ``["path", "version"]`` would either raise AnalysisException or
     — under schema merging — null out ``version`` for old rows and silently
     invalidate retained emissions."""
-    import glob
     import os
     import shutil
 
@@ -589,7 +622,7 @@ def _emit_segments(store: DatasetStore, author: str, name: str) -> list[str]:
         import pyarrow.parquet as pq
 
         try:
-            first = sorted(glob.glob(os.path.join(segs[0], "*.parquet")))[0]
+            first = _segment_files(segs[0])[0]
             migrated = "version" in pq.read_schema(first).names
         except (IndexError, OSError):
             migrated = False  # unreadable/empty segment: treat as stale
@@ -712,16 +745,13 @@ def _write_stale_floors(df, d: str, seq: int) -> None:
 
 def _write_stale_floors_local(paths: list[str], version: int, d: str,
                               seq: int) -> None:
-    """Driver-side floors write for the common small-delta build: the
-    caller already holds the exact delta-path list (the
-    ``suppress_scope_ids`` collect), so a single pyarrow file write
-    replaces a whole Spark job (coalesce + parquet task).  Identical
-    naming/semantics to :func:`_write_stale_floors`; readable by the same
-    ``spark.read.parquet``."""
+    """Driver-side floors write for the small-delta build, which holds the
+    exact delta-path list on the driver: one pyarrow file instead of a
+    Spark job.  Identical naming/semantics to :func:`_write_stale_floors`;
+    readable by the same :func:`_read_stale_floors`."""
     import os
     import uuid
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     os.makedirs(d, exist_ok=True)
@@ -736,20 +766,39 @@ def _write_stale_floors_local(paths: list[str], version: int, d: str,
     _install_stale_marker(d)
 
 
-def _read_stale_floors(spark, d: str):
-    """Union of all floors sidecars as (path, version), or None if none.
-    Floors made redundant by a later compaction are deleted there; reading
-    a leftover stale one is harmless (kept rows carry the current cache
-    version, which is >= any floor ever written for that path)."""
+def _stale_floor_files(d: str) -> list[str]:
+    """Every floors sidecar in the emit dir (files or part-file dirs)."""
     import os
 
     if not os.path.isdir(d):
-        return None
-    files = [os.path.join(d, fn) for fn in os.listdir(d)
-             if _STALE_RE.match(fn)]
+        return []
+    return [os.path.join(d, fn) for fn in sorted(os.listdir(d))
+            if _STALE_RE.match(fn)]
+
+
+def _read_stale_floors(spark, files: list[str]):
+    """Union of the given floors sidecars as (path, version), or None if
+    there are none.  Callers list the files BEFORE their own floors write
+    (:func:`_stale_floor_files`), so a build validates against PRIOR floors
+    only.  Floors made redundant by a later compaction are deleted there;
+    reading a leftover stale one is harmless (kept rows carry the current
+    cache version, which is >= any floor ever written for that path)."""
     if not files:
         return None
-    return spark.read.parquet(*files).select("path", "version")
+    return spark.read.schema("path string, version long").parquet(*files)
+
+
+def _floor_max_local(files: list[str]) -> dict[str, int]:
+    """Driver twin of :func:`_read_stale_floors` + max per path."""
+    import pyarrow.parquet as pq
+
+    floors: dict[str, int] = {}
+    for f in files:
+        for seg_file in _segment_files(f):
+            t = pq.read_table(seg_file, columns=["path", "version"])
+            for p, v in zip(t["path"].to_pylist(), t["version"].to_pylist()):
+                floors[p] = max(v, floors.get(p, v))
+    return floors
 
 
 def _drop_stale_floors(d: str) -> None:
@@ -830,10 +879,32 @@ def _write_emit_segment(df, d: str, seq: int, *, base: bool = False,
     return final
 
 
+def _write_emit_segment_local(tbl, d: str, seq: int) -> str:
+    """Driver-side twin of :func:`_write_emit_segment` for the small-delta
+    build: ``tbl`` (the stored columns plus ``nat_key``) is sorted by the
+    full fold key and written as ONE single-file delta segment
+    (stage-then-rename).  Readers treat file and directory segments alike."""
+    import os
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(d, exist_ok=True)
+    tbl = tbl.sort_by([(c, "ascending") for c in
+                       ("out_id", "input_idx", "nat_key", "src_rid",
+                        "emit_idx")])
+    tbl = tbl.select(_EMIT_LOG_SCHEMA.names).cast(_EMIT_LOG_SCHEMA)
+    stage = os.path.join(d, f"_stage_{uuid.uuid4().hex}.emit")
+    pq.write_table(tbl, stage)
+    final = os.path.join(d, f"seg_{seq:08d}.delta.parquet")
+    os.replace(stage, final)
+    return final
+
+
 def _read_emit_log(spark, segs: list[str]):
     """Read emission segments → the full fold frame, with ``nat_key``
     DERIVED from ``src_rid`` via the JVM natural-sort expression (stored
-    segments don't carry it — r4).  The explicit column list also makes the
+    segments don't carry it — r4).  The explicit read schema also makes the
     read schema-stable across segment generations: pre-r4 segments that
     still store a ``nat_key`` column are pruned to the same seven columns,
     and the derived value is byte-identical to what they stored (parity
@@ -842,11 +913,29 @@ def _read_emit_log(spark, segs: list[str]):
 
     from .values import natural_sort_col_expr
 
-    return (spark.read.parquet(*segs)
-            .select("path", "version", "out_id", "input_idx", "src_rid",
-                    "emit_idx", "value")
+    return (spark.read.schema(_EMIT_LOG_DDL).parquet(*segs)
             .withColumn("nat_key",
                         F.expr(natural_sort_col_expr("src_rid"))))
+
+
+def _scan_emit_log(files: list[str], columns: list[str], flt,
+                   max_rows: int | None = None):
+    """Driver-side filtered read of emission-log files → arrow table of
+    ``columns``, or None once more than ``max_rows`` rows match (the scan
+    streams, so an over-bound gather never materializes)."""
+    import pyarrow.dataset as ds
+
+    schema = pa.schema([_EMIT_LOG_SCHEMA.field(c) for c in columns])
+    batches, n = [], 0
+    if files:
+        for b in ds.dataset(files, format="parquet",
+                            schema=_EMIT_LOG_SCHEMA).to_batches(
+                                columns=columns, filter=flt):
+            n += b.num_rows
+            if max_rows is not None and n > max_rows:
+                return None
+            batches.append(b)
+    return pa.Table.from_batches(batches, schema=schema)
 
 
 def _cache_keys_df(spark, segs: list[str]):
@@ -860,7 +949,7 @@ def _cache_keys_df(spark, segs: list[str]):
 
     if not segs:
         return None
-    df = spark.read.parquet(*segs).select(
+    df = spark.read.schema(SEGMENT_DDL).parquet(*segs).select(
         F.col("record_id").alias("path"), "seq", "version", "deleted")
     if len(segs) > 1:
         w = Window.partitionBy("path").orderBy(F.desc("seq"))
@@ -876,9 +965,7 @@ def _emissions_from_cache_df(df):
     return df.select(
         "path", "input_idx", "nat_key",
         F.col("record_id").alias("src_rid"),
-        F.explode(
-            F.from_json("outputs", "array<struct<i:int,k:string,v:string>>")
-        ).alias("e"),
+        F.explode(F.from_json("outputs", _EMITS_DDL)).alias("e"),
     ).select("path", F.col("e.k").alias("out_id"), "input_idx", "nat_key",
              "src_rid", F.col("e.i").alias("emit_idx"),
              F.col("e.v").alias("value"))
@@ -1084,9 +1171,381 @@ def _load_inputs(spark, store: DatasetStore, input_paths: list[str]):
     return out
 
 
+def _small_delta_build(spark, store: DatasetStore, author: str, name: str, *,
+                       mapped, gone_paths, old_emit_segs: list[str], trace):
+    """The small-delta build: ONE Spark job, then driver-side pyarrow.
+
+    The job maps the delta (user code runs in Spark Python workers, never
+    in this process), derives the canonical cache envelope in codegen
+    (:func:`_cache_entry_value_col`) and the parsed emissions, and collects
+    them together with the pruned paths.  Everything after it runs on the
+    driver over the same file formats, in the same durable-write order as
+    :func:`_distributed_build` (so the crash protocol is unchanged): the
+    hash-suppressed cache write (:meth:`DatasetStore.write_entries`,
+    precanonical — ``sha256(value)``, byte-identical to the JVM ``sha2``),
+    one single-file emission segment, the stale floors, the affected-key
+    gather (a filtered read of the out_id-sorted log, the prior-floor
+    validity check, and the anti-join on delta paths), the fold
+    (:func:`fold_emissions`), and the hash-suppressed output write.
+
+    Driver memory: the collected delta is at most ``AFFECTED_COLLECT_MAX``
+    records (the selection rule in :func:`build_lens`); an affected-key set
+    or an emission gather over the same bound is folded on Spark instead
+    (:func:`_reduce_affected`, fed from the driver tables).
+
+    Returns ``(output collection meta, records mapped)``."""
+    import pyarrow.compute as pc
+    from pyspark.sql import functions as F
+
+    with job_desc(spark, f"lens {author}:{name} map"):
+        tbl = (mapped.select(
+                   "path", "input_idx", "nat_key",
+                   F.col("record_id").alias("src_rid"),
+                   _cache_entry_value_col().alias("value"),
+                   F.from_json("outputs", _EMITS_DDL).alias("emits"))
+               .unionByName(gone_paths, allowMissingColumns=True)
+               .toArrow())
+    is_map = pc.is_valid(tbl["value"])
+    m = tbl.filter(is_map).combine_chunks()
+    gone = tbl.filter(pc.invert(is_map))["path"].to_pylist()
+    paths = m["path"].to_pylist()
+    delta_paths = paths + gone
+    n_fresh = m.num_rows
+    trace(f"map+collect(n={n_fresh})")
+
+    emit_d = _emit_dir(store, author, name)
+    _install_inflight_marker(emit_d)
+    cache_meta = store.write_entries(
+        author, _cache_name(name),
+        [*zip(paths, m["value"].to_pylist()), *((p, None) for p in gone)],
+        source=_CACHE_SOURCE, precanonical=True, no_links=True)
+    seq_now, ver_now = cache_meta.last_seq, cache_meta.version
+    trace("cache_write")
+
+    # one row per emission, stamped with the post-write cache version
+    emits = m["emits"].combine_chunks()
+    src = m.select(["path", "input_idx", "nat_key", "src_rid"]).take(
+        pc.list_parent_indices(emits))
+    flat = pc.list_flatten(emits)
+    new = pa.table({
+        "path": src["path"],
+        "version": pa.array([ver_now] * len(flat), pa.int64()),
+        "out_id": flat.field("k"), "input_idx": src["input_idx"],
+        "nat_key": src["nat_key"], "src_rid": src["src_rid"],
+        "emit_idx": flat.field("i"), "value": flat.field("v")})
+    if n_fresh > 0:
+        _write_emit_segment_local(new, emit_d, seq_now)
+        trace("emit_write")
+    prior_floors = _stale_floor_files(emit_d)
+    _write_stale_floors_local(delta_paths, ver_now, emit_d, seq_now)
+    trace("stale_write")
+
+    # affected out_ids: this build's emissions + every logged generation of
+    # the delta paths (see _reduce_affected)
+    old_files = [f for seg in old_emit_segs for f in _segment_files(seg)]
+    old_ids = _scan_emit_log(old_files, ["out_id"],
+                             pc.field("path").isin(delta_paths),
+                             max_rows=AFFECTED_COLLECT_MAX)
+    affected = None if old_ids is None else sorted(
+        set(new["out_id"].to_pylist()) | set(old_ids["out_id"].to_pylist()))
+    old = None
+    if affected is not None and len(affected) <= AFFECTED_COLLECT_MAX:
+        if not affected:
+            return store.get_meta(author, name, source="lenses"), n_fresh
+        old = _scan_emit_log(old_files, _EMIT_LOG_SCHEMA.names,
+                             pc.field("out_id").isin(affected),
+                             max_rows=AFFECTED_COLLECT_MAX)
+    if old is None:
+        # over the driver bound: fold on Spark, from the same inputs
+        return _reduce_affected(
+            spark, store, author, name,
+            emit_delta=spark.createDataFrame(new),
+            old_log=_read_emit_log(spark, old_emit_segs),
+            delta_paths=spark.createDataFrame(
+                pa.table({"path": pa.array(delta_paths, pa.string())})),
+            floors=_read_stale_floors(spark, prior_floors),
+            heal_full=False, trace=trace), n_fresh
+
+    # validity: drop generations below their path's max PRIOR floor, and
+    # every old generation of a delta path (this build re-homes them all)
+    floors = _floor_max_local(prior_floors)
+    delta_set = set(delta_paths)
+    rows = [(o, i, natural_pad(r), r, e, v) for p, ver, o, i, r, e, v in
+            zip(*(old[c].to_pylist() for c in _EMIT_LOG_SCHEMA.names))
+            if p not in delta_set and ver >= floors.get(p, ver)]
+    rows += zip(*(new[c].to_pylist() for c in _EMIT_COLS))
+    rows.sort(key=lambda r: r[:5])  # the full fold key
+    reduced = dict(fold_emissions((r[0], r[5]) for r in rows))
+    trace(f"reduce(n={len(reduced)})")
+    # affected ids with no remaining emissions are deleted outputs
+    stats_meta = store.write_entries(
+        author, name, [(oid, reduced.get(oid)) for oid in affected],
+        source="lenses", precanonical=True)
+    trace("output_write")
+    return stats_meta, n_fresh
+
+
+def _reduce_affected(spark, store: DatasetStore, author: str, name: str, *,
+                     emit_delta, old_log, delta_paths, floors,
+                     heal_full: bool, trace):
+    """Re-reduce the affected out_ids of an incremental build on Spark and
+    write them (the output write); returns the output collection's meta.
+
+    Emissions come from the EMISSIONS STORE (exploded at write time,
+    range-sorted by out_id), not from re-parsing the cache.  Only
+    *affected* out_ids are re-reduced: keys touched by fresh map results,
+    by the pre-change emissions of re-mapped paths, or by pruned paths.
+    Gathering those keys' emissions is a PRUNED scan — the ``out_id IN
+    (...)`` predicate pushes into the sorted parquet and skips non-matching
+    row groups; validity (latest generation only) is a thin (path, version)
+    join against the PRIOR ``floors``, never a fat-value parse.  Untouched
+    keys keep their stored reduction — at 100 TB a point-write re-reduces a
+    handful of keys reading a handful of row groups (the reference
+    re-folds everything each build, lens.js:204-225; this is strictly
+    stronger incrementality)."""
+    from pyspark.sql import functions as F
+
+    # out_ids from NEW map results + from ALL logged generations of the
+    # changed/pruned paths (a path-only semi-join: stale generations'
+    # out_ids re-reduce too — idempotent, and it spares the build the
+    # O(base) cache-key scan the exact-version match needed)
+    new_ids = emit_delta.select("out_id")
+    if heal_full:
+        # post-crash: the dead build's output write / deletes never
+        # ran, so ANY key may be stale — re-reduce every out_id in the
+        # healed log plus every existing output record (records whose
+        # emissions vanished entirely must re-check as deletes).
+        # O(base) once, only after a detected crash.
+        out_ids_cur = store.read_df(
+            spark, author, name, source="lenses").select(
+            F.col("record_id").alias("out_id"))
+        affected = (new_ids.unionByName(old_log.select("out_id"))
+                    .unionByName(out_ids_cur).distinct().persist())
+    else:
+        old_ids = (old_log.join(F.broadcast(delta_paths), "path",
+                                "left_semi").select("out_id"))
+        affected = new_ids.unionByName(old_ids).distinct().persist()
+    # one probe job replaces the old count()+collect() pair: collect up
+    # to cap+1 rows — emptiness, the cap branch, AND the id list all
+    # come out of the same scan (the persist materializes fully later,
+    # under the deletes anti-join that needs it anyway)
+    with job_desc(spark, f"lens {author}:{name} affected probe"):
+        probe_rows = affected.limit(AFFECTED_COLLECT_MAX + 1).collect()
+    n_affected = len(probe_rows)
+    trace(f"affected(n={n_affected}"
+          f"{'+' if n_affected > AFFECTED_COLLECT_MAX else ''})")
+    if n_affected == 0:
+        stats_meta = store.get_meta(author, name, source="lenses")
+    else:
+        if n_affected <= AFFECTED_COLLECT_MAX:
+            # driver-side key list ⇒ parquet pushdown prunes row groups
+            # of the sorted log; the whole gather reads ~|affected| keys
+            ids = [r["out_id"] for r in probe_rows]
+            old_part = old_log.where(F.col("out_id").isin(ids))
+            new_part = emit_delta.where(F.col("out_id").isin(ids))
+        else:
+            ids = None
+            old_part = old_log.join(affected, "out_id", "left_semi")
+            new_part = emit_delta.join(affected, "out_id", "left_semi")
+        # validity: drop generations below their path's max floor
+        # (PRIOR floors, read before this build appended its own).
+        # Both join sides are O(churn)/O(affected) — AQE broadcasts the
+        # aggregated floors; nothing here scales with base size.
+        if floors is not None:
+            floor_max = floors.groupBy("path").agg(
+                F.max("version").alias("_floor"))
+            valid_old = (old_part.join(floor_max, "path", "left")
+                         .where(F.col("_floor").isNull()
+                                | (F.col("version") >= F.col("_floor")))
+                         .drop("_floor"))
+        else:
+            valid_old = old_part
+        # this build's emit_delta re-homes EVERY delta path at ver_now;
+        # a surviving old-log generation of a delta path — possible at
+        # version == ver_now when the cache write was fully
+        # hash-suppressed (a crashed build's re-run gathering its own
+        # orphaned segment) — would double the fold.  Exclude old rows
+        # of delta paths outright: on non-suppressed builds the floors
+        # already killed them, so this broadcast anti-join is a
+        # semantic no-op there and O(churn) either way.
+        valid_old = valid_old.join(F.broadcast(delta_paths),
+                                   "path", "left_anti")
+        gathered = valid_old.select(*_EMIT_COLS).unionByName(
+            new_part.select(*_EMIT_COLS))
+        reduced = reduce_outputs(gathered).persist()
+        # materialize NOW: the write plan references `reduced` twice
+        # (upserts + the deletes anti-join); an unmaterialized persist
+        # would re-run the whole reduce per reference inside one job
+        with job_desc(spark, f"lens {author}:{name} reduce"):
+            n_reduced = reduced.count()
+        trace(f"reduce(n={n_reduced})")
+        # affected ids with no remaining emissions are deleted outputs
+        deletes = affected.join(
+            reduced.select(F.col("record_id").alias("out_id")),
+            "out_id", "left_anti"
+        ).select(F.col("out_id").alias("record_id"),
+                 F.lit(None).cast("string").alias("value"))
+        # reduced is keyed by the fold's out_id groupBy; deletes are
+        # an anti-join against it — unique by construction
+        # every record_id written here is an affected out_id, so the
+        # collected id list (when present) scopes the suppression read
+        stats_meta = store.write_entries_df(
+            spark, author, name, reduced.unionByName(deletes),
+            source="lenses", precanonical=True, assume_unique_ids=True,
+            suppress_scope_ids=ids)
+        trace("output_write")
+        reduced.unpersist(blocking=True)
+    affected.unpersist(blocking=True)
+    return stats_meta
+
+
+def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
+                       mapped, gone_paths, cache_meta, first_build: bool,
+                       heal_full: bool, old_emit_segs: list[str], trace):
+    """The Spark build: every phase a distributed job (first builds, full
+    diffs, heals, the emission-log migration, and deltas too large for
+    :func:`_small_delta_build`).  Returns ``(output collection meta,
+    records mapped)``."""
+    from pyspark.sql import functions as F
+
+    # persist: the expensive map phase must run exactly once even though the
+    # cache write, the emissions write, and the reduce all derive from it
+    mapped = mapped.persist()
+    with job_desc(spark, f"lens {author}:{name} map"):
+        n_fresh = mapped.count()
+    trace(f"map+count(n={n_fresh})")
+
+    # the cache-entry envelope is assembled canonically in codegen from the
+    # thin map columns (the map output no longer carries the fat duplicate),
+    # so the cache write hashes JVM-side (precanonical) as before
+    cache_entries = mapped.select(F.col("path").alias("record_id"),
+                                  _cache_entry_value_col().alias("value"))
+
+    # prune cache entries whose input row disappeared (ref lens.js:192-199)
+    gone = gone_paths.select(F.col("path").alias("record_id"),
+                             F.lit(None).cast("string").alias("value"))
+    delta = cache_entries.unionByName(gone)
+    delta_paths = mapped.select("path").unionByName(gone_paths)
+    pre_segs = store._segments(cache_meta)  # noqa: SLF001 — pre-write log
+    migrate = not first_build and not old_emit_segs
+    # the migration backfill derives the log from the PRE-write cache state
+    cache_pre = (store.read_df(spark, author, _cache_name(name),
+                               source=_CACHE_SOURCE) if migrate else None)
+    # inflight marker: from the cache write to set_config this build holds
+    # partially-committed state; a crash in the window is detected and
+    # healed by the next build (crash-safety comment at _INFLIGHT_MARKER)
+    emit_d = _emit_dir(store, author, name)
+    _install_inflight_marker(emit_d)
+    store.write_entries_df(spark, author, _cache_name(name), delta,
+                           assume_unique_ids=True,
+                           source=_CACHE_SOURCE, precanonical=True,
+                           no_links=True)
+    trace("cache_write")
+    cache_meta_now = store.get_meta(author, _cache_name(name),
+                                    source=_CACHE_SOURCE)
+    seq_now = cache_meta_now.last_seq       # emission SEGMENT numbering
+    ver_now = cache_meta_now.version        # per-row validity stamp
+
+    # emissions come straight off the persisted map result — only the
+    # ``outputs`` column is parsed, never the full cache-entry JSON
+    emit_delta = (_emissions_from_cache_df(mapped)
+                  .withColumn("version", F.lit(ver_now).cast("long")))
+
+    if first_build:
+        # ~20k rows/file: single-row-group files (foldable without a
+        # shuffle) AND enough files that the direct fold uses every core
+        num_parts = max(1, min(256, n_fresh // 20_000 + 1))
+        with job_desc(spark, f"lens {author}:{name} emit write"):
+            seg_path = _write_emit_segment(
+                emit_delta, emit_d, seq_now, base=True, num_parts=num_parts)
+        _install_stale_marker(emit_d)  # base segment = complete coverage
+        trace("emit_write")
+        # Fold off the just-written segment (page-cache-hot): ~20k-row
+        # single-row-group files are never split, so every out_id group is
+        # contiguous and in fold order within its read partition.  (An
+        # r10/r11 variant persisted the post-shuffle sorted frame to skip
+        # this decode; the InMemoryRelation build cost ~3× the decode —
+        # see _write_emit_segment.)
+        reduced = reduce_outputs(
+            _read_emit_log(spark, [seg_path]).select(*_EMIT_COLS),
+            presorted=True)
+        stats_meta = store.write_entries_df(spark, author, name, reduced,
+                                            source="lenses",
+                                            overwrite=True,
+                                            precanonical=True,
+                                            assume_unique_ids=True)
+    else:
+        if n_fresh > 0:
+            num_parts = max(1, min(256, n_fresh // 20_000 + 1))
+            with job_desc(spark, f"lens {author}:{name} emit write"):
+                _write_emit_segment(emit_delta, emit_d, seq_now,
+                                    num_parts=num_parts)
+            trace("emit_write")
+        if not migrate:
+            old_log = _read_emit_log(spark, old_emit_segs)
+        else:
+            # migration backfill (store predates the emissions log): derive
+            # the valid pre-state log from the cache once, attach each path's
+            # current cache-row version, and persist it so every later build
+            # prunes
+            bk_keys = _cache_keys_df(spark, pre_segs)
+            state_emits = _emissions_from_cache_df(
+                _parsed_cache_rows(cache_pre)).join(bk_keys, "path")
+            seg_path = _write_emit_segment(
+                state_emits, emit_d, max(0, seq_now - 1), base=True,
+                num_parts=32)
+            old_log = _read_emit_log(spark, [seg_path])
+            trace("emit_backfill")
+
+        # read PRIOR floors first: this build's own floors only affect its
+        # delta paths, which the gather excludes outright (anti-join) — so
+        # right after a compaction (zero floor files) the validity join
+        # disappears from the plan entirely
+        floors = _read_stale_floors(spark, _stale_floor_files(emit_d))
+
+        # stale-floor sidecar (see the module comment above
+        # _stale_marker_present): every path this build touched gets floor
+        # ver_now — its new generation (if any) is AT ver_now and survives;
+        # every older generation dies.  Written UNCONDITIONALLY: when the
+        # cache write was fully suppressed (a crashed build's re-run —
+        # identical values, version unchanged) the floors are exactly what
+        # the crash may have lost, and a floor at the current version never
+        # kills a current-generation row.
+        _write_stale_floors(
+            delta_paths.withColumn("version", F.lit(ver_now).cast("long")),
+            emit_d, seq_now)
+        trace("stale_write")
+        stats_meta = _reduce_affected(
+            spark, store, author, name, emit_delta=emit_delta,
+            old_log=old_log, delta_paths=delta_paths, floors=floors,
+            heal_full=heal_full, trace=trace)
+    mapped.unpersist(blocking=True)
+    return stats_meta, n_fresh
+
+
 def build_lens(spark, store: DatasetStore, author: str, name: str, *,
                count_outputs: bool = False) -> dict:
     """Incremental lens build (the reference's query execution, SURVEY §3.2).
+
+    Two plans write the same bytes (pinned by tests/test_lens.py's parity
+    test); the choice is automatic:
+
+    - **Small delta — one Spark job** (:func:`_small_delta_build`).  Taken
+      when ALL of these hold: the build is incremental (not the first);
+      it is neither a crash heal nor the emission-log migration; every
+      input took the delta branch (segments since the last build); and
+      the delta's row count, read from the segments' parquet footers, is
+      at most ``AFFECTED_COLLECT_MAX``.  The job maps the delta and
+      collects the cache envelopes and emissions; the writes, the
+      affected-key gather and the fold run on the driver with pyarrow.
+      A point update then costs one job instead of dozens of
+      near-empty ones (the per-job constant dominated its latency).
+    - **Spark** otherwise (:func:`_distributed_build`): every phase is a
+      distributed job, cost ∝ the delta and the affected keys.
+
+    Both follow one durable-write order (cache segment → emit segment →
+    stale floors → output write → cursor), bracketed by the inflight
+    marker that lets the next build heal a crash.
 
     Returns build stats {mapped, outputs, version, records_changed};
     ``outputs`` is None unless ``count_outputs`` (the count is a whole extra
@@ -1110,13 +1569,13 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
     first_build = cache_meta.version == 0
     input_seqs: dict = cfg.get("input_seqs", {})
     input_versions: dict = cfg.get("input_versions", {})
+    emit_d = _emit_dir(store, author, name)
 
     # migration: an emissions log written before the stale-floor sidecar
     # existed lacks floors for its historical builds — fold it to a base
     # segment ONCE (compaction validates against the authoritative cache
     # keys and installs the marker); from then on validity is floor-based
-    if not first_build and not _stale_marker_present(
-            _emit_dir(store, author, name)):
+    if not first_build and not _stale_marker_present(emit_d):
         if _emit_segments(store, author, name):
             _compact_emissions(spark, store, author, name)
 
@@ -1127,7 +1586,7 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
     # every out_id.  first_build needs no heal: the full rebuild below
     # overwrites the output and re-emits everything anyway.
     heal_full = False
-    if _inflight_marker_present(_emit_dir(store, author, name)):
+    if _inflight_marker_present(emit_d):
         if not first_build:
             _heal_crashed_build(spark, store, author, name)
             heal_full = True
@@ -1142,19 +1601,15 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
     # recordID-selector input use a full diff against the cache; an input
     # whose version didn't advance contributes nothing at all (the
     # reference's inputVersions guard, lens.js:134-137).
-    cache_cur = store.read_df(spark, author, _cache_name(name), source=_CACHE_SOURCE)
-    cached_keys = cache_cur.select(
-        F.col("record_id").alias("path"),
-        F.get_json_object("value", "$.version").cast("long").alias("cached_version"),
-    )
-
+    cached_keys = None  # the cache's (path, version), read only for a full diff
     seen: set[str] = set()
     fresh_parts = []   # map-phase inputs (input_idx..value)
     gone_parts = []    # cache paths to prune
     next_seqs: dict = {}
     next_versions: dict = {}
     all_delta = True   # every input took the delta branch (gone bounded)
-    delta_bytes = 0    # driver-side delta size estimate (file metadata);
+    delta_bytes = 0    # driver-side delta size (file metadata only)
+    delta_rows = 0     # … and its row count (parquet footers)
     delta_sized = True  # False when any input's fresh size is unknowable
     for idx, p in enumerate(input_paths):
         dp = decode_path(p)
@@ -1188,20 +1643,29 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
                 and im_base <= since_seq):
             if im_version <= last_version:
                 continue  # version guard: untouched input, zero work
-            delta_rows = store.read_delta_df(spark, dp.author, dp.name,
-                                             since_seq, source=dp.source)
-            delta_bytes += store.delta_bytes(dp.author, dp.name, since_seq,
-                                             source=dp.source)
+            changed = store.read_delta_df(spark, dp.author, dp.name,
+                                          since_seq, source=dp.source)
+            n_bytes, n_rows = store.delta_size(dp.author, dp.name, since_seq,
+                                               source=dp.source)
+            delta_bytes += n_bytes
+            delta_rows += n_rows
             fresh_parts.append(with_provenance(
-                delta_rows.where(~F.col("deleted")
-                                 & (F.col("version") > F.lit(last_version)))))
-            gone_parts.append(delta_rows.where(F.col("deleted")).select(
+                changed.where(~F.col("deleted")
+                              & (F.col("version") > F.lit(last_version)))))
+            gone_parts.append(changed.where(F.col("deleted")).select(
                 F.concat(F.lit(prefix), F.col("record_id")).alias("path")))
         else:
             # full diff: current rows vs cached (first build / post-overwrite
             # / record selector / meta source)
             all_delta = False
             delta_sized = False  # fresh set size unknowable pre-diff
+            if cached_keys is None:
+                cached_keys = store.read_df(
+                    spark, author, _cache_name(name),
+                    source=_CACHE_SOURCE).select(
+                    F.col("record_id").alias("path"),
+                    F.get_json_object("value", "$.version").cast("long")
+                    .alias("cached_version"))
             cur = _load_inputs(spark, store, [p]).withColumn("input_idx", F.lit(idx))
             my_cached = cached_keys.where(F.col("path").startswith(prefix))
             joined = cur.join(my_cached, "path", "left")
@@ -1223,6 +1687,9 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
     fresh = fresh_parts[0]
     for d in fresh_parts[1:]:
         fresh = fresh.unionByName(d)
+    gone_paths = gone_parts[0]
+    for d in gone_parts[1:]:
+        gone_paths = gone_paths.unionByName(d)
 
     # ---- map phase over fresh records only --------------------------------
     # The per-record ``exec`` is the CPU-bound stage of the whole build, but
@@ -1233,7 +1700,8 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
     # estimate of the delta's on-disk bytes (~1 MB of parquet per Python
     # task): the shuffle moves a few dozen MB once and the exec stage uses
     # every core when there's work for every core — while a point update
-    # maps in ONE task instead of fanning 32 near-empty Python workers,
+    # maps in ONE task, with no shuffle at all (each exchange is a job of
+    # its own under AQE), instead of fanning 32 near-empty Python workers
     # whose per-stage overhead dominated the small-delta rebuild constant
     # (r10 probe: 38 stages / 45 user-cpu-s for a 1-record delta).  The
     # persisted map output inherits this width, so every downstream stage
@@ -1242,239 +1710,22 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
     par = spark.sparkContext.defaultParallelism
     if delta_sized:
         par = max(1, min(par, delta_bytes // (1 << 20) + 1))
-    fresh = fresh.repartition(par)
-    # persist: the expensive map phase must run exactly once even though the
-    # cache write, the emissions write, and the reduce all derive from it
-    mapped = map_records(fresh, code, timeout_ms).persist()
-    with job_desc(spark, f"lens {author}:{name} map"):
-        n_fresh = mapped.count()
-    _trace(f"map+count(n={n_fresh})")
+    if par > 1:
+        fresh = fresh.repartition(par)
+    mapped = map_records(fresh, code, timeout_ms)
 
-    # the cache-entry envelope is assembled canonically in codegen from the
-    # thin map columns (the map output no longer carries the fat duplicate),
-    # so the cache write hashes JVM-side (precanonical) as before
-    cache_entries = mapped.select(F.col("path").alias("record_id"),
-                                  _cache_entry_value_col().alias("value"))
-
-    # prune cache entries whose input row disappeared (ref lens.js:192-199)
-    gone_paths = gone_parts[0]
-    for d in gone_parts[1:]:
-        gone_paths = gone_paths.unionByName(d)
-    gone = gone_paths.select(F.col("path").alias("record_id"),
-                             F.lit(None).cast("string").alias("value"))
-    delta = cache_entries.unionByName(gone)
-    pre_segs = store._segments(cache_meta)  # noqa: SLF001 — pre-write log
-    # small all-delta batches: collect the touched paths once — they scope
-    # the cache write's suppression read (point write reads a filtered
-    # scan, not the whole cache state) and the output write reuses the
-    # affected-id list the same way below.  The limit probe keeps the
-    # driver safe: an over-cap delta simply falls back to the join plan.
-    delta_paths = mapped.select("path").unionByName(gone_paths)
-    with job_desc(spark, f"lens {author}:{name} delta probe"):
-        delta_id_rows = (delta_paths.limit(AFFECTED_COLLECT_MAX + 1).collect()
-                         if (not first_build and all_delta
-                             and n_fresh <= AFFECTED_COLLECT_MAX) else None)
-    delta_ids = ([r["path"] for r in delta_id_rows]
-                 if delta_id_rows is not None
-                 and len(delta_id_rows) <= AFFECTED_COLLECT_MAX else None)
-    # inflight marker: from the cache write to set_config this build holds
-    # partially-committed state; a crash in the window is detected and
-    # healed by the next build (crash-safety comment at _INFLIGHT_MARKER)
-    emit_d = _emit_dir(store, author, name)
-    _install_inflight_marker(emit_d)
-    store.write_entries_df(spark, author, _cache_name(name), delta,
-                           assume_unique_ids=True,
-                           source=_CACHE_SOURCE, precanonical=True,
-                           no_links=True, suppress_scope_ids=delta_ids)
-    _trace("cache_write")
-    cache_meta_now = store.get_meta(author, _cache_name(name),
-                                    source=_CACHE_SOURCE)
-    seq_now = cache_meta_now.last_seq       # emission SEGMENT numbering
-    ver_now = cache_meta_now.version        # per-row validity stamp
-
-    # ---- reduce ------------------------------------------------------------
-    # Emissions come from the EMISSIONS STORE (exploded at write time,
-    # range-sorted by out_id), not from re-parsing the cache.  On incremental
-    # rebuilds only *affected* out_ids are re-reduced: keys touched by fresh
-    # map results, by the pre-change emissions of re-mapped paths, or by
-    # pruned paths.  Gathering those keys' emissions is a PRUNED scan — the
-    # ``out_id IN (...)`` predicate pushes into the sorted parquet and skips
-    # non-matching row groups; validity (latest generation only) is a thin
-    # (path, version) join, never a fat-value parse.  Untouched keys keep their
-    # stored reduction — at 100 TB a point-write re-reduces a handful of
-    # keys reading a handful of row groups (the reference re-folds everything
-    # each build, lens.js:204-225; this is strictly stronger incrementality).
     old_emit_segs = _emit_segments(store, author, name)
-    # emissions come straight off the persisted map result — only the
-    # ``outputs`` column is parsed, never the full cache-entry JSON
-    emit_delta = (_emissions_from_cache_df(mapped)
-                  .withColumn("version", F.lit(ver_now)))
-
     pre_write_version = store.get_meta(author, name, source="lenses").version
-    if first_build:
-        # ~20k rows/file: single-row-group files (foldable without a
-        # shuffle) AND enough files that the direct fold uses every core
-        num_parts = max(1, min(256, n_fresh // 20_000 + 1))
-        with job_desc(spark, f"lens {author}:{name} emit write"):
-            seg_path = _write_emit_segment(
-                emit_delta, emit_d, seq_now, base=True, num_parts=num_parts)
-        _install_stale_marker(emit_d)  # base segment = complete coverage
-        _trace("emit_write")
-        # Fold off the just-written segment (page-cache-hot): ~20k-row
-        # single-row-group files are never split, so every out_id group is
-        # contiguous and in fold order within its read partition.  (An
-        # r10/r11 variant persisted the post-shuffle sorted frame to skip
-        # this decode; the InMemoryRelation build cost ~3× the decode —
-        # see _write_emit_segment.)
-        reduced = reduce_outputs(
-            _read_emit_log(spark, [seg_path]).select(*_EMIT_COLS),
-            presorted=True)
-        stats_meta = store.write_entries_df(spark, author, name, reduced,
-                                            source="lenses",
-                                            overwrite=True,
-                                            precanonical=True,
-                                            assume_unique_ids=True)
+    if (not first_build and not heal_full and old_emit_segs and all_delta
+            and delta_rows <= AFFECTED_COLLECT_MAX):
+        stats_meta, n_fresh = _small_delta_build(
+            spark, store, author, name, mapped=mapped, gone_paths=gone_paths,
+            old_emit_segs=old_emit_segs, trace=_trace)
     else:
-        if n_fresh > 0:
-            num_parts = max(1, min(256, n_fresh // 20_000 + 1))
-            with job_desc(spark, f"lens {author}:{name} emit write"):
-                _write_emit_segment(emit_delta, emit_d, seq_now,
-                                    num_parts=num_parts)
-            _trace("emit_write")
-        if old_emit_segs:
-            old_log = _read_emit_log(spark, old_emit_segs)
-        else:
-            # migration backfill (store predates the emissions log): derive
-            # the valid pre-state log from the cache once, attach each path's
-            # current cache-row version, and persist it so every later build
-            # prunes
-            bk_keys = _cache_keys_df(spark, pre_segs)
-            state_emits = _emissions_from_cache_df(
-                _parsed_cache_rows(cache_cur)).join(bk_keys, "path")
-            seg_path = _write_emit_segment(
-                state_emits, emit_d, max(0, seq_now - 1), base=True,
-                num_parts=32)
-            old_log = _read_emit_log(spark, [seg_path])
-            _trace("emit_backfill")
-
-        # read PRIOR floors first: this build's own floors only affect its
-        # delta paths, which the gather below excludes outright (anti-join)
-        # — so right after a compaction (zero floor files) the validity
-        # join disappears from the plan entirely
-        floors = _read_stale_floors(spark, emit_d)
-
-        # stale-floor sidecar (see the module comment above
-        # _stale_marker_present): every path this build touched gets floor
-        # ver_now — its new generation (if any) is AT ver_now and survives;
-        # every older generation dies.  Written UNCONDITIONALLY: when the
-        # cache write was fully suppressed (a crashed build's re-run —
-        # identical values, version unchanged) the floors are exactly what
-        # the crash may have lost, and a floor at the current version never
-        # kills a current-generation row.  When the delta-id list is
-        # already on the driver (the suppress_scope collect) the write is
-        # a single pyarrow file — zero Spark jobs on the point-update path.
-        if delta_ids is not None:
-            _write_stale_floors_local(delta_ids, ver_now, emit_d, seq_now)
-        else:
-            _write_stale_floors(
-                delta_paths.withColumn("version",
-                                       F.lit(ver_now).cast("long")),
-                emit_d, seq_now)
-        _trace("stale_write")
-
-        # out_ids from NEW map results + from ALL logged generations of the
-        # changed/pruned paths (a path-only semi-join: stale generations'
-        # out_ids re-reduce too — idempotent, and it spares the build the
-        # O(base) cache-key scan the exact-version match needed)
-        new_ids = emit_delta.select("out_id")
-        if heal_full:
-            # post-crash: the dead build's output write / deletes never
-            # ran, so ANY key may be stale — re-reduce every out_id in the
-            # healed log plus every existing output record (records whose
-            # emissions vanished entirely must re-check as deletes).
-            # O(base) once, only after a detected crash.
-            out_ids_cur = store.read_df(
-                spark, author, name, source="lenses").select(
-                F.col("record_id").alias("out_id"))
-            affected = (new_ids.unionByName(old_log.select("out_id"))
-                        .unionByName(out_ids_cur).distinct().persist())
-        else:
-            old_ids = (old_log.join(F.broadcast(delta_paths), "path",
-                                    "left_semi").select("out_id"))
-            affected = new_ids.unionByName(old_ids).distinct().persist()
-        # one probe job replaces the old count()+collect() pair: collect up
-        # to cap+1 rows — emptiness, the cap branch, AND the id list all
-        # come out of the same scan (the persist materializes fully later,
-        # under the deletes anti-join that needs it anyway)
-        with job_desc(spark, f"lens {author}:{name} affected probe"):
-            probe_rows = affected.limit(AFFECTED_COLLECT_MAX + 1).collect()
-        n_affected = len(probe_rows)
-        _trace(f"affected(n={n_affected}"
-               f"{'+' if n_affected > AFFECTED_COLLECT_MAX else ''})")
-        if n_affected == 0:
-            stats_meta = store.get_meta(author, name, source="lenses")
-        else:
-            if n_affected <= AFFECTED_COLLECT_MAX:
-                # driver-side key list ⇒ parquet pushdown prunes row groups
-                # of the sorted log; the whole gather reads ~|affected| keys
-                ids = [r["out_id"] for r in probe_rows]
-                old_part = old_log.where(F.col("out_id").isin(ids))
-                new_part = emit_delta.where(F.col("out_id").isin(ids))
-            else:
-                ids = None
-                old_part = old_log.join(affected, "out_id", "left_semi")
-                new_part = emit_delta.join(affected, "out_id", "left_semi")
-            # validity: drop generations below their path's max floor
-            # (PRIOR floors, read above before this build appended its
-            # own).  Both join sides are O(churn)/O(affected) — AQE
-            # broadcasts the aggregated floors; nothing here scales with
-            # base size.
-            if floors is not None:
-                floor_max = floors.groupBy("path").agg(
-                    F.max("version").alias("_floor"))
-                valid_old = (old_part.join(floor_max, "path", "left")
-                             .where(F.col("_floor").isNull()
-                                    | (F.col("version") >= F.col("_floor")))
-                             .drop("_floor"))
-            else:
-                valid_old = old_part
-            # this build's emit_delta re-homes EVERY delta path at ver_now;
-            # a surviving old-log generation of a delta path — possible at
-            # version == ver_now when the cache write was fully
-            # hash-suppressed (a crashed build's re-run gathering its own
-            # orphaned segment) — would double the fold.  Exclude old rows
-            # of delta paths outright: on non-suppressed builds the floors
-            # already killed them, so this broadcast anti-join is a
-            # semantic no-op there and O(churn) either way.
-            valid_old = valid_old.join(F.broadcast(delta_paths),
-                                       "path", "left_anti")
-            gathered = valid_old.select(*_EMIT_COLS).unionByName(
-                new_part.select(*_EMIT_COLS))
-            reduced = reduce_outputs(gathered).persist()
-            # materialize NOW: the write plan references `reduced` twice
-            # (upserts + the deletes anti-join); an unmaterialized persist
-            # would re-run the whole reduce per reference inside one job
-            with job_desc(spark, f"lens {author}:{name} reduce"):
-                n_reduced = reduced.count()
-            _trace(f"reduce(n={n_reduced})")
-            # affected ids with no remaining emissions are deleted outputs
-            deletes = affected.join(
-                reduced.select(F.col("record_id").alias("out_id")),
-                "out_id", "left_anti"
-            ).select(F.col("out_id").alias("record_id"),
-                     F.lit(None).cast("string").alias("value"))
-            # reduced is keyed by the fold's out_id groupBy; deletes are
-            # an anti-join against it — unique by construction
-            # every record_id written here is an affected out_id, so the
-            # collected id list (when present) scopes the suppression read
-            stats_meta = store.write_entries_df(
-                spark, author, name, reduced.unionByName(deletes),
-                source="lenses", precanonical=True, assume_unique_ids=True,
-                suppress_scope_ids=ids)
-            _trace("output_write")
-            reduced.unpersist(blocking=True)
-        affected.unpersist(blocking=True)
-    mapped.unpersist(blocking=True)
+        stats_meta, n_fresh = _distributed_build(
+            spark, store, author, name, mapped=mapped, gone_paths=gone_paths,
+            cache_meta=cache_meta, first_build=first_build,
+            heal_full=heal_full, old_emit_segs=old_emit_segs, trace=_trace)
     records_changed = stats_meta.version != pre_write_version
 
     # bookkeeping: input versions + segment positions consumed by this build

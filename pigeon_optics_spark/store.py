@@ -56,7 +56,7 @@ import pyarrow.parquet as pq
 from .paths import encode_path
 from .values import (
     Undefined,
-    hash_json_str,
+    hash_urls_in_json,
     list_hash_urls,
     natural_sort_key,
     object_hash,
@@ -75,6 +75,13 @@ SEGMENT_SCHEMA = pa.schema(
         ("seq", pa.int64()),
     ]
 )
+
+#: Spark read schema of a segment (SEGMENT_SCHEMA as DDL).  Every engine
+#: segment read passes it: an unschema'd ``spark.read.parquet`` submits a
+#: schema-inference job per call, and a pinned ``long`` also reads the
+#: int64 ``version``/``seq`` of every writer at one width.
+SEGMENT_DDL = ("record_id string, value string, hash string, "
+               "links array<string>, version long, deleted boolean, seq long")
 
 MAX_RECORD_ID_LEN = 10_000  # ref dataset.js:23
 MAX_NAME_LEN = 250  # ref dataset.js:34
@@ -126,6 +133,15 @@ def empty_local_df(spark, schema: str):
 #: committed segment filenames: seg_<seq>[.<suffix>].parquet (file or
 #: distributed part-dir) — anything else in a collection dir is ignored
 _SEG_NAME_RE = re.compile(r"^seg_(\d+)(?:\.[A-Za-z0-9]+)*\.parquet$")
+
+
+def _segment_files(path: str) -> list[str]:
+    """Parquet files of one segment: the file itself (driver-side writes)
+    or the part files of a distributed write's directory."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(os.path.join(path, f) for f in os.listdir(path)
+                  if f.endswith(".parquet"))
 
 
 def _validate_name(name: str) -> None:
@@ -337,7 +353,7 @@ class DatasetStore:
 
         Loads VALUES into driver memory — only for whole-collection rewrites
         (compact, overwrite).  Everything else uses :meth:`_state_meta`
-        (metadata only) + :meth:`_read_values` (filtered value fetch)."""
+        (metadata only) or :meth:`_read_latest` (filtered by id)."""
         state: dict[str, dict] = {}
         for path in self._segments(meta):
             table = pq.read_table(path)
@@ -356,8 +372,8 @@ class DatasetStore:
     def _state_meta(self, meta: CollectionMeta) -> dict[str, dict]:
         """record_id -> {hash, links, version} latest-wins resolution with
         the fat ``value`` column never leaving parquet: driver memory is
-        O(ids + hashes), not O(data).  Backs listing, existence tests,
-        iteration order, and write-path hash suppression."""
+        O(ids + hashes), not O(data).  Backs listing, existence tests and
+        iteration order."""
         state: dict[str, dict] = {}
         for path in self._segments(meta):
             table = pq.read_table(
@@ -373,28 +389,37 @@ class DatasetStore:
                     }
         return state
 
-    def _read_values(self, meta: CollectionMeta,
-                     ids: Iterable[str]) -> dict[str, str]:
-        """Latest-wins tagged-JSON values for the given ids only — one
-        filtered, column-pruned read per segment (the ``record_id IN (...)``
-        predicate prunes row groups via parquet statistics), so a point read
-        touches a handful of pages regardless of collection size."""
+    def _read_latest(self, meta: CollectionMeta, ids: Iterable[str],
+                     columns: list[str]) -> dict[str, dict]:
+        """Latest-wins live rows (``columns`` only) for the given ids — one
+        filtered, column-pruned read per segment in seq order (the
+        ``record_id IN (...)`` predicate prunes row groups via parquet
+        statistics), so the cost follows the ids asked for, not the
+        collection size."""
         import pyarrow.compute as pc
 
         wanted = list(dict.fromkeys(ids))
         if not wanted:
             return {}
-        vals: dict[str, str] = {}
+        rows: dict[str, dict] = {}
         flt = pc.field("record_id").isin(wanted)
+        cols = ["record_id", *columns, "deleted"]
         for path in self._segments(meta):
-            table = pq.read_table(
-                path, columns=["record_id", "value", "deleted"], filters=flt)
-            for row in table.to_pylist():
+            for row in pq.read_table(path, columns=cols,
+                                     filters=flt).to_pylist():
                 if row["deleted"]:
-                    vals.pop(row["record_id"], None)
+                    rows.pop(row["record_id"], None)
                 else:
-                    vals[row["record_id"]] = row["value"]
-        return vals
+                    rows[row["record_id"]] = row
+        return rows
+
+    def _read_values(self, meta: CollectionMeta,
+                     ids: Iterable[str]) -> dict[str, str]:
+        """Latest-wins tagged-JSON values for the given ids only, so a
+        point read touches a handful of pages regardless of collection
+        size."""
+        return {rid: row["value"] for rid, row in
+                self._read_latest(meta, ids, ["value"]).items()}
 
     # -- reads --------------------------------------------------------------
 
@@ -505,7 +530,7 @@ class DatasetStore:
             return empty_local_df(
                 spark, "record_id string, value string, hash string, "
                        "links array<string>, version long")
-        df = spark.read.parquet(*segs)
+        df = spark.read.schema(SEGMENT_DDL).parquet(*segs)
         if len(segs) > 1:
             # latest-wins only matters when a record_id can appear in more
             # than one segment; a single-segment log (fresh ingest, post-
@@ -550,34 +575,31 @@ class DatasetStore:
             return empty_local_df(
                 spark, "record_id string, value string, hash string, "
                        "links array<string>, version long, deleted boolean")
-        df = spark.read.parquet(*segs)
+        df = spark.read.schema(SEGMENT_DDL).parquet(*segs)
         if len(segs) > 1:
             w = Window.partitionBy("record_id").orderBy(F.desc("seq"))
             df = df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1)
         return df.select(*cols)
 
-    def delta_bytes(self, author: str, name: str, since_seq: int, *,
-                    source: str = "datasets") -> int:
-        """On-disk bytes of the segments :meth:`read_delta_df` would scan
-        for ``since_seq`` — a free, driver-side (file-metadata-only) size
-        estimate.  Callers use it to size CPU-bound stage parallelism to
-        the DELTA instead of full fan-out: a 1-record rebuild otherwise
-        pays a full complement of near-empty Python tasks per stage."""
+    def delta_size(self, author: str, name: str, since_seq: int, *,
+                   source: str = "datasets") -> tuple[int, int]:
+        """``(bytes, rows)`` of the segments :meth:`read_delta_df` would
+        scan for ``since_seq`` — free, driver-side (file sizes and parquet
+        footers only).  Callers use the bytes to size CPU-bound stage
+        parallelism to the DELTA instead of full fan-out, and the rows
+        (an upper bound: latest-wins may fold some) to pick a driver-side
+        plan for small deltas."""
         meta = self._meta(source, author, name)
         d = self._dir(meta)
-        total = 0
+        n_bytes = n_rows = 0
         for fn in os.listdir(d) if os.path.isdir(d) else []:
             seq = self._seg_seq(fn)
             if seq is None or seq <= since_seq:
                 continue
-            p = os.path.join(d, fn)
-            if os.path.isdir(p):
-                for root, _dirs, files in os.walk(p):
-                    total += sum(os.path.getsize(os.path.join(root, f))
-                                 for f in files)
-            else:
-                total += os.path.getsize(p)
-        return total
+            for f in _segment_files(os.path.join(d, fn)):
+                n_bytes += os.path.getsize(f)
+                n_rows += pq.ParquetFile(f).metadata.num_rows
+        return n_bytes, n_rows
 
     # -- writes -------------------------------------------------------------
 
@@ -597,10 +619,12 @@ class DatasetStore:
     def write_entries(self, author: str, name: str,
                       entries: Iterable[tuple[str, Any]], *,
                       source: str = "datasets", overwrite: bool = False,
+                      precanonical: bool = False, no_links: bool = False,
                       _allow_missing_delete: bool = True) -> CollectionMeta:
         with self._txn(source, author, name):
             return self._write_entries_impl(
                 author, name, entries, source=source, overwrite=overwrite,
+                precanonical=precanonical, no_links=no_links,
                 _allow_missing_delete=_allow_missing_delete)
 
     def write_entries_df(self, spark, author: str, name: str, df, *,
@@ -625,25 +649,42 @@ class DatasetStore:
     def _write_entries_impl(self, author: str, name: str,
                             entries: Iterable[tuple[str, Any]], *,
                             source: str = "datasets", overwrite: bool = False,
+                            precanonical: bool = False, no_links: bool = False,
                             _allow_missing_delete: bool = True) -> CollectionMeta:
         """Batch upsert/merge (ref base-data-model.js:166-225).
 
         ``(rid, None)`` ⇒ delete that key.  ``overwrite=True`` replaces the
         whole collection (unmentioned keys dropped) via a base segment.
         Identical-value writes are hash-suppressed: they neither rewrite the
-        row nor bump versions.
+        row nor bump versions.  Plain upserts resolve the current hash and
+        version of the batch's ids only (filtered segment reads), so a point
+        write costs the same at any collection size.
+
+        ``precanonical=True`` (engine-internal writers: the lens cache and
+        output) takes each value as a tagged-JSON string already in
+        ``canonical_json`` form, stored as given and hashed as
+        ``sha256(value)`` — the same bytes and hashes
+        :meth:`write_entries_df` writes with the same flag.  Such derived
+        values skip the attachment check, as the distributed writer does;
+        ``no_links`` additionally leaves ``links`` empty.
         """
+        import hashlib
+
         meta = self._meta(source, author, name)
-        # overwrite re-emits suppressed rows' values into the base segment;
-        # plain upserts only compare hashes — keep values out of memory there
-        current = self._state(meta) if overwrite else self._state_meta(meta)
+        entries = list(entries)
+        for rid, _v in entries:
+            _validate_record_id(rid)
+        # overwrite re-emits suppressed rows' values into the base segment
+        # and prunes unmentioned keys, so it needs the whole state; plain
+        # upserts only compare the batch's own hashes
+        current = (self._state(meta) if overwrite else self._read_latest(
+            meta, (rid for rid, _v in entries), ["hash", "version"]))
         next_version = meta.version + 1
 
         rows: list[dict] = []
         seen: set[str] = set()
         changed = False
         for rid, value in entries:
-            _validate_record_id(rid)
             if rid in seen:
                 raise StoreError(f"duplicate record id in batch: {rid!r}")
             seen.add(rid)
@@ -655,18 +696,27 @@ class DatasetStore:
                 elif not _allow_missing_delete and not overwrite:
                     raise KeyError(rid)
                 continue
-            tagged = value_to_tagged(value)
-            value_json = json.dumps(tagged, ensure_ascii=False)
-            if len(value_json.encode("utf-8")) > MAX_RECORD_SIZE:
+            value_json = value if precanonical else json.dumps(
+                value_to_tagged(value), ensure_ascii=False)
+            value_bytes = value_json.encode("utf-8")
+            if len(value_bytes) > MAX_RECORD_SIZE:
                 raise StoreError(
                     f"record {rid!r} exceeds maxRecordSize "
                     f"({MAX_RECORD_SIZE} bytes)")
-            h = object_hash(value)
-            links = list_hash_urls(value)
-            if self.attachment_checker is not None:
-                missing = [u for u in links if not self.attachment_checker(u)]
-                if missing:
-                    raise StoreError(f"attachments missing for links: {missing}")
+            h = (hashlib.sha256(value_bytes).hexdigest() if precanonical
+                 else object_hash(value))
+            if no_links:
+                links = []
+            elif precanonical:
+                links = hash_urls_in_json(value_json)
+            else:
+                links = list_hash_urls(value)
+                if self.attachment_checker is not None:
+                    missing = [u for u in links
+                               if not self.attachment_checker(u)]
+                    if missing:
+                        raise StoreError(
+                            f"attachments missing for links: {missing}")
             prev = current.get(rid)
             if prev is not None and prev["hash"] == h:
                 # change-suppression: identical content, keep old version
@@ -913,7 +963,7 @@ class DatasetStore:
             # re-evaluation, abort-before-commit so nothing is visible
             with _job_desc(spark,
                            f"store dup-check {source}/{author}:{name}"):
-                chk = spark.read.parquet(stage).agg(
+                chk = spark.read.schema(SEGMENT_DDL).parquet(stage).agg(
                     F.count("*").alias("n"),
                     F.count_distinct("record_id").alias("nd")).first()
             if chk["nd"] < chk["n"]:

@@ -10,7 +10,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StringType
 
-from .values import hash_json_str, list_hash_urls, loads_value, tagged_to_value
+from .values import hash_json_str, hash_urls_in_json
 
 
 @F.pandas_udf(StringType())
@@ -19,20 +19,10 @@ def hash_value_udf(v: pd.Series) -> pd.Series:
     return v.map(hash_json_str)
 
 
-def _links_fast(s: str) -> list:
-    # A hash URL can only appear as a complete string token, so a value whose
-    # raw JSON lacks the literal substring cannot reference any attachment —
-    # skip the full parse+walk (the common case pays ~ns/byte instead of a
-    # JSON decode).
-    if "hash://sha256/" not in s:
-        return []
-    return list_hash_urls(tagged_to_value(loads_value(s)))
-
-
 @F.pandas_udf(ArrayType(StringType()))
 def links_udf(v: pd.Series) -> pd.Series:
     """hash:// attachment URIs referenced by a tagged-JSON value column."""
-    return v.map(_links_fast)
+    return v.map(hash_urls_in_json)
 
 
 def register_ngrams_udtf(spark):

@@ -475,6 +475,16 @@ def list_hash_urls(value: Any) -> list[str]:
     return sorted(found)
 
 
+def hash_urls_in_json(value_json: str) -> list[str]:
+    """:func:`list_hash_urls` for a value in tagged-JSON string form.  A
+    hash URL can only appear as a complete string token, so a value whose
+    raw JSON lacks the literal prefix cannot reference any attachment — the
+    common case skips the parse and walk entirely."""
+    if "hash://sha256/" not in value_json:
+        return []
+    return list_hash_urls(tagged_to_value(loads_value(value_json)))
+
+
 def resolve_cid_links(value: Any, cid_map: dict[str, str]) -> Any:
     """Deep-clone ``value`` replacing ``cid:<name>`` strings with the uploaded
     attachment's hash URL (ref record-structure.js:44-72)."""

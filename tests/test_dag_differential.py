@@ -46,8 +46,19 @@ def _outputs(store: DatasetStore, name: str) -> dict:
             store.iterate("a", name, source="lenses", fast_read=True)}
 
 
-@pytest.mark.parametrize("seed", [13])
-def test_dag_cascade_equals_fresh_bottom_up(spark, tmp_path, seed):
+@pytest.mark.parametrize("seed,plan", [
+    pytest.param(13, "small", id="13"),
+    pytest.param(13, "spark", id="13-spark"),
+])
+def test_dag_cascade_equals_fresh_bottom_up(spark, tmp_path, monkeypatch,
+                                            seed, plan):
+    """``small``: every cascade build after the first takes the one-job
+    small-delta plan; ``spark``: a zero ``AFFECTED_COLLECT_MAX`` forces the
+    Spark plan throughout."""
+    if plan == "spark":
+        import pigeon_optics_spark.lens as lens_mod
+
+        monkeypatch.setattr(lens_mod, "AFFECTED_COLLECT_MAX", 0)
     rng = random.Random(seed)
     ids = [f"r{i}" for i in range(5)]
 

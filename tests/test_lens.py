@@ -793,3 +793,113 @@ class TestStaleFloors:
         got = self._out(store)
         assert got == {"y": PSet(["a"]), "k2": PSet(["b"])}
         assert got == self._fresh_rebuild(spark, store)
+
+
+class TestSmallDeltaPlan:
+    """The one-job small-delta build (``build_lens`` docstring): a small
+    incremental delta is mapped in ONE Spark job and everything after it
+    runs on the driver.  Pinned here: its job count, byte parity with the
+    Spark plan, and the Spark fold it falls back to past the driver
+    bound."""
+
+    CODE = """
+for tag in data.get('tags', []):
+    output(tag, Set([path.recordID]))
+    output('count:' + tag, 1)
+    output('last:' + tag, path.recordID)  # strings: fold order decides
+output('total', len(data.get('tags', [])))
+log('tags', len(data.get('tags', [])))
+if 'boom' in data.get('tags', []):
+    raise ValueError('boom')
+"""
+
+    def _store(self, tmp_path, tag):
+        st = DatasetStore(str(tmp_path / tag))
+        st.create("a", "d")
+        st.write_entries("a", "d", [
+            (f"r{i}", {"tags": [f"t{i % 3}", "common"]}) for i in range(12)])
+        create_lens(st, "a", "l", inputs=["/datasets/a:d"], code=self.CODE)
+        return st
+
+    def test_point_update_is_one_spark_job(self, spark, tmp_path):
+        import uuid
+
+        st = self._store(tmp_path, "one-job")
+        build_lens(spark, st, "a", "l")
+        st.write("a", "d", "r3", {"tags": ["t9"]})
+        sc = spark.sparkContext
+        group = f"lens-one-job-{uuid.uuid4().hex}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            stats = build_lens(spark, st, "a", "l")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert stats["mapped"] == 1 and stats["records_changed"]
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) == 1, jobs
+        desc = sc._jsc.sc().statusStore().job(jobs[0]).description()
+        assert desc.isDefined() and desc.get() == "lens a:l map"
+        got = {r["id"]: r["value"] for r in
+               st.iterate("a", "l", source="lenses", fast_read=True)}
+        assert got["t9"] == PSet(["r3"]) and got["count:t0"] == 3
+
+    def test_byte_parity_with_spark_plan(self, spark, tmp_path, monkeypatch):
+        """The same update sequence through both plans leaves identical
+        latest-wins rows — value bytes, hash, links, version — in the
+        compute cache AND the output collection."""
+        import pigeon_optics_spark.lens as lens_mod
+        from pigeon_optics_spark.lens import _cache_name
+
+        def run(plan):
+            calls = []
+            orig = lens_mod._small_delta_build
+
+            def spy(*a, **k):
+                calls.append(1)
+                return orig(*a, **k)
+
+            with monkeypatch.context() as mp:
+                mp.setattr(lens_mod, "_small_delta_build", spy)
+                if plan == "spark":
+                    mp.setattr(lens_mod, "AFFECTED_COLLECT_MAX", 0)
+                st = self._store(tmp_path, plan)
+                build_lens(spark, st, "a", "l")
+                for step in range(4):
+                    st.write("a", "d", f"r{step}",
+                             {"tags": [f"t{step}", "new", "common"]})
+                    st.write("a", "d", f"x{step}", {"tags": ["boom", "x"]})
+                    if step % 2:
+                        st.delete_record("a", "d", f"r{step + 5}")
+                    build_lens(spark, st, "a", "l")
+                # a fully hash-suppressed re-map: identical input value
+                st.write("a", "d", "r0", {"tags": ["t0", "common"]})
+                st.write("a", "d", "r0", {"tags": ["t0", "new", "common"]})
+                build_lens(spark, st, "a", "l")
+            assert bool(calls) == (plan == "small")
+            return {
+                coll: (st.get_meta("a", n, source=src).version,
+                       st._state(st.get_meta("a", n, source=src)))
+                for coll, n, src in (("cache", _cache_name("l"), "meta"),
+                                     ("output", "l", "lenses"))}
+
+        small, spark_plan = run("small"), run("spark")
+        assert small["output"][1]  # non-trivial outputs
+        assert small == spark_plan
+
+    def test_affected_over_bound_folds_on_spark(self, spark, tmp_path,
+                                                monkeypatch):
+        """A one-record delta is under a bound of 1, but the keys it touches
+        are not: the small plan hands the fold to Spark and stays exact."""
+        import pigeon_optics_spark.lens as lens_mod
+
+        st = self._store(tmp_path, "over-bound")
+        build_lens(spark, st, "a", "l")
+        monkeypatch.setattr(lens_mod, "AFFECTED_COLLECT_MAX", 1)
+        st.write("a", "d", "r1", {"tags": ["t0", "zz"]})
+        stats = build_lens(spark, st, "a", "l")
+        assert stats["mapped"] == 1
+        got = {r["id"]: r["value"] for r in
+               st.iterate("a", "l", source="lenses", fast_read=True)}
+        assert got["zz"] == PSet(["r1"]) and got["count:t1"] == 3
+        assert got["t0"] == PSet(["r0", "r1", "r3", "r6", "r9"])
+        assert got["total"] == 24

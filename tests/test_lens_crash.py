@@ -56,10 +56,12 @@ def _fresh_reference(spark, tmp_path, tag: str, live: dict) -> dict:
 def _crash_patch(monkeypatch, window: str):
     """Install the injected crash for one protocol seam."""
     if window == "pre_emit":
-        # dies after the cache write, before the emit-segment write
+        # dies after the cache write, before the emit-segment write (both
+        # writers: small deltas write their segment driver-side)
         def boom(*a, **k):
             raise Boom("pre_emit")
         monkeypatch.setattr(lens_mod, "_write_emit_segment", boom)
+        monkeypatch.setattr(lens_mod, "_write_emit_segment_local", boom)
     elif window == "pre_floors":
         # dies after the emit write, before the stale-floor write —
         # the exact window VERDICT r10 flagged as argued-not-tested
@@ -69,14 +71,22 @@ def _crash_patch(monkeypatch, window: str):
         monkeypatch.setattr(lens_mod, "_write_stale_floors", boom)
         monkeypatch.setattr(lens_mod, "_write_stale_floors_local", boom)
     elif window == "pre_output":
-        # dies after floors, before the output write
-        orig = DatasetStore.write_entries_df
+        # dies after floors, before the output write (both writers: the
+        # small-delta build writes its output driver-side)
+        orig_df = DatasetStore.write_entries_df
+        orig = DatasetStore.write_entries
 
-        def wrapper(self, spark, author, name, df, **kw):
+        def wrapper_df(self, spark, author, name, df, **kw):
             if kw.get("source") == "lenses":
                 raise Boom("pre_output")
-            return orig(self, spark, author, name, df, **kw)
-        monkeypatch.setattr(DatasetStore, "write_entries_df", wrapper)
+            return orig_df(self, spark, author, name, df, **kw)
+
+        def wrapper(self, author, name, entries, **kw):
+            if kw.get("source") == "lenses":
+                raise Boom("pre_output")
+            return orig(self, author, name, entries, **kw)
+        monkeypatch.setattr(DatasetStore, "write_entries_df", wrapper_df)
+        monkeypatch.setattr(DatasetStore, "write_entries", wrapper)
     elif window == "pre_cursor":
         # dies after the output write, before set_config
         def boom(*a, **k):
@@ -90,11 +100,21 @@ WINDOWS = ["pre_emit", "pre_floors", "pre_output", "pre_cursor"]
 
 
 @pytest.mark.parametrize("window", WINDOWS)
-@pytest.mark.parametrize("churn_between", [False, True],
-                         ids=["suppressed-rerun", "churned-rerun"])
+@pytest.mark.parametrize("churn_between,plan", [
+    pytest.param(False, "small", id="suppressed-rerun"),
+    pytest.param(True, "small", id="churned-rerun"),
+    pytest.param(False, "spark", id="suppressed-rerun-spark"),
+    pytest.param(True, "spark", id="churned-rerun-spark"),
+])
 def test_incremental_crash_heals(spark, tmp_path, monkeypatch, window,
-                                 churn_between):
-    tag = f"{window}-{churn_between}"
+                                 churn_between, plan):
+    """The doomed build's two-record delta takes the one-job small-delta
+    plan (driver-side writers) unless ``plan`` forces the Spark plan; the
+    healing re-run always takes the Spark plan (a heal is excluded from
+    the small one)."""
+    if plan == "spark":
+        monkeypatch.setattr(lens_mod, "AFFECTED_COLLECT_MAX", 0)
+    tag = f"{window}-{churn_between}-{plan}"
     inc = DatasetStore(str(tmp_path / f"inc-{tag}"))
     inc.create("a", "d")
     create_lens(inc, "a", "l", inputs=["/datasets/a:d"], code=CODE)

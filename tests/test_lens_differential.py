@@ -51,13 +51,32 @@ def _canon(m: dict) -> dict:
     return {k: canonical_json(v) for k, v in m.items()}
 
 
-@pytest.mark.parametrize("seed,rounds", [(11, 4), (23, 4), (47, 10)])
-def test_incremental_equals_fresh_rebuild(spark, tmp_path, seed, rounds):
+def _force_plan(monkeypatch, plan: str) -> None:
+    """``small``: the default selection (the batches here are far under
+    ``AFFECTED_COLLECT_MAX``, so every plain incremental build takes the
+    one-job small-delta plan); ``spark``: a zero bound forces the Spark
+    plan (and its semi-join gather) for every build."""
+    if plan == "spark":
+        import pigeon_optics_spark.lens as lens_mod
+
+        monkeypatch.setattr(lens_mod, "AFFECTED_COLLECT_MAX", 0)
+
+
+@pytest.mark.parametrize("seed,rounds,plan", [
+    pytest.param(11, 4, "small", id="11-4"),
+    pytest.param(23, 4, "small", id="23-4"),
+    pytest.param(47, 10, "small", id="47-10"),
+    pytest.param(11, 4, "spark", id="11-4-spark"),
+    pytest.param(47, 10, "spark", id="47-10-spark"),
+])
+def test_incremental_equals_fresh_rebuild(spark, tmp_path, monkeypatch,
+                                          seed, rounds, plan):
     """rounds=10 (seed 47) drives the sequence across the emit-log
     compaction bound (>8 segments) AND a mid-history stale-floor-era
     migration (marker + floors deleted after round 5, as if the store
     predated the r10 sidecar), so floor bookkeeping, compaction, and the
     migration path are all exercised under random op interleaving."""
+    _force_plan(monkeypatch, plan)
     rng = random.Random(seed)
     ids = [f"r{i}" for i in range(6)]
 
@@ -123,6 +142,17 @@ def test_incremental_equals_fresh_rebuild(spark, tmp_path, seed, rounds):
 def test_incremental_equals_fresh_after_empty_final_state(spark, tmp_path):
     """Degenerate tail: every record deleted ⇒ the lens output collection
     must drain to empty, exactly like a fresh build over nothing."""
+    _drain_to_empty(spark, tmp_path)
+
+
+def test_incremental_equals_fresh_after_empty_final_state_spark(
+        spark, tmp_path, monkeypatch):
+    """The same degenerate tail through the Spark plan."""
+    _force_plan(monkeypatch, "spark")
+    _drain_to_empty(spark, tmp_path)
+
+
+def _drain_to_empty(spark, tmp_path):
     inc = DatasetStore(str(tmp_path / "inc-empty"))
     inc.create("a", "d")
     create_lens(inc, "a", "l", inputs=["/datasets/a:d"], code=CODE)

@@ -27,6 +27,12 @@ over exactly each timed window (user and system SEPARATE — kernel time
 tracks hypervisor steal, not workload), so a single inflated query in a
 contaminated run is self-adjudicating: real regressions move user cpu,
 host weather moves wall+sys+steal at flat user.
+
+``queries_codegen`` adds, per query, the generated-code compiles (misses
+in Spark's compiled-class cache) and their Janino time, read from the
+JVM's codegen counters just outside each timed window: the codegen
+layer's share of a query, and whether the headline working set still
+fits the session's class cache.
 """
 
 from __future__ import annotations
@@ -40,7 +46,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pigeon_optics_spark.queries import all_queries  # noqa: E402
-from pigeon_optics_spark.session import get_spark  # noqa: E402
+from pigeon_optics_spark.session import (  # noqa: E402
+    codegen_counters,
+    get_spark,
+)
 
 # Headline set: one per operator family that exists at the time of the run.
 HEADLINE = [
@@ -186,18 +195,23 @@ def main() -> None:
     qs = all_queries()
     times: dict[str, float] = {}
     qcpu: dict[str, dict[str, float]] = {}
+    qcodegen: dict[str, dict[str, float]] = {}
     total = 0.0
     for name in HEADLINE:
         if name not in qs:
             continue
         fn, _oracle = qs[name]
+        g0 = codegen_counters(spark)
         c0 = _read_cpu_split()
         t0 = time.time()
         df = fn(spark, sf_dir)
         n = df.count()
         dt = time.time() - t0
         c1 = _read_cpu_split()
+        g1 = codegen_counters(spark)
         times[name] = round(dt, 3)
+        qcodegen[name] = {"compiles": g1[0] - g0[0],
+                          "compile_ms": round(g1[1] - g0[1], 1)}
         if c0 and c1:
             # machine-wide user/sys/steal over exactly the timed window:
             # a contaminated wall reading (steal burst mid-query) is now
@@ -207,7 +221,8 @@ def main() -> None:
             qcpu[name] = {k: round(c1[k] - c0[k], 1) for k in c0}
         total += dt
         print(f"# {name}: {n} rows in {dt:.2f}s "
-              f"cpu={qcpu.get(name)}", file=sys.stderr)
+              f"cpu={qcpu.get(name)} codegen={qcodegen[name]}",
+              file=sys.stderr)
         # drop leftover persisted data so queries don't pay each other's
         # executor-memory pressure (each query re-persists what it needs)
         spark.catalog.clearCache()
@@ -228,6 +243,7 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "queries_cpu": qcpu,
+        "queries_codegen": qcodegen,
         "sf": sf,
         "cpus": spark.sparkContext.defaultParallelism,
         "master": spark.sparkContext.master,

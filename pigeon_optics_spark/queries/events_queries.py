@@ -34,7 +34,13 @@ def _start_await_scoped(spark, writer):
     timeout_sessions 116->22 cpu-s at sf0.01) at identical results: the
     partition count is internal placement, the checkpoint is fresh per
     run, and the conf is scoped so batch plans outside the stream are
-    untouched."""
+    untouched.
+
+    Precondition: ``writer`` must use a FRESH (empty) checkpoint
+    location.  A checkpoint records its shuffle partition count and a
+    restarted query keeps that count, so reusing one would either bind
+    its state stores to these 4 partitions for good or ignore the scope;
+    every caller today creates a new temp dir per run."""
     from ._streaming_util import scoped_shuffle_partitions
 
     with scoped_shuffle_partitions(spark, 4):

@@ -442,3 +442,56 @@ def test_canonical_url_adversarial(spark):
            df.select(canonical_url_col("url").alias("c")).collect()]
     for (u, want), g in zip(cases, got):
         assert g == want, (u, g, want)
+
+
+def test_warm_repeats_reuse_generated_code(spark):
+    """A warm dedup pass must find its generated classes in Spark's
+    compiled-class cache.  One minhash → prefix → components pass needs
+    ~170-190 distinct classes; at Spark's default capacity of 100 the LRU
+    evicts each before its next use and every repeat recompiles nearly
+    all of them.
+
+    AQE is off for the three runs: it numbers whole-stage classes in the
+    order concurrent query stages finish, so identical code can come back
+    under a new class name and miss the cache for reasons unrelated to
+    its capacity."""
+    import random
+
+    from pigeon_optics_spark.pipeline.dedup import (
+        connected_components,
+        prefix_jaccard_pairs,
+    )
+    from pigeon_optics_spark.session import codegen_counters
+
+    assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 1000
+
+    # six clusters of five lightly perturbed 30-word docs
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(40)]
+    docs = []
+    for c in range(6):
+        base = [rng.choice(vocab) for _ in range(30)]
+        for j in range(5):
+            toks = list(base)
+            for _ in range(rng.randrange(0, 4)):
+                toks[rng.randrange(len(toks))] = rng.choice(vocab)
+            docs.append((c * 10 + j, " ".join(toks)))
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+
+    compiles, results = [], []
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for _ in range(3):
+            before = codegen_counters(spark)[0]
+            mh = minhash_lsh_pairs(df).select("id_a", "id_b")
+            pj = prefix_jaccard_pairs(df).select("doc_a", "doc_b")
+            comps = connected_components(mh.union(pj)).collect()
+            results.append(sorted(map(tuple, comps)))
+            compiles.append(codegen_counters(spark)[0] - before)
+            spark.catalog.clearCache()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert results[0] == results[1] == results[2]
+    assert len({c for _, c in results[0]}) >= 6
+    assert compiles[2] <= 0.1 * compiles[0], compiles

@@ -216,3 +216,25 @@ def test_loads_value_matches_stdlib_on_hostile_inputs():
     # and the hash fast path over loads_value stays byte-stable
     assert hash_json_str('{"a":99999999999999999999}') == hash_json_str(
         '{"a":99999999999999999999}')
+
+
+def test_orjson_absent_falls_back_with_one_warning(monkeypatch, caplog):
+    """Without orjson the module imports, warns exactly once (at import,
+    not per parse) and ``loads_value`` still parses through stdlib."""
+    import importlib.util
+    import logging
+    import sys
+
+    # a None entry makes ``import orjson`` raise ImportError; the fresh
+    # copy is never registered, so the live module and its classes stay
+    monkeypatch.setitem(sys.modules, "orjson", None)
+    spec = importlib.util.find_spec("pigeon_optics_spark.values")
+    mod = importlib.util.module_from_spec(spec)
+    with caplog.at_level(logging.WARNING, logger=spec.name):
+        spec.loader.exec_module(mod)
+        assert mod._orjson is None
+        for s in ('{"a":1}', '[1.5, "x"]', '{"a":99999999999999999999}'):
+            assert mod.loads_value(s) == json.loads(s)
+    warned = [r for r in caplog.records
+              if r.name == spec.name and "orjson" in r.getMessage()]
+    assert len(warned) == 1

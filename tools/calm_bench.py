@@ -12,9 +12,11 @@ Usage:
         [--max-accepted 2] [--steal-cpus 0.4] [--window 20]
         [--min-gap 120] [--stop-file /tmp/calm_bench.stop]
 
-Exits after --max-accepted runs whose JSON line reports calm=true, or
-when the stop file appears (create it to kill the loop cleanly before
-running anything else heavy, e.g. the full oracle gate or pytest).
+Each logged record carries the loop's verdict: ``_sys_ok`` (whole-run
+sys cpu within --max-sys) and ``_accepted`` (``calm`` and ``_sys_ok``).
+Exits after --max-accepted accepted runs, or when the stop file appears
+(create it to kill the loop cleanly before running anything else heavy,
+e.g. the full oracle gate or pytest).
 """
 from __future__ import annotations
 
@@ -107,19 +109,23 @@ def main() -> None:
                 rec = json.loads(line) if line else {}
             except json.JSONDecodeError:
                 pass
-            rec["_pre_steal_cpus"] = round(steal, 3)
-            rec["_ts"] = time.strftime("%Y-%m-%dT%H:%M:%S")
-            with open(args.log, "a") as fh:
-                fh.write(json.dumps(rec) + "\n")
             # r12: this host class contaminates via page-fault storms at
             # ZERO steal (see bench.py _read_pgfault) — the bench's calm
             # flag keeps its historical probe+steal definition, so the
             # watch loop additionally rejects readings whose whole-run
             # kernel time is storm-inflated (calm runs here read 15-60
-            # sys cpu-s; storms read 300-700).
+            # sys cpu-s; storms read 300-700).  The verdict is logged
+            # with the record, so a sys-rejected reading whose bench
+            # `calm` flag is true cannot be read back as calm.
             sys_cpu = (rec.get("cpu_sec") or {}).get("sys")
             sys_ok = sys_cpu is None or sys_cpu <= args.max_sys
             ok = rec.get("calm", False) and sys_ok
+            rec["_pre_steal_cpus"] = round(steal, 3)
+            rec["_ts"] = time.strftime("%Y-%m-%dT%H:%M:%S")
+            rec["_sys_ok"] = sys_ok
+            rec["_accepted"] = ok
+            with open(args.log, "a") as fh:
+                fh.write(json.dumps(rec) + "\n")
             print(f"  -> total={rec.get('value')} probe="
                   f"{rec.get('probe_sec')} steal="
                   f"{(rec.get('cpu_sec') or {}).get('steal')} "

@@ -551,10 +551,9 @@ def _cache_name(name: str) -> str:
 
 _EMIT_COLS = ["out_id", "input_idx", "nat_key", "src_rid", "emit_idx", "value"]
 
-#: stored emission-log columns (``nat_key`` is derived at read time — r4).
-#: Spark reads pass the DDL, driver reads the arrow schema; both prune the
-#: ``nat_key`` column pre-r4 segments still carry, and read ``version`` as
-#: int64 whatever width the segment's writer used.
+#: stored emission-log columns (``nat_key`` is derived at read time).
+#: Spark reads pass the DDL, driver reads the arrow schema: an explicit
+#: schema spares every read the per-file footer inference.
 _EMIT_LOG_DDL = ("path string, version long, out_id string, input_idx int, "
                  "src_rid string, emit_idx int, value string")
 _EMIT_LOG_SCHEMA = pa.schema([
@@ -588,18 +587,10 @@ def _emit_dir(store: DatasetStore, author: str, name: str) -> str:
 
 def _emit_segments(store: DatasetStore, author: str, name: str) -> list[str]:
     """Emission segment paths in seq order; a base segment supersedes all
-    earlier segments (same convention as the store's segment log).
-
-    Pre-(path,version) segments (the r2-era format stamped a ``seq`` column
-    instead of ``version``) are detected by schema and the whole log is
-    dropped: the log is a derived cache, and returning [] routes the next
-    incremental build through the migration-backfill path, which regenerates
-    it from the compute cache with correct per-row versions.  Joining the old
-    format on ``["path", "version"]`` would either raise AnalysisException or
-    — under schema merging — null out ``version`` for old rows and silently
-    invalidate retained emissions."""
+    earlier segments (same convention as the store's segment log).  An
+    empty list on a built lens means the log is lost; the next build
+    regenerates it (:func:`build_lens`'s heal)."""
     import os
-    import shutil
 
     d = _emit_dir(store, author, name)
     if not os.path.isdir(d):
@@ -617,19 +608,7 @@ def _emit_segments(store: DatasetStore, author: str, name: str) -> list[str]:
     floor = max(base_seqs) if base_seqs else None
     keep = [(s, p) for s, b, p in sorted(items)
             if (b and s == floor) or (not b and (floor is None or s > floor))]
-    segs = [p for _s, p in keep]
-    if segs:
-        import pyarrow.parquet as pq
-
-        try:
-            first = _segment_files(segs[0])[0]
-            migrated = "version" in pq.read_schema(first).names
-        except (IndexError, OSError):
-            migrated = False  # unreadable/empty segment: treat as stale
-        if not migrated:
-            shutil.rmtree(d, ignore_errors=True)
-            return []
-    return segs
+    return [p for _s, p in keep]
 
 
 # --------------------------------------------------------------------------
@@ -670,13 +649,11 @@ def _emit_segments(store: DatasetStore, author: str, name: str) -> list[str]:
 # the cache itself as its cursor, so a re-run after the cache write saw
 # nothing fresh and never healed the output; and a fully-hash-suppressed
 # re-run gathered the orphaned emit segment AND its own re-emissions at
-# the same version, double-folding every affected key.
-# Emit dirs written before this sidecar existed lack floors
-# for their historical builds — detected by the ``_stale_v1`` marker file
-# and healed by a one-time compaction at build start.
+# the same version, double-folding every affected key.  A built lens
+# whose log has no segment at all (lost, or deleted by hand) heals the
+# same way: the cache holds every generation the log should.
 # --------------------------------------------------------------------------
 
-_STALE_MARKER = "_stale_v1"
 _STALE_RE = re.compile(r"^stale_(\d+)_[0-9a-f]+\.parquet$")
 
 #: build-in-flight marker (crash detection) — present while a build is
@@ -706,20 +683,6 @@ def _remove_inflight_marker(d: str) -> None:
         os.remove(os.path.join(d, _INFLIGHT_MARKER))
 
 
-def _stale_marker_present(d: str) -> bool:
-    import os
-
-    return os.path.exists(os.path.join(d, _STALE_MARKER))
-
-
-def _install_stale_marker(d: str) -> None:
-    import os
-
-    os.makedirs(d, exist_ok=True)
-    with open(os.path.join(d, _STALE_MARKER), "w"):
-        pass
-
-
 def _write_stale_floors(df, d: str, seq: int) -> None:
     """Append one floors sidecar: (path, version) rows, version = the floor
     below which that path's emissions are dead.  Stage-then-rename like the
@@ -740,7 +703,6 @@ def _write_stale_floors(df, d: str, seq: int) -> None:
     final = os.path.join(d, f"stale_{seq:08d}_{uuid.uuid4().hex[:8]}.parquet")
     shutil.rmtree(final, ignore_errors=True)
     os.replace(stage, final)
-    _install_stale_marker(d)
 
 
 def _write_stale_floors_local(paths: list[str], version: int, d: str,
@@ -763,7 +725,6 @@ def _write_stale_floors_local(paths: list[str], version: int, d: str,
     pq.write_table(tbl, stage)
     final = os.path.join(d, f"stale_{seq:08d}_{uuid.uuid4().hex[:8]}.parquet")
     os.replace(stage, final)
-    _install_stale_marker(d)
 
 
 def _stale_floor_files(d: str) -> list[str]:
@@ -904,11 +865,8 @@ def _write_emit_segment_local(tbl, d: str, seq: int) -> str:
 def _read_emit_log(spark, segs: list[str]):
     """Read emission segments → the full fold frame, with ``nat_key``
     DERIVED from ``src_rid`` via the JVM natural-sort expression (stored
-    segments don't carry it — r4).  The explicit read schema also makes the
-    read schema-stable across segment generations: pre-r4 segments that
-    still store a ``nat_key`` column are pruned to the same seven columns,
-    and the derived value is byte-identical to what they stored (parity
-    test in tests/test_values.py)."""
+    segments don't carry it).  The derived value is byte-identical to the
+    map side's ``natural_pad`` (parity test in tests/test_values.py)."""
     from pyspark.sql import functions as F
 
     from .values import natural_sort_col_expr
@@ -995,9 +953,9 @@ def _compact_emissions(spark, store: DatasetStore, author: str, name: str, *,
     collection version while the suppressed row keeps its old version —
     that newer generation is byte-identical to the correct emissions (hash
     suppression guarantees it) and must survive.  Duplicate copies of one
-    generation (same path+version twice — possible in logs written before
-    the r11 crash-heal) are collapsed here: copies are byte-identical, so
-    ``dropDuplicates`` on the emission key is exact.
+    generation (same path+version twice) are collapsed here as a safety
+    net, so no copy can double a fold after compaction: copies are
+    byte-identical, so ``dropDuplicates`` on the emission key is exact.
 
     ``extra`` (heal path): additional already-valid rows to fold in — the
     generations :func:`_heal_crashed_build` regenerated from the cache.
@@ -1011,10 +969,6 @@ def _compact_emissions(spark, store: DatasetStore, author: str, name: str, *,
     d = _emit_dir(store, author, name)
     segs = _emit_segments(store, author, name)
     if len(segs) <= 1 and extra is None and not force:
-        # a single-segment log may still need the migration marker (a base
-        # segment IS complete floor coverage: everything in it is valid)
-        if segs and not _stale_marker_present(d):
-            _install_stale_marker(d)
         return
     cache_meta = store.get_meta(author, _cache_name(name), source=_CACHE_SOURCE)
     keys = _cache_keys_df(spark, store._segments(cache_meta))  # noqa: SLF001
@@ -1059,14 +1013,13 @@ def _compact_emissions(spark, store: DatasetStore, author: str, name: str, *,
                     else os.remove(p)
     # floors are redundant against a freshly-compacted (all-valid) log
     _drop_stale_floors(d)
-    _install_stale_marker(d)
 
 
 def _heal_crashed_build(spark, store: DatasetStore, author: str,
                         name: str) -> None:
     """Restore the emissions-log invariant after a crashed build (the
     ``_build_inflight`` marker outlived its build — see the crash-safety
-    comment above :data:`_INFLIGHT_MARKER`).
+    comment above :data:`_INFLIGHT_MARKER`) or a lost log (no segment).
 
     The cache is authoritative: any live cache row whose newest logged
     generation is below the row's version lost its emissions to the crash
@@ -1400,12 +1353,11 @@ def _reduce_affected(spark, store: DatasetStore, author: str, name: str, *,
 
 
 def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
-                       mapped, gone_paths, cache_meta, first_build: bool,
+                       mapped, gone_paths, first_build: bool,
                        heal_full: bool, old_emit_segs: list[str], trace):
     """The Spark build: every phase a distributed job (first builds, full
-    diffs, heals, the emission-log migration, and deltas too large for
-    :func:`_small_delta_build`).  Returns ``(output collection meta,
-    records mapped)``."""
+    diffs, heals, and deltas too large for :func:`_small_delta_build`).
+    Returns ``(output collection meta, records mapped)``."""
     from pyspark.sql import functions as F
 
     # persist: the expensive map phase must run exactly once even though the
@@ -1426,11 +1378,6 @@ def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
                              F.lit(None).cast("string").alias("value"))
     delta = cache_entries.unionByName(gone)
     delta_paths = mapped.select("path").unionByName(gone_paths)
-    pre_segs = store._segments(cache_meta)  # noqa: SLF001 — pre-write log
-    migrate = not first_build and not old_emit_segs
-    # the migration backfill derives the log from the PRE-write cache state
-    cache_pre = (store.read_df(spark, author, _cache_name(name),
-                               source=_CACHE_SOURCE) if migrate else None)
     # inflight marker: from the cache write to set_config this build holds
     # partially-committed state; a crash in the window is detected and
     # healed by the next build (crash-safety comment at _INFLIGHT_MARKER)
@@ -1458,7 +1405,6 @@ def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
         with job_desc(spark, f"lens {author}:{name} emit write"):
             seg_path = _write_emit_segment(
                 emit_delta, emit_d, seq_now, base=True, num_parts=num_parts)
-        _install_stale_marker(emit_d)  # base segment = complete coverage
         trace("emit_write")
         # Fold off the just-written segment (page-cache-hot): ~20k-row
         # single-row-group files are never split, so every out_id group is
@@ -1481,21 +1427,7 @@ def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
                 _write_emit_segment(emit_delta, emit_d, seq_now,
                                     num_parts=num_parts)
             trace("emit_write")
-        if not migrate:
-            old_log = _read_emit_log(spark, old_emit_segs)
-        else:
-            # migration backfill (store predates the emissions log): derive
-            # the valid pre-state log from the cache once, attach each path's
-            # current cache-row version, and persist it so every later build
-            # prunes
-            bk_keys = _cache_keys_df(spark, pre_segs)
-            state_emits = _emissions_from_cache_df(
-                _parsed_cache_rows(cache_pre)).join(bk_keys, "path")
-            seg_path = _write_emit_segment(
-                state_emits, emit_d, max(0, seq_now - 1), base=True,
-                num_parts=32)
-            old_log = _read_emit_log(spark, [seg_path])
-            trace("emit_backfill")
+        old_log = _read_emit_log(spark, old_emit_segs)
 
         # read PRIOR floors first: this build's own floors only affect its
         # delta paths, which the gather excludes outright (anti-join) — so
@@ -1504,7 +1436,7 @@ def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
         floors = _read_stale_floors(spark, _stale_floor_files(emit_d))
 
         # stale-floor sidecar (see the module comment above
-        # _stale_marker_present): every path this build touched gets floor
+        # _STALE_RE): every path this build touched gets floor
         # ver_now — its new generation (if any) is AT ver_now and survives;
         # every older generation dies.  Written UNCONDITIONALLY: when the
         # cache write was fully suppressed (a crashed build's re-run —
@@ -1532,10 +1464,10 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
 
     - **Small delta — one Spark job** (:func:`_small_delta_build`).  Taken
       when ALL of these hold: the build is incremental (not the first);
-      it is neither a crash heal nor the emission-log migration; every
-      input took the delta branch (segments since the last build); and
-      the delta's row count, read from the segments' parquet footers, is
-      at most ``AFFECTED_COLLECT_MAX``.  The job maps the delta and
+      it is not a heal; every input took the delta branch (segments
+      since the last build); and the delta's row count, read from the
+      segments' parquet footers, is at most ``AFFECTED_COLLECT_MAX``.
+      The job maps the delta and
       collects the cache envelopes and emissions; the writes, the
       affected-key gather and the fold run on the driver with pyarrow.
       A point update then costs one job instead of dozens of
@@ -1571,26 +1503,20 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
     input_versions: dict = cfg.get("input_versions", {})
     emit_d = _emit_dir(store, author, name)
 
-    # migration: an emissions log written before the stale-floor sidecar
-    # existed lacks floors for its historical builds — fold it to a base
-    # segment ONCE (compaction validates against the authoritative cache
-    # keys and installs the marker); from then on validity is floor-based
-    if not first_build and not _stale_marker_present(emit_d):
-        if _emit_segments(store, author, name):
-            _compact_emissions(spark, store, author, name)
-
-    # crash recovery: an inflight marker at build start means the previous
-    # build died between its cache write and set_config (see the
-    # crash-safety comment above _INFLIGHT_MARKER).  Heal the emissions
-    # log from the authoritative cache, then force THIS build to re-reduce
+    # recovery: an inflight marker at build start means the previous build
+    # died between its cache write and set_config (see the crash-safety
+    # comment above _INFLIGHT_MARKER); a built lens with no emission
+    # segment has lost its log, and folding against nothing would drop
+    # every untouched contribution.  Either way, heal the emissions log
+    # from the authoritative cache, then force THIS build to re-reduce
     # every out_id.  first_build needs no heal: the full rebuild below
     # overwrites the output and re-emits everything anyway.
-    heal_full = False
-    if _inflight_marker_present(emit_d):
-        if not first_build:
-            _heal_crashed_build(spark, store, author, name)
-            heal_full = True
-            _trace("heal")
+    heal_full = not first_build and (
+        _inflight_marker_present(emit_d)
+        or not _emit_segments(store, author, name))
+    if heal_full:
+        _heal_crashed_build(spark, store, author, name)
+        _trace("heal")
 
     # ---- freshness: per-input DELTA SCAN over the segment log --------------
     # The log layout gives CDF semantics: segments with seq > the seq seen at
@@ -1716,7 +1642,7 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
 
     old_emit_segs = _emit_segments(store, author, name)
     pre_write_version = store.get_meta(author, name, source="lenses").version
-    if (not first_build and not heal_full and old_emit_segs and all_delta
+    if (not first_build and not heal_full and all_delta
             and delta_rows <= AFFECTED_COLLECT_MAX):
         stats_meta, n_fresh = _small_delta_build(
             spark, store, author, name, mapped=mapped, gone_paths=gone_paths,
@@ -1724,8 +1650,8 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
     else:
         stats_meta, n_fresh = _distributed_build(
             spark, store, author, name, mapped=mapped, gone_paths=gone_paths,
-            cache_meta=cache_meta, first_build=first_build,
-            heal_full=heal_full, old_emit_segs=old_emit_segs, trace=_trace)
+            first_build=first_build, heal_full=heal_full,
+            old_emit_segs=old_emit_segs, trace=_trace)
     records_changed = stats_meta.version != pre_write_version
 
     # bookkeeping: input versions + segment positions consumed by this build

@@ -13,15 +13,13 @@ returns the lens output as a typed DataFrame the DuckDB oracle can reproduce:
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lens import build_lens, create_lens
 from ..store import DatasetStore
 from . import register
-from ._util import load
+from ._util import load, tracked_mkdtemp
 
 _STORES: dict[str, DatasetStore] = {}
 _BUILT: set[tuple[str, str]] = set()
@@ -39,7 +37,7 @@ COUNT_CODE = "output(data['o_orderstatus'], 1)"
 def _store_for(spark: SparkSession, sf_dir: str) -> DatasetStore:
     if sf_dir in _STORES:
         return _STORES[sf_dir]
-    root = tempfile.mkdtemp(prefix="po_lens_store_")
+    root = tracked_mkdtemp("po_lens_store_")
     store = DatasetStore(root)
     _STORES[sf_dir] = store
     return store

@@ -333,53 +333,6 @@ class TestGoldenBuild:
         assert "shared" not in ids
         assert "other" in ids and "elsewhere" in ids
 
-    def test_pre_version_emission_segments_trigger_backfill(self, spark, store):
-        # ADVICE r3 (medium): segments written by the r2-era code carry a
-        # per-row 'seq' column, not 'version'.  Reading them and joining on
-        # ['path', 'version'] would crash or (under schema inference across
-        # mixed segments) silently null-invalidate retained emissions.  The
-        # schema guard in _emit_segments must drop the stale log so the
-        # migration-backfill path regenerates it from the compute cache.
-        import glob
-        import os
-
-        import pyarrow.parquet as pq
-
-        from pigeon_optics_spark.lens import _emit_dir, _emit_segments
-
-        store.create("system", "d")
-        store.write_entries("system", "d", [
-            ("keep", {"tags": ["shared"]}),
-            ("move", {"tags": ["shared"]}),
-        ])
-        create_lens(store, "system", "idx",
-                    inputs=["/datasets/system:d"], code=INVERT_CODE)
-        build_lens(spark, store, "system", "idx")
-
-        # rewrite every emission part file in the old format: version -> seq
-        d = _emit_dir(store, "system", "idx")
-        for part in glob.glob(os.path.join(d, "*.parquet", "*.parquet")):
-            t = pq.read_table(part)
-            t = t.rename_columns(
-                ["seq" if c == "version" else c for c in t.column_names])
-            pq.write_table(t, part)
-        assert _emit_segments(store, "system", "idx") == []
-        assert not os.path.isdir(d)  # stale log dropped wholesale
-
-        # incremental build over the migrated store: backfill must regenerate
-        # the log and retain the untouched 'keep' contribution
-        store.write("system", "d", "move", {"tags": ["elsewhere"]})
-        build_lens(spark, store, "system", "idx")
-        got = {r["id"]: r["value"] for r in
-               store.iterate("system", "idx", source="lenses", fast_read=True)}
-        assert got["shared"] == PSet(["keep"])
-        assert got["elsewhere"] == PSet(["move"])
-        # regenerated log is in the new format and non-empty
-        segs = _emit_segments(store, "system", "idx")
-        assert segs
-        first = sorted(glob.glob(os.path.join(segs[0], "*.parquet")))[0]
-        assert "version" in pq.read_schema(first).names
-
     def test_affected_gather_semi_join_fallback(self, spark, store,
                                                 monkeypatch):
         # r2 item 8 / r3 item 8: the >AFFECTED_COLLECT_MAX incremental path
@@ -683,8 +636,7 @@ class TestStaleFloors:
     """The stale-floor sidecar (r10): incremental validity is an anti-join
     against per-build (path, floor) files — O(churn) — instead of the
     O(base) cache-key semi-join.  These pin the sidecar's lifecycle and
-    the equivalence with ground truth across re-maps, deletes, and the
-    pre-floor-era migration path."""
+    the equivalence with ground truth across re-maps and deletes."""
 
     def _out(self, store):
         return {r["id"]: r["value"] for r in
@@ -704,8 +656,7 @@ class TestStaleFloors:
     def test_floor_files_written_and_compacted(self, spark, store):
         import os
 
-        from pigeon_optics_spark.lens import (_STALE_RE, _emit_dir,
-                                              _stale_marker_present)
+        from pigeon_optics_spark.lens import _STALE_RE, _emit_dir
 
         store.create("system", "test-dataset")
         store.write_entries("system", "test-dataset",
@@ -715,7 +666,6 @@ class TestStaleFloors:
                     code=INVERT_CODE)
         build_lens(spark, store, "system", "tag-index")
         d = _emit_dir(store, "system", "tag-index")
-        assert _stale_marker_present(d)  # first build installs the marker
         n_floors = lambda: sum(bool(_STALE_RE.match(f))  # noqa: E731
                                for f in os.listdir(d))
         assert n_floors() == 0  # base segment, no churn yet
@@ -751,47 +701,6 @@ class TestStaleFloors:
         build_lens(spark, store, "system", "tag-index")
         got = self._out(store)
         assert "z" not in got and got["keep"] == PSet(["b"])
-        assert got == self._fresh_rebuild(spark, store)
-
-    def test_pre_floor_era_log_migrates_via_compaction(self, spark, store):
-        """An emissions log from before the sidecar existed (no marker, no
-        floors, but multi-generation delta segments) must be folded ONCE at
-        the next build — floor-less validity over those segments would
-        resurrect stale generations."""
-        import os
-
-        from pigeon_optics_spark.lens import (_STALE_MARKER, _STALE_RE,
-                                              _emit_dir, _emit_segments,
-                                              _stale_marker_present)
-
-        store.create("system", "test-dataset")
-        store.write_entries("system", "test-dataset",
-                            [("a", {"tags": ["x"]}), ("b", {"tags": ["k"]})])
-        create_lens(store, "system", "tag-index",
-                    inputs=["/datasets/system:test-dataset"],
-                    code=INVERT_CODE)
-        build_lens(spark, store, "system", "tag-index")
-        store.write("system", "test-dataset", "a", {"tags": ["y"]})
-        build_lens(spark, store, "system", "tag-index")
-        d = _emit_dir(store, "system", "tag-index")
-        assert len(_emit_segments(store, "system", "tag-index")) > 1
-        # simulate the pre-floor era: drop the marker and every floor file
-        import shutil
-
-        os.remove(os.path.join(d, _STALE_MARKER))
-        for f in list(os.listdir(d)):
-            if _STALE_RE.match(f):
-                p = os.path.join(d, f)
-                # floor sidecars: Spark-written dirs or r11 driver-side
-                # single files
-                shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
-        # next build must compact first (single base segment afterwards,
-        # counting this build's own delta on top) and stay correct
-        store.write("system", "test-dataset", "b", {"tags": ["k2"]})
-        build_lens(spark, store, "system", "tag-index")
-        assert _stale_marker_present(d)
-        got = self._out(store)
-        assert got == {"y": PSet(["a"]), "k2": PSet(["b"])}
         assert got == self._fresh_rebuild(spark, store)
 
 

@@ -72,10 +72,8 @@ def _force_plan(monkeypatch, plan: str) -> None:
 def test_incremental_equals_fresh_rebuild(spark, tmp_path, monkeypatch,
                                           seed, rounds, plan):
     """rounds=10 (seed 47) drives the sequence across the emit-log
-    compaction bound (>8 segments) AND a mid-history stale-floor-era
-    migration (marker + floors deleted after round 5, as if the store
-    predated the r10 sidecar), so floor bookkeeping, compaction, and the
-    migration path are all exercised under random op interleaving."""
+    compaction bound (>8 segments), so floor bookkeeping and compaction
+    are both exercised under random op interleaving."""
     _force_plan(monkeypatch, plan)
     rng = random.Random(seed)
     ids = [f"r{i}" for i in range(6)]
@@ -101,33 +99,19 @@ def test_incremental_equals_fresh_rebuild(spark, tmp_path, monkeypatch,
         if _round == 2:
             items = sorted(live.items())
             inc.write_entries("a", "d", items, overwrite=True)
-        if _round == 5:
-            # pre-floor-era simulation: drop the marker and every floor
-            # file; the next build must fold the log once and stay exact
-            import os
-            import shutil
-
-            from pigeon_optics_spark.lens import (_STALE_MARKER, _STALE_RE,
-                                                  _emit_dir)
-            d = _emit_dir(inc, "a", "l")
-            marker = os.path.join(d, _STALE_MARKER)
-            if os.path.exists(marker):
-                os.remove(marker)
-            for f in list(os.listdir(d)):
-                if _STALE_RE.match(f):
-                    p = os.path.join(d, f)
-                    # floor sidecars are dirs (Spark write) or single
-                    # files (the r11 driver-side pyarrow write)
-                    shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) \
-                        else os.remove(p)
         build_lens(spark, inc, "a", "l")
 
-    # fresh store: ONLY the final dataset content, built once
-    fresh = DatasetStore(str(tmp_path / f"fresh{seed}"))
+    _assert_equals_fresh(spark, tmp_path, inc, live)
+
+
+def _assert_equals_fresh(spark, tmp_path, inc, live, code=CODE):
+    """The lens output of ``inc`` equals one build over a fresh store
+    holding ONLY the final dataset content ``live``."""
+    fresh = DatasetStore(str(tmp_path / "fresh"))
     fresh.create("a", "d")
     if live:
         fresh.write_entries("a", "d", sorted(live.items()))
-    create_lens(fresh, "a", "l", inputs=["/datasets/a:d"], code=CODE)
+    create_lens(fresh, "a", "l", inputs=["/datasets/a:d"], code=code)
     build_lens(spark, fresh, "a", "l")
 
     got, want = _canon(_outputs(inc, "l")), _canon(_outputs(fresh, "l"))
@@ -137,6 +121,70 @@ def test_incremental_equals_fresh_rebuild(spark, tmp_path, monkeypatch,
         "diff": {k: (got[k], want[k]) for k in got.keys() & want.keys()
                  if got[k] != want[k]},
     }
+
+
+@pytest.mark.parametrize("plan", ["small", "spark"])
+def test_lost_emission_log_is_regenerated(spark, tmp_path, monkeypatch,
+                                          plan):
+    """A built lens whose emission log is gone (its dir deleted between
+    builds) regenerates the log from the compute cache at the next build,
+    and the contributions of the records that build leaves untouched
+    survive: folding against an empty log would drop them."""
+    import shutil
+
+    from pigeon_optics_spark.lens import _emit_dir, _emit_segments
+
+    _force_plan(monkeypatch, plan)
+    inc = DatasetStore(str(tmp_path / "inc-lost"))
+    inc.create("a", "d")
+    create_lens(inc, "a", "l", inputs=["/datasets/a:d"], code=CODE)
+    live = {"r1": {"tags": ["cat", "dog"]}, "r2": {"tags": ["cat"]},
+            "r3": {"tags": ["emu"]}}
+    inc.write_entries("a", "d", sorted(live.items()))
+    build_lens(spark, inc, "a", "l")
+    shutil.rmtree(_emit_dir(inc, "a", "l"))
+
+    live["r1"] = {"tags": ["fox"]}
+    inc.write("a", "d", "r1", live["r1"])
+    build_lens(spark, inc, "a", "l")
+    assert _emit_segments(inc, "a", "l")
+    _assert_equals_fresh(spark, tmp_path, inc, live)
+
+    # the regenerated log carries the next incremental build too
+    live["r2"] = {"tags": ["dog"]}
+    inc.write("a", "d", "r2", live["r2"])
+    build_lens(spark, inc, "a", "l")
+    _assert_equals_fresh(spark, tmp_path / "after", inc, live)
+
+
+@pytest.mark.parametrize("plan", ["small", "spark"])
+@pytest.mark.parametrize("first", ["empty-dataset", "emits-nothing"])
+def test_empty_first_build_then_update(spark, tmp_path, monkeypatch, plan,
+                                       first):
+    """A first build that emits nothing — over an empty dataset, or over
+    records whose map emits nothing — still leaves an emission segment
+    (so no later build mistakes the log for lost), and updates that do
+    emit then rebuild exactly."""
+    from pigeon_optics_spark.lens import _emit_segments
+
+    code = "for tag in data.get('tags', []):\n    output(tag, 1)\n"
+    _force_plan(monkeypatch, plan)
+    inc = DatasetStore(str(tmp_path / "inc-first"))
+    inc.create("a", "d")
+    create_lens(inc, "a", "l", inputs=["/datasets/a:d"], code=code)
+    live: dict[str, dict] = {}
+    if first == "emits-nothing":
+        live = {"r1": {"tags": []}, "r2": {}}
+        inc.write_entries("a", "d", sorted(live.items()))
+    build_lens(spark, inc, "a", "l")
+    assert _outputs(inc, "l") == {}
+    assert _emit_segments(inc, "a", "l")
+
+    for rid, v in (("r3", {"tags": ["x", "y"]}), ("r1", {"tags": ["x"]})):
+        live[rid] = v
+        inc.write("a", "d", rid, v)
+        build_lens(spark, inc, "a", "l")
+    _assert_equals_fresh(spark, tmp_path, inc, live, code=code)
 
 
 def test_incremental_equals_fresh_after_empty_final_state(spark, tmp_path):

@@ -202,10 +202,10 @@ def test_natural_sort_matches_spark_path(spark):
 def test_natural_pad_byte_parity_adversarial_corpus(spark):
     """Byte-level parity of the Python map-side key (natural_pad, stamped
     into emission rows) and the JVM expression (natural_sort_col_expr, used
-    for store ordering and — planned r5 — re-deriving emission nat_keys at
-    read time).  One Spark job over an adversarial corpus: unicode, digit
-    runs at every boundary, runs at/over the 24 pad width, digits-only,
-    empty-ish, separators."""
+    for store ordering and for re-deriving emission nat_keys at read time
+    in lens._read_emit_log).  One Spark job over an adversarial corpus:
+    unicode, digit runs at every boundary, runs at/over the 24 pad width,
+    digits-only, empty-ish, separators."""
     from pyspark.sql import functions as F
 
     from pigeon_optics_spark.values import natural_pad, natural_sort_col_expr

@@ -9,9 +9,11 @@ javascript-lens-worker.js``; SURVEY §2.5, §3.2):
   ``output(id, value)`` pairs (flatMap);
 - emissions sharing an ``output`` id are combined by the type-directed
   merge-reduce (``reduce.py``) in a deterministic fold order;
-- map results (outputs + captured logs/errors per input record) are cached;
-  a rebuild re-maps only records whose version changed (incremental view
-  maintenance, the reference's one genuinely novel optimization, SURVEY §4);
+- map results are kept per input record — the input version and the
+  captured logs/errors in the compute cache, the emissions in the
+  emissions store; a rebuild re-maps only records whose version changed
+  (incremental view maintenance, the reference's one genuinely novel
+  optimization, SURVEY §4);
 - lens outputs form a readable dataset (source='lenses'), so lenses compose
   into a reactive DAG.
 
@@ -278,8 +280,7 @@ class LensHarness:
 
 MAP_RESULT_SCHEMA = (
     "path string, record_id string, input_idx int, nat_key string, "
-    "version long, outputs string, logs string, errors string, "
-    "rid_json string, nat_key_json string"
+    "version long, outputs string, logs string, errors string"
 )
 
 
@@ -294,9 +295,7 @@ def _json_escape_nocc_col(c):
     tests/test_lens.py::test_map_records_serialization).  The lens map
     columns this feeds (``outputs``/``logs``/``errors``) are themselves
     JSON TEXT produced by ``json.dumps`` fragments, whose own escaping
-    already removed every raw control char — the reason this is safe.
-    Strings that CAN carry control chars (record ids) ship pre-escaped
-    from Python instead (``rid_json``/``nat_key_json``)."""
+    already removed every raw control char — the reason this is safe."""
     from pyspark.sql import functions as F
 
     return F.concat(
@@ -307,23 +306,19 @@ def _json_escape_nocc_col(c):
 
 
 def _cache_entry_value_col():
-    """The canonical cache-entry JSON envelope, derived in whole-stage
-    codegen from the THIN map-output columns — byte-identical to the
-    former Python f-string assembly (sorted keys, compact separators),
-    so ``sha2(value) == object_hash`` still holds at the cache write.
-    Keeping the fat envelope OUT of the map output roughly halves the
-    persisted map frame and the Arrow transfer: the embedded
-    outputs/logs/errors strings otherwise crossed the Python boundary
-    twice (raw + escaped inside the envelope)."""
+    """The canonical cache-entry JSON envelope ``{errors, logs, version}``,
+    derived in whole-stage codegen from the thin map-output columns —
+    byte-identical to ``canonical_json`` (sorted keys, compact
+    separators), so ``sha2(value) == object_hash`` holds at the cache
+    write.  The cache keeps only what nothing else does: the input
+    version (the re-map-if-newer rule) and the captured logs/errors
+    (:func:`lens_logs`); the emissions live once, in the emissions
+    store."""
     from pyspark.sql import functions as F
 
     return F.concat(
         F.lit('{"errors":'), _json_escape_nocc_col(F.col("errors")),
-        F.lit(',"input_idx":'), F.col("input_idx").cast("string"),
         F.lit(',"logs":'), _json_escape_nocc_col(F.col("logs")),
-        F.lit(',"nat_key":'), F.col("nat_key_json"),
-        F.lit(',"outputs":'), _json_escape_nocc_col(F.col("outputs")),
-        F.lit(',"record_id":'), F.col("rid_json"),
         F.lit(',"version":'), F.col("version").cast("string"),
         F.lit("}"))
 
@@ -334,15 +329,11 @@ def map_records(inputs_df, code: str, timeout_ms: float | None = None):
 
     One output row per input record; emissions are embedded as a JSON array of
     ``[emit_idx, out_id, tagged_value_json]`` so the row schema stays fixed
-    regardless of the user value shapes.  The complete cache-entry envelope is
-    NOT assembled here: it is derived in whole-stage codegen from these thin
+    regardless of the user value shapes.  The cache-entry envelope is NOT
+    assembled here: it is derived in whole-stage codegen from these thin
     columns (``_cache_entry_value_col``), byte-identical to canonical form, so
     the cache write still hashes JVM-side (``sha2(value) == object_hash``)
-    while the outputs/logs/errors bytes cross the Python boundary exactly
-    once (the fat envelope embedded them a second time, escaped — ~half the
-    map output's bytes).  Only ``rid_json``/``nat_key_json`` ship pre-escaped
-    from Python because record ids may contain control characters, whose
-    ``\\u00xx`` escapes a JVM replay could not reproduce byte-exactly.
+    while the logs/errors bytes cross the Python boundary exactly once.
     """
     import pandas as pd
 
@@ -358,8 +349,7 @@ def map_records(inputs_df, code: str, timeout_ms: float | None = None):
             for pdf in batches:
                 out_rows = {k: [] for k in
                             ("path", "record_id", "input_idx", "nat_key",
-                             "version", "outputs", "logs", "errors",
-                             "rid_json", "nat_key_json")}
+                             "version", "outputs", "logs", "errors")}
                 for path_s, source, author_s, name_s, rid, version, value, idx in zip(
                         pdf["path"].tolist(), pdf["source"].tolist(),
                         pdf["author"].tolist(), pdf["name"].tolist(),
@@ -416,13 +406,6 @@ def map_records(inputs_df, code: str, timeout_ms: float | None = None):
                     out_rows["outputs"].append(outputs_json)
                     out_rows["logs"].append(logs_json)
                     out_rows["errors"].append(errors_json)
-                    # the cache-entry envelope itself is DERIVED JVM-side
-                    # (``_cache_entry_value_col`` — sorted-key compact dumps
-                    # replayed in codegen, canonical by
-                    # test_cache_value_is_canonical): only the two strings
-                    # that may carry control chars ship pre-escaped here
-                    out_rows["rid_json"].append(dumps(rid))
-                    out_rows["nat_key_json"].append(dumps(nat_key))
                 yield pd.DataFrame(out_rows)
 
     return inputs_df.mapInPandas(run_partition, schema=MAP_RESULT_SCHEMA)
@@ -517,10 +500,7 @@ def reduce_outputs(outputs_df, num_partitions: int | None = None, *,
 
 _CACHE_SOURCE = "meta"
 
-_CACHE_VALUE_SCHEMA = (
-    "struct<input_idx:int, record_id:string, nat_key:string, version:bigint, "
-    "outputs:string, logs:string, errors:string>"
-)
+_CACHE_VALUE_SCHEMA = "struct<errors:string, logs:string, version:bigint>"
 
 
 def _cache_name(name: str) -> str:
@@ -530,10 +510,10 @@ def _cache_name(name: str) -> str:
 # --------------------------------------------------------------------------
 # emissions store — the reduce-side index
 #
-# The map cache is keyed by input *path* (right for freshness / log capture),
-# but the reduce gathers by *out_id*: deriving emissions from the cache means
-# JSON-parsing and exploding the ENTIRE cache even when one key changed.  The
-# emissions store is the same data exploded once at write time and persisted
+# The map cache is keyed by input *path* (right for freshness / log capture)
+# and holds no emissions; the reduce gathers by *out_id*.  The emissions
+# store is the one copy of every emission: the map output exploded once at
+# write time and persisted
 # as parquet segments RANGE-SORTED BY out_id, so an incremental re-reduce
 # reads only the row groups holding affected keys (min/max pruning on the
 # pushed-down ``out_id IN (...)`` filter).  An emission row is current iff
@@ -546,7 +526,8 @@ def _cache_name(name: str) -> str:
 # dropping retained contributions on later incremental rebuilds).  A cache
 # row's version advances exactly when its path is re-mapped: the cache value
 # embeds the input record's version, so hash suppression can never keep an
-# old version on a re-map.  Segments compact alongside the cache.
+# old version on a re-map — every logged generation is stamped with exactly
+# its cache row's version.  Segments compact alongside the cache.
 # --------------------------------------------------------------------------
 
 _EMIT_COLS = ["out_id", "input_idx", "nat_key", "src_rid", "emit_idx", "value"]
@@ -589,7 +570,7 @@ def _emit_segments(store: DatasetStore, author: str, name: str) -> list[str]:
     """Emission segment paths in seq order; a base segment supersedes all
     earlier segments (same convention as the store's segment log).  An
     empty list on a built lens means the log is lost; the next build
-    regenerates it (:func:`build_lens`'s heal)."""
+    resets the lens and rebuilds it from its inputs (:func:`build_lens`)."""
     import os
 
     d = _emit_dir(store, author, name)
@@ -630,34 +611,27 @@ def _emit_segments(store: DatasetStore, author: str, name: str) -> list[str]:
 # and deletes the floors, which are redundant afterwards: kept rows carry
 # the current cache version, which is >= every floor ever written.
 #
-# Crash safety (r11, crash-injected in tests/test_lens_crash.py): every
-# build installs a ``_build_inflight`` marker before its cache write and
-# removes it after set_config.  A marker found at build start means the
-# previous build died somewhere between those two points — the cache may
-# hold row generations the emissions log lacks (died before the emit
-# write), the log may hold an orphaned segment (died after it), floors
-# may be missing, and the output collection may be stale (died before
-# the output write).  :func:`_heal_crashed_build` restores the log
-# invariant (exactly the newest generation per live cache path) by
-# regenerating missing generations straight from the cache (no re-map —
-# the cache value embeds the outputs) and force-compacting, and the
-# build then re-reduces EVERY out_id (log ∪ delta ∪ existing output
-# records, so outputs whose emissions vanished re-check as deletes).
-# O(base) once, only after a detected crash.  The earlier prose-only
-# protocol ("the re-run re-maps the same delta") was insufficient on two
-# counts the injection tests pin: the full-diff freshness branch uses
-# the cache itself as its cursor, so a re-run after the cache write saw
-# nothing fresh and never healed the output; and a fully-hash-suppressed
-# re-run gathered the orphaned emit segment AND its own re-emissions at
-# the same version, double-folding every affected key.  A built lens
-# whose log has no segment at all (lost, or deleted by hand) heals the
-# same way: the cache holds every generation the log should.
+# Crash safety (crash-injected in tests/test_lens_crash.py): every build
+# installs a ``_build_inflight`` marker before its cache write and removes
+# it after set_config.  A marker found at build start means the previous
+# build died somewhere between those two points — the cache may hold row
+# generations the emissions log lacks, the log may hold an orphaned
+# segment, floors may be missing, and the output collection may be stale.
+# Recovery does not repair that state; it discards it
+# (:func:`_reset_lens_state`: a new empty cache, no emission log, no
+# cursor) and the build runs as a first build, re-mapping every live input
+# record and overwriting the output with hash suppression — so the lens
+# has one recovery path, the first build every lens runs.  O(base) once,
+# only after a detected crash.  A built lens whose log has no segment at
+# all (lost, or deleted by hand) resets the same way.  The cursor is not
+# enough to detect a crash on its own: a crashed FIRST build has none, yet
+# its cache already holds rows that a full diff would take as current.
 # --------------------------------------------------------------------------
 
 _STALE_RE = re.compile(r"^stale_(\d+)_[0-9a-f]+\.parquet$")
 
 #: build-in-flight marker (crash detection) — present while a build is
-#: between its cache write and its set_config; found at build start ⇒ heal
+#: between its cache write and its set_config; found at build start ⇒ reset
 _INFLIGHT_MARKER = "_build_inflight"
 
 
@@ -687,9 +661,10 @@ def _write_stale_floors(df, d: str, seq: int) -> None:
     """Append one floors sidecar: (path, version) rows, version = the floor
     below which that path's emissions are dead.  Stage-then-rename like the
     emit segments; O(delta) rows, coalesced small.  The uuid suffix makes
-    every write collision-free — a crashed build's re-run (which reuses
-    the suppressed cache seq) must never clobber existing floors, and
-    redundant/duplicate floors are harmless under the max() aggregation."""
+    every write collision-free — a build whose cache write adds no
+    segment reuses the previous cache seq and must never clobber that
+    build's floors; redundant floors are harmless under the max()
+    aggregation."""
     import os
     import shutil
     import uuid
@@ -915,12 +890,13 @@ def _cache_keys_df(spark, segs: list[str]):
     return df.where(~F.col("deleted")).select("path", "version")
 
 
-def _emissions_from_cache_df(df):
-    """(path, input_idx, record_id, nat_key, outputs) → one row per emission
-    (path, out_id, input_idx, nat_key, src_rid, emit_idx, value)."""
+def _emissions_df(mapped):
+    """Map rows (path, input_idx, record_id, nat_key, outputs) → one row
+    per emission (path, out_id, input_idx, nat_key, src_rid, emit_idx,
+    value)."""
     from pyspark.sql import functions as F
 
-    return df.select(
+    return mapped.select(
         "path", "input_idx", "nat_key",
         F.col("record_id").alias("src_rid"),
         F.explode(F.from_json("outputs", _EMITS_DDL)).alias("e"),
@@ -929,128 +905,56 @@ def _emissions_from_cache_df(df):
              F.col("e.v").alias("value"))
 
 
-def _parsed_cache_rows(df):
-    """Cache rows (record_id=path, value=JSON) → flat struct columns + path."""
-    from pyspark.sql import functions as F
-
-    return df.select(
-        F.col("record_id").alias("path"),
-        F.from_json("value", _CACHE_VALUE_SCHEMA).alias("c"),
-    ).select("path", "c.*")
-
-
-def _compact_emissions(spark, store: DatasetStore, author: str, name: str, *,
-                       extra=None, force: bool = False) -> None:
+def _compact_emissions(spark, store: DatasetStore, author: str,
+                       name: str) -> None:
     """Fold the emissions log into one base segment of currently-valid rows
-    (physical only, like cache compaction).
-
-    Validity is the MAX-GENERATION rule: for each path still live in the
-    cache, keep only its newest logged generation, and only if that
-    generation is at or above the cache row's version.  The old exact
-    (path, version) match was almost always identical but silently dropped
-    the one legitimate above-row-version generation: a crashed build's
-    re-run with extra churn stamps its re-emissions at the bumped
-    collection version while the suppressed row keeps its old version —
-    that newer generation is byte-identical to the correct emissions (hash
-    suppression guarantees it) and must survive.  Duplicate copies of one
-    generation (same path+version twice) are collapsed here as a safety
-    net, so no copy can double a fold after compaction: copies are
-    byte-identical, so ``dropDuplicates`` on the emission key is exact.
-
-    ``extra`` (heal path): additional already-valid rows to fold in — the
-    generations :func:`_heal_crashed_build` regenerated from the cache.
-    ``force``: compact even a 0/1-segment log (heal needs the validity
-    sweep regardless of segment count)."""
+    (physical only, like cache compaction): a logged generation is valid
+    iff its (path, version) is a live cache row — every generation is
+    stamped with its cache row's version (see the emissions-store
+    comment), so this keeps exactly the newest generation of every live
+    path."""
     import os
     import shutil
 
-    from pyspark.sql import functions as F
-
     d = _emit_dir(store, author, name)
     segs = _emit_segments(store, author, name)
-    if len(segs) <= 1 and extra is None and not force:
+    if len(segs) <= 1:
         return
     cache_meta = store.get_meta(author, _cache_name(name), source=_CACHE_SOURCE)
     keys = _cache_keys_df(spark, store._segments(cache_meta))  # noqa: SLF001
-    cols = ["path", "version", *_EMIT_COLS]
-    valid = None
-    if segs:
-        log = _read_emit_log(spark, segs)
-        if keys is not None:
-            gen_max = log.groupBy("path").agg(F.max("version").alias("_gmax"))
-            valid = (log.join(gen_max, "path")
-                     .where(F.col("version") == F.col("_gmax"))
-                     .drop("_gmax")
-                     .join(keys.select("path",
-                                       F.col("version").alias("_rowv")),
-                           "path")
-                     .where(F.col("version") >= F.col("_rowv"))
-                     .drop("_rowv")
-                     .dropDuplicates(["path", "out_id", "input_idx",
-                                      "src_rid", "emit_idx"])
-                     .select(*cols))
-        else:
-            valid = log.limit(0).select(*cols)
-    if extra is not None:
-        extra = extra.select(*cols)
-        valid = extra if valid is None else valid.unionByName(extra)
-    final = None
-    if valid is not None:
-        n = valid.count()
-        num_parts = max(1, min(256, n // 200_000 + 1))
-        final = _write_emit_segment(valid, d, cache_meta.last_seq, base=True,
-                                    num_parts=num_parts)
-    if os.path.isdir(d):
-        # dir-wide sweep (not just `segs`): invisible orphans — e.g. a
-        # delta segment written at a base segment's seq — never appear in
-        # _emit_segments and would otherwise linger forever
-        for fn in os.listdir(d):
-            if not _EMIT_SEG_RE.match(fn):
-                continue
-            p = os.path.join(d, fn)
-            if final is None or os.path.abspath(p) != os.path.abspath(final):
-                shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) \
-                    else os.remove(p)
+    log = _read_emit_log(spark, segs)
+    valid = (log.limit(0) if keys is None
+             else log.join(keys, ["path", "version"], "left_semi"))
+    valid = valid.select("path", "version", *_EMIT_COLS)
+    n = valid.count()
+    num_parts = max(1, min(256, n // 200_000 + 1))
+    final = _write_emit_segment(valid, d, cache_meta.last_seq, base=True,
+                                num_parts=num_parts)
+    # dir-wide sweep (not just `segs`): invisible orphans — e.g. a delta
+    # segment written at a base segment's seq — never appear in
+    # _emit_segments and would otherwise linger forever
+    for fn in os.listdir(d):
+        p = os.path.join(d, fn)
+        if (_EMIT_SEG_RE.match(fn)
+                and os.path.abspath(p) != os.path.abspath(final)):
+            shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) \
+                else os.remove(p)
     # floors are redundant against a freshly-compacted (all-valid) log
     _drop_stale_floors(d)
 
 
-def _heal_crashed_build(spark, store: DatasetStore, author: str,
-                        name: str) -> None:
-    """Restore the emissions-log invariant after a crashed build (the
-    ``_build_inflight`` marker outlived its build — see the crash-safety
-    comment above :data:`_INFLIGHT_MARKER`) or a lost log (no segment).
+def _reset_lens_state(store: DatasetStore, author: str, name: str) -> None:
+    """Give a lens an empty compute cache and no emissions log, so its next
+    build is a first build.  The cache goes first: the emit dir holds the
+    inflight marker, which must outlive every other step of a reset that
+    itself crashes (hence also the ``exists`` check)."""
+    import shutil
 
-    The cache is authoritative: any live cache row whose newest logged
-    generation is below the row's version lost its emissions to the crash
-    window between the cache write and the emit write — regenerate them
-    straight from the cache value (``outputs`` is embedded; no re-map) and
-    fold everything through a forced compaction, whose max-generation rule
-    simultaneously drops superseded generations the crashed build's floors
-    never got to kill.  The caller then forces a full re-reduce."""
-    from pyspark.sql import functions as F
-
-    cache_meta = store.get_meta(author, _cache_name(name), source=_CACHE_SOURCE)
-    keys = _cache_keys_df(spark, store._segments(cache_meta))  # noqa: SLF001
-    extra = None
-    if keys is not None:
-        segs = _emit_segments(store, author, name)
-        missing = keys
-        if segs:
-            have_max = (_read_emit_log(spark, segs)
-                        .groupBy("path").agg(F.max("version").alias("_gmax")))
-            missing = (keys.join(have_max, "path", "left")
-                       .where(F.col("_gmax").isNull()
-                              | (F.col("_gmax") < F.col("version")))
-                       .drop("_gmax"))
-        cache_cur = store.read_df(spark, author, _cache_name(name),
-                                  source=_CACHE_SOURCE)
-        miss_rows = cache_cur.join(
-            missing.select(F.col("path").alias("record_id")),
-            "record_id", "left_semi")
-        extra = (_emissions_from_cache_df(_parsed_cache_rows(miss_rows))
-                 .join(keys, "path"))
-    _compact_emissions(spark, store, author, name, extra=extra, force=True)
+    cache = _cache_name(name)
+    if store.exists(author, cache, source=_CACHE_SOURCE):
+        store.delete_collection(author, cache, source=_CACHE_SOURCE)
+    store.create(author, cache, source=_CACHE_SOURCE)
+    shutil.rmtree(_emit_dir(store, author, name), ignore_errors=True)
 
 
 def create_lens(store: DatasetStore, author: str, name: str, *, inputs: list[str],
@@ -1067,11 +971,8 @@ def create_lens(store: DatasetStore, author: str, name: str, *, inputs: list[str
     config = {"inputs": inputs, "code": code, "mapType": "python",
               "timeout_ms": timeout_ms, "input_versions": {}}
     meta = store.create(author, name, source="lenses", memo=memo, config=config)
-    store.create(author, _cache_name(name), source=_CACHE_SOURCE)
-    # a recreated lens must not inherit a prior incarnation's emissions log
-    import shutil
-
-    shutil.rmtree(_emit_dir(store, author, name), ignore_errors=True)
+    # a recreated lens must not inherit a prior incarnation's cache or log
+    _reset_lens_state(store, author, name)
     return meta
 
 
@@ -1217,10 +1118,11 @@ def _small_delta_build(spark, store: DatasetStore, author: str, name: str, *,
             delta_paths=spark.createDataFrame(
                 pa.table({"path": pa.array(delta_paths, pa.string())})),
             floors=_read_stale_floors(spark, prior_floors),
-            heal_full=False, trace=trace), n_fresh
+            trace=trace), n_fresh
 
     # validity: drop generations below their path's max PRIOR floor, and
-    # every old generation of a delta path (this build re-homes them all)
+    # every old generation of a delta path — the twin of _reduce_affected's
+    # anti-join, and like it what retires the previous generation
     floors = _floor_max_local(prior_floors)
     delta_set = set(delta_paths)
     rows = [(o, i, natural_pad(r), r, e, v) for p, ver, o, i, r, e, v in
@@ -1239,8 +1141,7 @@ def _small_delta_build(spark, store: DatasetStore, author: str, name: str, *,
 
 
 def _reduce_affected(spark, store: DatasetStore, author: str, name: str, *,
-                     emit_delta, old_log, delta_paths, floors,
-                     heal_full: bool, trace):
+                     emit_delta, old_log, delta_paths, floors, trace):
     """Re-reduce the affected out_ids of an incremental build on Spark and
     write them (the output write); returns the output collection's meta.
 
@@ -1262,22 +1163,10 @@ def _reduce_affected(spark, store: DatasetStore, author: str, name: str, *,
     # changed/pruned paths (a path-only semi-join: stale generations'
     # out_ids re-reduce too — idempotent, and it spares the build the
     # O(base) cache-key scan the exact-version match needed)
-    new_ids = emit_delta.select("out_id")
-    if heal_full:
-        # post-crash: the dead build's output write / deletes never
-        # ran, so ANY key may be stale — re-reduce every out_id in the
-        # healed log plus every existing output record (records whose
-        # emissions vanished entirely must re-check as deletes).
-        # O(base) once, only after a detected crash.
-        out_ids_cur = store.read_df(
-            spark, author, name, source="lenses").select(
-            F.col("record_id").alias("out_id"))
-        affected = (new_ids.unionByName(old_log.select("out_id"))
-                    .unionByName(out_ids_cur).distinct().persist())
-    else:
-        old_ids = (old_log.join(F.broadcast(delta_paths), "path",
-                                "left_semi").select("out_id"))
-        affected = new_ids.unionByName(old_ids).distinct().persist()
+    old_ids = (old_log.join(F.broadcast(delta_paths), "path", "left_semi")
+               .select("out_id"))
+    affected = (emit_delta.select("out_id").unionByName(old_ids)
+                .distinct().persist())
     # one probe job replaces the old count()+collect() pair: collect up
     # to cap+1 rows — emptiness, the cap branch, AND the id list all
     # come out of the same scan (the persist materializes fully later,
@@ -1313,14 +1202,14 @@ def _reduce_affected(spark, store: DatasetStore, author: str, name: str, *,
                          .drop("_floor"))
         else:
             valid_old = old_part
-        # this build's emit_delta re-homes EVERY delta path at ver_now;
-        # a surviving old-log generation of a delta path — possible at
-        # version == ver_now when the cache write was fully
-        # hash-suppressed (a crashed build's re-run gathering its own
-        # orphaned segment) — would double the fold.  Exclude old rows
-        # of delta paths outright: on non-suppressed builds the floors
-        # already killed them, so this broadcast anti-join is a
-        # semantic no-op there and O(churn) either way.
+        # this build's emit_delta re-homes EVERY delta path at ver_now,
+        # and the PRIOR floors never cover a delta path's previous
+        # generation (that generation is at or above every floor written
+        # for its path before this build).  So this anti-join — and its
+        # twin, ``p not in delta_set`` in _small_delta_build — is what
+        # retires the previous generation on EVERY incremental build;
+        # without it the old and new generations would both fold.
+        # O(churn): the delta paths are broadcast.
         valid_old = valid_old.join(F.broadcast(delta_paths),
                                    "path", "left_anti")
         gathered = valid_old.select(*_EMIT_COLS).unionByName(
@@ -1354,9 +1243,10 @@ def _reduce_affected(spark, store: DatasetStore, author: str, name: str, *,
 
 def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
                        mapped, gone_paths, first_build: bool,
-                       heal_full: bool, old_emit_segs: list[str], trace):
-    """The Spark build: every phase a distributed job (first builds, full
-    diffs, heals, and deltas too large for :func:`_small_delta_build`).
+                       old_emit_segs: list[str], trace):
+    """The Spark build: every phase a distributed job (first builds —
+    including the one after a reset — full diffs, and deltas too large
+    for :func:`_small_delta_build`).
     Returns ``(output collection meta, records mapped)``."""
     from pyspark.sql import functions as F
 
@@ -1380,7 +1270,7 @@ def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
     delta_paths = mapped.select("path").unionByName(gone_paths)
     # inflight marker: from the cache write to set_config this build holds
     # partially-committed state; a crash in the window is detected and
-    # healed by the next build (crash-safety comment at _INFLIGHT_MARKER)
+    # recovered by the next build (crash-safety comment at _INFLIGHT_MARKER)
     emit_d = _emit_dir(store, author, name)
     _install_inflight_marker(emit_d)
     store.write_entries_df(spark, author, _cache_name(name), delta,
@@ -1393,9 +1283,8 @@ def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
     seq_now = cache_meta_now.last_seq       # emission SEGMENT numbering
     ver_now = cache_meta_now.version        # per-row validity stamp
 
-    # emissions come straight off the persisted map result — only the
-    # ``outputs`` column is parsed, never the full cache-entry JSON
-    emit_delta = (_emissions_from_cache_df(mapped)
+    # emissions come straight off the persisted map result
+    emit_delta = (_emissions_df(mapped)
                   .withColumn("version", F.lit(ver_now).cast("long")))
 
     if first_build:
@@ -1438,11 +1327,7 @@ def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
         # stale-floor sidecar (see the module comment above
         # _STALE_RE): every path this build touched gets floor
         # ver_now — its new generation (if any) is AT ver_now and survives;
-        # every older generation dies.  Written UNCONDITIONALLY: when the
-        # cache write was fully suppressed (a crashed build's re-run —
-        # identical values, version unchanged) the floors are exactly what
-        # the crash may have lost, and a floor at the current version never
-        # kills a current-generation row.
+        # every older generation dies.
         _write_stale_floors(
             delta_paths.withColumn("version", F.lit(ver_now).cast("long")),
             emit_d, seq_now)
@@ -1450,7 +1335,7 @@ def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
         stats_meta = _reduce_affected(
             spark, store, author, name, emit_delta=emit_delta,
             old_log=old_log, delta_paths=delta_paths, floors=floors,
-            heal_full=heal_full, trace=trace)
+            trace=trace)
     mapped.unpersist(blocking=True)
     return stats_meta, n_fresh
 
@@ -1463,10 +1348,10 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
     test); the choice is automatic:
 
     - **Small delta — one Spark job** (:func:`_small_delta_build`).  Taken
-      when ALL of these hold: the build is incremental (not the first);
-      it is not a heal; every input took the delta branch (segments
-      since the last build); and the delta's row count, read from the
-      segments' parquet footers, is at most ``AFFECTED_COLLECT_MAX``.
+      when every input took the delta branch (segments since the last
+      build — so never on a first build) and the delta's row count, read
+      from the segments' parquet footers, is at most
+      ``AFFECTED_COLLECT_MAX``.
       The job maps the delta and
       collects the cache envelopes and emissions; the writes, the
       affected-key gather and the fold run on the driver with pyarrow.
@@ -1477,7 +1362,9 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
 
     Both follow one durable-write order (cache segment → emit segment →
     stale floors → output write → cursor), bracketed by the inflight
-    marker that lets the next build heal a crash.
+    marker.  A build that finds the marker (a crash) or a built lens with
+    no emission segment (a lost log) resets the lens's cache and log and
+    runs as a first build (crash-safety comment at ``_INFLIGHT_MARKER``).
 
     Returns build stats {mapped, outputs, version, records_changed};
     ``outputs`` is None unless ``count_outputs`` (the count is a whole extra
@@ -1493,30 +1380,27 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
         else (lambda tag: None)
 
     meta = store.get_meta(author, name, source="lenses")
-    cfg = meta.config
+    cfg = dict(meta.config)  # the catalog's copy changes at set_config only
     code, input_paths = cfg["code"], cfg["inputs"]
     timeout_ms = cfg.get("timeout_ms")
-
-    cache_meta = store.get_meta(author, _cache_name(name), source=_CACHE_SOURCE)
-    first_build = cache_meta.version == 0
-    input_seqs: dict = cfg.get("input_seqs", {})
-    input_versions: dict = cfg.get("input_versions", {})
     emit_d = _emit_dir(store, author, name)
 
     # recovery: an inflight marker at build start means the previous build
-    # died between its cache write and set_config (see the crash-safety
-    # comment above _INFLIGHT_MARKER); a built lens with no emission
-    # segment has lost its log, and folding against nothing would drop
-    # every untouched contribution.  Either way, heal the emissions log
-    # from the authoritative cache, then force THIS build to re-reduce
-    # every out_id.  first_build needs no heal: the full rebuild below
-    # overwrites the output and re-emits everything anyway.
-    heal_full = not first_build and (
-        _inflight_marker_present(emit_d)
-        or not _emit_segments(store, author, name))
-    if heal_full:
-        _heal_crashed_build(spark, store, author, name)
-        _trace("heal")
+    # died between its cache write and set_config; a built lens (one with
+    # a cursor) with no emission segment has lost its log, and folding
+    # against nothing would drop every untouched contribution.  Either
+    # way, reset the lens and run a first build (see the crash-safety
+    # comment above _INFLIGHT_MARKER).
+    if _inflight_marker_present(emit_d) or (
+            "input_seqs" in cfg and not _emit_segments(store, author, name)):
+        _reset_lens_state(store, author, name)
+        cfg.pop("input_seqs", None)
+        cfg["input_versions"] = {}
+        _trace("reset")
+    first_build = "input_seqs" not in cfg
+    input_seqs: dict = cfg.get("input_seqs", {})
+    input_versions: dict = cfg.get("input_versions", {})
+    cache_meta = store.get_meta(author, _cache_name(name), source=_CACHE_SOURCE)
 
     # ---- freshness: per-input DELTA SCAN over the segment log --------------
     # The log layout gives CDF semantics: segments with seq > the seq seen at
@@ -1642,16 +1526,15 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
 
     old_emit_segs = _emit_segments(store, author, name)
     pre_write_version = store.get_meta(author, name, source="lenses").version
-    if (not first_build and not heal_full and all_delta
-            and delta_rows <= AFFECTED_COLLECT_MAX):
+    if all_delta and delta_rows <= AFFECTED_COLLECT_MAX:
         stats_meta, n_fresh = _small_delta_build(
             spark, store, author, name, mapped=mapped, gone_paths=gone_paths,
             old_emit_segs=old_emit_segs, trace=_trace)
     else:
         stats_meta, n_fresh = _distributed_build(
             spark, store, author, name, mapped=mapped, gone_paths=gone_paths,
-            first_build=first_build, heal_full=heal_full,
-            old_emit_segs=old_emit_segs, trace=_trace)
+            first_build=first_build, old_emit_segs=old_emit_segs,
+            trace=_trace)
     records_changed = stats_meta.version != pre_write_version
 
     # bookkeeping: input versions + segment positions consumed by this build

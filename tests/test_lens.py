@@ -433,8 +433,8 @@ class TestGoldenBuild:
 
 
 def test_map_records_serialization(spark):
-    """The map loop assembles its three JSON envelopes (outputs list,
-    cache-entry value) from literal fragments + a prebuilt encoder instead
+    """The map loop assembles its JSON columns (outputs list, logs,
+    errors) from literal fragments + a prebuilt encoder instead
     of per-call ``json.dumps(..., ensure_ascii=False)`` — r11 perf.  Pin
     byte-parity against the reference dumps formulation on awkward values
     (unicode, quotes, newlines, nested tagged forms, Sets, empty and
@@ -460,7 +460,7 @@ for j, w in enumerate(data['ws']):
         # hostile shapes for the JVM-side envelope escape: backslashes,
         # quote/backslash runs, control chars INSIDE values (escaped by the
         # inner dumps) and a control char + quote in the record id itself
-        # (ships pre-escaped as rid_json/nat_key_json)
+        # (kept out of the envelope; the nat_key column still carries it)
         ("r\x01\"4\\", '{"ws": ["back\\\\slash \\u0007bell",'
                        ' "\\"\\\\\\"run", "tab\\there"]}'),
     ]
@@ -483,16 +483,14 @@ for j, w in enumerate(data['ws']):
             [{"i": o["i"], "k": o["k"], "v": o["v"]} for o in outputs],
             ensure_ascii=False)
         assert row["outputs"] == ref_outputs
-        assert row["rid_json"] == json.dumps(rid, ensure_ascii=False)
-        assert row["nat_key_json"] == json.dumps(natural_pad(rid),
-                                                 ensure_ascii=False)
+        assert row["nat_key"] == natural_pad(rid)
+        for col in ("logs", "errors"):
+            assert row[col] == json.dumps(json.loads(row[col]),
+                                          ensure_ascii=False)
         # the JVM-derived cache envelope must byte-match the dumps form
         # (sorted keys, compact separators — the canonical/hash contract)
         ref_cache = json.dumps({
-            "input_idx": 0, "record_id": rid,
-            "nat_key": natural_pad(rid), "version": 5,
-            "outputs": row["outputs"], "logs": row["logs"],
-            "errors": row["errors"],
+            "version": 5, "logs": row["logs"], "errors": row["errors"],
         }, sort_keys=True, separators=(",", ":"), ensure_ascii=False)
         assert row["value"] == ref_cache
     # content spot-checks: Set emission round-trips, log/error capture
@@ -512,21 +510,19 @@ def test_cache_value_is_canonical():
     """The map phase serializes cache entries with a plain sorted
     ``json.dumps``; the store then hashes them JVM-side assuming the bytes
     are EXACTLY ``canonical_json`` (sha2(value) == object_hash).  Verify the
-    fixpoint claim for the cache-entry shape: fixed identifier keys, str/int
-    values (including awkward strings: unicode, embedded JSON, quotes)."""
+    fixpoint claim for the cache-entry shape — exactly ``errors``, ``logs``
+    and ``version`` — with awkward strings (unicode, embedded JSON,
+    quotes)."""
     import hashlib
     import json
 
     from pigeon_optics_spark.values import canonical_json, object_hash
 
     d = {
-        "input_idx": 3,
-        "record_id": 'we"ird — ユニコード',
-        "nat_key": "a0001",
         "version": 17,
-        "outputs": '[{"i":0,"k":"k","v":"{\\"type\\":\\"Set\\",\\"data\\":[1]}"}]',
-        "logs": '["x y"]',
-        "errors": "[]",
+        "logs": '["x y", "we\\"ird — ユニコード"]',
+        "errors": '[{"type": "ValueError", "message": "{\\"k\\": [1]}", '
+                  '"line": 3}]',
     }
     plain = json.dumps(d, sort_keys=True, separators=(",", ":"),
                        ensure_ascii=False)

@@ -4,19 +4,21 @@ A build's durable writes happen in this order: cache segment -> emit
 segment -> stale floors -> output write -> set_config (cursor advance) ->
 compactions.  The ``_build_inflight`` marker brackets the whole window;
 these tests kill a build at each seam, then assert the next build HEALS:
-the final output collection equals a fresh single build over the final
-input state (the same equivalence the differential harness pins), with
-the non-idempotent count/sum folds in CODE making any double-gather or
-lost-generation visible as a wrong number, not just a missing key.
+it finds the marker, resets the lens (empty compute cache, no emission
+log, no cursor) and runs a first build that re-maps every live input
+record.  The final output collection must equal a fresh single build over
+the final input state (the same equivalence the differential harness
+pins), with the non-idempotent count/sum folds in CODE making any
+double-gather or lost-generation visible as a wrong number, not just a
+missing key.
 
-Each window runs twice: an immediate re-run (fully hash-suppressed cache
-write — the orphaned-segment double-fold case ADVICE r10 flagged) and a
-re-run after extra input churn (partial suppression — the generation
-stamped above its cache row version, which the compaction max-generation
-rule must keep).
+Each window runs twice: an immediate re-run over the doomed build's input
+state, and a re-run after extra input churn.
 """
 
 from __future__ import annotations
+
+import json
 
 import pytest
 
@@ -110,8 +112,7 @@ def test_incremental_crash_heals(spark, tmp_path, monkeypatch, window,
                                  churn_between, plan):
     """The doomed build's two-record delta takes the one-job small-delta
     plan (driver-side writers) unless ``plan`` forces the Spark plan; the
-    healing re-run always takes the Spark plan (a heal is excluded from
-    the small one)."""
+    healing re-run is a first build, which always takes the Spark plan."""
     if plan == "spark":
         monkeypatch.setattr(lens_mod, "AFFECTED_COLLECT_MAX", 0)
     tag = f"{window}-{churn_between}-{plan}"
@@ -147,18 +148,23 @@ def test_incremental_crash_heals(spark, tmp_path, monkeypatch, window,
     spark.catalog.clearCache()  # the dead build's persists
 
     # marker must have survived the crash — that IS the detection signal
-    from pigeon_optics_spark.lens import (_emit_dir,
+    from pigeon_optics_spark.lens import (_cache_name, _emit_dir,
                                           _inflight_marker_present)
     assert _inflight_marker_present(_emit_dir(inc, "a", "l"))
 
     if churn_between:
-        # extra churn before the re-run: the healing build's cache write
-        # is only PARTIALLY suppressed, so its re-emissions get stamped
-        # above the suppressed rows' cache versions (max-gen rule path)
-        put("r5", ["fox"])
+        put("r5", ["fox"])  # extra churn the healing re-run must also see
 
-    build_lens(spark, inc, "a", "l")  # the healing re-run
+    stats = build_lens(spark, inc, "a", "l")  # the healing re-run
     assert not _inflight_marker_present(_emit_dir(inc, "a", "l"))
+    # the heal re-maps every live input record …
+    assert stats["mapped"] == len(live)
+    # … and the cache keeps only the input version and the captured
+    # logs/errors (the emissions live once, in the emission log)
+    cache = inc._state(inc.get_meta("a", _cache_name("l"), source="meta"))
+    assert len(cache) == len(live)
+    for row in cache.values():
+        assert set(json.loads(row["value"])) == {"errors", "logs", "version"}
     want = _fresh_reference(spark, tmp_path, tag, live)
     got = _outputs(inc, "l")
     assert got == want, {
@@ -180,10 +186,12 @@ def test_incremental_crash_heals(spark, tmp_path, monkeypatch, window,
 
 @pytest.mark.parametrize("window", ["pre_emit", "pre_output"])
 def test_first_build_crash_heals(spark, tmp_path, monkeypatch, window):
-    """A FIRST build dying after its cache write is the nastiest case: the
-    full-diff freshness branch uses the cache itself as its cursor, so the
-    re-run sees nothing fresh — only the inflight-marker heal can rebuild
-    the output (this was a silent permanent-empty-output hole before r11)."""
+    """A FIRST build dying after its cache write is the nastiest case: it
+    leaves cache rows but no cursor, and the full-diff freshness branch
+    uses the cache itself as its cursor, so a plain re-run would see
+    nothing fresh — only the inflight marker triggers the reset that
+    rebuilds the output (a silent permanent-empty-output hole before
+    r11)."""
     tag = f"first-{window}"
     inc = DatasetStore(str(tmp_path / f"inc-{tag}"))
     inc.create("a", "d")
@@ -210,7 +218,7 @@ def test_first_build_crash_heals(spark, tmp_path, monkeypatch, window):
 
 def test_double_crash_then_heal(spark, tmp_path, monkeypatch):
     """The healing build itself dying (marker re-armed) must leave the
-    store healable by the NEXT build — the heal is idempotent."""
+    store healable by the NEXT build — the reset is idempotent."""
     inc = DatasetStore(str(tmp_path / "inc-double"))
     inc.create("a", "d")
     create_lens(inc, "a", "l", inputs=["/datasets/a:d"], code=CODE)

@@ -127,9 +127,10 @@ def _assert_equals_fresh(spark, tmp_path, inc, live, code=CODE):
 def test_lost_emission_log_is_regenerated(spark, tmp_path, monkeypatch,
                                           plan):
     """A built lens whose emission log is gone (its dir deleted between
-    builds) regenerates the log from the compute cache at the next build,
-    and the contributions of the records that build leaves untouched
-    survive: folding against an empty log would drop them."""
+    builds) is reset at the next build, which re-maps every live input
+    record and so regenerates the log; the contributions of the records
+    the update leaves untouched survive (folding against an empty log
+    would drop them)."""
     import shutil
 
     from pigeon_optics_spark.lens import _emit_dir, _emit_segments
@@ -163,8 +164,10 @@ def test_empty_first_build_then_update(spark, tmp_path, monkeypatch, plan,
                                        first):
     """A first build that emits nothing — over an empty dataset, or over
     records whose map emits nothing — still leaves an emission segment
-    (so no later build mistakes the log for lost), and updates that do
-    emit then rebuild exactly."""
+    (so no later build mistakes the log for lost) and a cursor, so the
+    updates are incremental builds (under ``plan=small``, each takes the
+    one-job small-delta plan) that then rebuild exactly."""
+    import pigeon_optics_spark.lens as lens_mod
     from pigeon_optics_spark.lens import _emit_segments
 
     code = "for tag in data.get('tags', []):\n    output(tag, 1)\n"
@@ -180,10 +183,19 @@ def test_empty_first_build_then_update(spark, tmp_path, monkeypatch, plan,
     assert _outputs(inc, "l") == {}
     assert _emit_segments(inc, "a", "l")
 
+    calls = []
+    orig = lens_mod._small_delta_build
+
+    def spy(*a, **k):
+        calls.append(1)
+        return orig(*a, **k)
+
+    monkeypatch.setattr(lens_mod, "_small_delta_build", spy)
     for rid, v in (("r3", {"tags": ["x", "y"]}), ("r1", {"tags": ["x"]})):
         live[rid] = v
         inc.write("a", "d", rid, v)
         build_lens(spark, inc, "a", "l")
+    assert len(calls) == (2 if plan == "small" else 0)
     _assert_equals_fresh(spark, tmp_path, inc, live, code=code)
 
 

@@ -1,13 +1,9 @@
-"""Shared harness for REAL Structured Streaming gates (r6, VERDICT r5
-item 4).
+"""The one harness every Structured Streaming gate runs through.
 
-The 22 streaming gates that predate this module each carry their own
-scaffold — those are driver-row-pinned and deliberately NOT migrated (the
-r5 wave-14b udfs incident showed a late-round cross-cutting refactor can
-red dozens of pinned gates at once).  Every streaming gate added from r6
-on uses this harness instead of re-inlining the pattern.
-
-The pattern it packages (evolved across the 22 existing runs):
+Each ``events_stream_*`` gate builds its streaming DataFrame and hands it
+to ``run_to_memory``, the single start → await → guard path; no other
+package module names a memory sink (``tests/test_temp_dirs.py`` pins
+that).  What the harness packages:
 
 1. **Forced multi-batch sources** — a source directory written as N
    sequential single-file appends (strictly increasing mtimes), streamed
@@ -15,19 +11,25 @@ The pattern it packages (evolved across the 22 existing runs):
    micro-batches.  Time-quartile slicing makes every keyed fold cross a
    batch boundary mid-stream; a doubled source makes at-least-once
    delivery real for dedup gates.
-2. **Collapse guard** — a run that coalesces into fewer data batches than
-   the source promises (maxFilesPerTrigger ignored, files merged) must
-   FAIL loudly, never silently green a degenerate single-batch run.
-3. **Scoped shuffle partitions** — stateful operators initialize one
-   state store per shuffle partition per operator; 32 partitions cost
-   ~100 s of local store init for a 10k-row fixture
-   (events_stream_stream_join lesson), so runs scope
-   ``spark.sql.shuffle.partitions`` down around the query and restore it.
+2. **Collapse guard** — every run states how many non-empty micro-batches
+   its source promises; a run that coalesces into fewer (maxFilesPerTrigger
+   ignored, files merged) FAILS loudly instead of greening a degenerate
+   single-batch run.
+3. **Scoped conf** — ``scoped_conf`` sets keys around a block and
+   restores them afterwards, unsetting keys that were unset before.
+   Stateful operators initialize one state store per shuffle partition
+   per operator; 32 partitions cost ~100 s of local store init for a
+   10k-row fixture (events_stream_stream_join lesson), so every run is
+   scoped to 4 shuffle partitions.
 4. **Memory-sink naming** — unique query names per run (re-registration
    under one Spark session would silently read a stale table).
+5. **Temp dirs** — every source and checkpoint directory comes from
+   ``tracked_mkdtemp`` and is removed when the process exits.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -115,42 +117,47 @@ def doubled_source(df: DataFrame, cache_key: tuple | None = None) -> str:
 
 
 def read_file_stream(spark: SparkSession, src_dir: str,
-                     files_per_trigger: int = 1) -> DataFrame:
-    """readStream over a directory written by the builders above, with
-    the schema inferred from a batch read (file sources need an explicit
-    schema)."""
-    schema = spark.read.parquet(src_dir).schema
-    return (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", files_per_trigger)
-            .parquet(src_dir))
+                     files_per_trigger: int | None = 1) -> DataFrame:
+    """readStream over a parquet source directory, with the schema
+    inferred from a batch read (file sources need an explicit schema).
+    ``files_per_trigger=None`` reads every file in one trigger."""
+    reader = spark.readStream.schema(spark.read.parquet(src_dir).schema)
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+    return reader.parquet(src_dir)
 
 
-class scoped_shuffle_partitions:
-    """Context manager scoping ``spark.sql.shuffle.partitions`` around a
-    stateful streaming run (state-store init is per partition per
-    operator — the events_stream_stream_join lesson)."""
-
-    def __init__(self, spark: SparkSession, n: int = 4):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set the session conf ``conf`` for the block, then restore every key
+    to its previous value — unsetting keys that were unset before, so the
+    session default applies again — even when the block raises."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def run_to_memory(stream_df: DataFrame, *, prefix: str, output_mode: str,
-                  min_data_batches: int,
-                  checkpoint: str | None = None) -> tuple[str, object]:
-    """Start ``stream_df`` → memory sink with ``availableNow``, await
-    termination, enforce the collapse guard, and return (table_name,
-    query).  ``min_data_batches`` is the number of non-empty micro-batches
-    the source construction PROMISES — fewer means the forced batching
-    degenerated and the gate must fail, not green."""
+                  min_data_batches: int) -> DataFrame:
+    """Run ``stream_df`` → memory sink with ``availableNow``, await
+    termination, enforce the collapse guard, and return the sink table.
+
+    ``min_data_batches`` is the number of non-empty micro-batches the
+    source construction PROMISES — fewer means the forced batching
+    degenerated and the gate must fail, not green.
+
+    The query runs under 4 shuffle partitions.  That is safe only because
+    every run starts from a FRESH checkpoint made here: a checkpoint
+    records its shuffle partition count and a restarted query keeps it,
+    so a reused one would bind its state stores to a stale count."""
     if min_data_batches > 90:
         # recentProgress retains only the last
         # spark.sql.streaming.numRecentProgressUpdates entries (default
@@ -158,17 +165,18 @@ def run_to_memory(stream_df: DataFrame, *, prefix: str, output_mode: str,
         raise ValueError(
             "min_data_batches > 90 cannot be verified via recentProgress; "
             "use fewer/larger source files or a StreamingQueryListener")
+    spark = stream_df.sparkSession
     name = unique_name(prefix)
-    q = (stream_df.writeStream.format("memory").queryName(name)
-         .outputMode(output_mode)
-         .option("checkpointLocation",
-                 checkpoint or _tracked_mkdtemp("po_stream_ck_"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+        q = (stream_df.writeStream.format("memory").queryName(name)
+             .outputMode(output_mode)
+             .option("checkpointLocation", _tracked_mkdtemp("po_stream_ck_"))
+             .trigger(availableNow=True)
+             .start())
+        q.awaitTermination()
     data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
     if data_batches < min_data_batches:
         raise AssertionError(
             f"stream collapsed to {data_batches} data batches; expected "
             f">= {min_data_batches} (one per forced source file)")
-    return name, q
+    return spark.table(name)

@@ -15,38 +15,20 @@ identical, which is the point of Spark's unified model):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import register
-from ._util import davg, dsum, load_events
-
-
-def _start_await_scoped(spark, writer):
-    """Start a memory-sink streaming writer and await it under FOUR
-    shuffle partitions instead of the session's core count.
-
-    Stateful streaming operators initialize one state store per shuffle
-    partition per operator per micro-batch — at 32 partitions the store
-    init dwarfs the fixture-sized data (the r6 harness lesson,
-    _streaming_util.scoped_shuffle_partitions; these pre-r6 scaffolds
-    never adopted it).  r12 measured 3-5x user-cpu per gate (ewma 66->16,
-    timeout_sessions 116->22 cpu-s at sf0.01) at identical results: the
-    partition count is internal placement, the checkpoint is fresh per
-    run, and the conf is scoped so batch plans outside the stream are
-    untouched.
-
-    Precondition: ``writer`` must use a FRESH (empty) checkpoint
-    location.  A checkpoint records its shuffle partition count and a
-    restarted query keeps that count, so reusing one would either bind
-    its state stores to these 4 partitions for good or ignore the scope;
-    every caller today creates a new temp dir per run."""
-    from ._streaming_util import scoped_shuffle_partitions
-
-    with scoped_shuffle_partitions(spark, 4):
-        q = writer.start()
-        q.awaitTermination()
-    return q
+from ._streaming_util import (
+    doubled_source,
+    read_file_stream,
+    run_to_memory,
+    scoped_conf,
+    sliced_source,
+)
+from ._util import davg, dsum, load_events, tracked_mkdtemp
 
 
 def events_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -417,24 +399,84 @@ register("events_retention_cohorts", events_retention_cohorts,
 
 
 # --------------------------------------------------------------------------
-# Structured Streaming under the oracle gate
+# Structured Streaming under the oracle gate.  Every events_stream_* gate
+# builds its stream over one of the sources below and runs it through
+# _streaming_util.run_to_memory, stating the data micro-batches its
+# source promises (the collapse guard).
 # --------------------------------------------------------------------------
 
-_STREAM_SEQ = [0]
-_STREAM_SRC: dict[str, str] = {}
 
-
+@functools.cache
 def _stream_source_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Normalized (nanos→timestamp) events as a file-source directory,
-    written once per process per sf_dir — streaming queries re-read it, they
-    don't re-normalize it."""
-    import tempfile
+    """Normalized (nanos→timestamp) events as an UNSLICED file-source
+    directory, written once per process per sf_dir — for the watermarked
+    join gates, whose emissions depend on how the input is batched."""
+    d = tracked_mkdtemp("po_stream_ev_")
+    load_events(spark, sf_dir).write.mode("overwrite").parquet(d)
+    return d
 
-    if sf_dir not in _STREAM_SRC:
-        d = tempfile.mkdtemp(prefix="po_stream_ev_")
-        load_events(spark, sf_dir).write.mode("overwrite").parquet(d)
-        _STREAM_SRC[sf_dir] = d
-    return _STREAM_SRC[sf_dir]
+
+def _quartile_src(spark: SparkSession, sf_dir: str) -> str:
+    """The four time-quartile parquet files the streaming gates replay as
+    FORCED ordered micro-batches (sequential single-file appends =>
+    strictly increasing mtimes => the file source replays oldest-first),
+    built once per sf_dir."""
+    ev = load_events(spark, sf_dir).select(
+        "ts", "event_id", "user_id", "value", "event_type")
+    return sliced_source(ev, F.unix_micros("ts"), 4,
+                         cache_key=("quartile", sf_dir))
+
+
+def _quartile_slices(ev: DataFrame) -> tuple[list, list[DataFrame]]:
+    """``ev``'s time-quartile cuts (unix micros) and its four slices — the
+    split ``_quartile_src`` writes — for the sources that plant extra rows
+    into chosen slices."""
+    qs = ev.agg(F.expr(
+        "percentile(unix_micros(ts), array(0.25, 0.5, 0.75))")).first()[0]
+    us, cut = F.unix_micros("ts"), [F.lit(int(q)) for q in qs]
+    return qs, [ev.where(us <= cut[0]),
+                ev.where((us > cut[0]) & (us <= cut[1])),
+                ev.where((us > cut[1]) & (us <= cut[2])),
+                ev.where(us > cut[2])]
+
+
+def _keyed_fold_stream(stream: DataFrame, prefix: str, step, init: tuple,
+                       state_cols: str, out_cols: str | None = None,
+                       emit=None, key: str = "user_id long") -> DataFrame:
+    """Run an ordered per-key fold as ``applyInPandasWithState`` (update
+    mode) over a forced 4-batch stream.
+
+    ``step(state, rows)`` folds one micro-batch's rows of a key, sorted by
+    (ts, event_id) — the batch twins' total order — into the state tuple
+    (``init`` first, declared by ``state_cols``); each touched key then
+    emits ``emit(state)`` as ``out_cols`` (default: the state itself).
+    Returns each key's LAST emission as struct column ``s``: the struct-max
+    over ``out_cols``, whose first field must strictly increase per
+    emission — so the reduction is batching-independent."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    key_name = key.split()[0]
+    emit = emit or (lambda st: st)
+    out_cols = out_cols or state_cols
+    names = [c.split()[0] for c in out_cols.split(",")]
+
+    def fold(k, pdfs, state):
+        st = state.get if state.exists else init
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if chunks:
+            st = step(st, pd.concat(chunks, ignore_index=True)
+                      .sort_values(["ts", "event_id"]))
+        state.update(st)
+        yield pd.DataFrame([(k[0], *emit(st))], columns=[key_name, *names])
+
+    folded = stream.groupBy(key_name).applyInPandasWithState(
+        fold, outputStructType=f"{key}, {out_cols}",
+        stateStructType=state_cols, outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout)
+    out = run_to_memory(folded, prefix=prefix, output_mode="update",
+                        min_data_batches=4)
+    return out.groupBy(key_name).agg(F.max(F.struct(*names)).alias("s"))
 
 
 def events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -444,33 +486,22 @@ def events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     must converge to exactly the batch/oracle answer (Spark's unified-model
     guarantee, which this entry turns into a gate check).
 
-    The events fixture is normalized (nanos→timestamp) into a file-source
-    dir once per process; complete output mode keeps every window in the
-    sink so the final table equals the batch aggregation regardless of how
-    availableNow slices micro-batches.  Decimal sums (dsum) keep the
-    value-hash engine-independent, same as the batch twin.
+    The source is the four time-quartile files, so windows straddling a
+    quartile boundary merge state across micro-batches; complete output
+    mode keeps every window in the sink so the final table equals the
+    batch aggregation regardless of how the input is sliced.  Decimal sums
+    (dsum) keep the value-hash engine-independent, same as the batch twin.
     """
-    import tempfile
-
-    d = _stream_source_dir(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_tumbling_{_STREAM_SEQ[0]}"
     stream = (
-        spark.readStream.schema(schema).parquet(d)
+        read_file_stream(spark, _quartile_src(spark, sf_dir))
         .groupBy(F.window("ts", "15 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"),
              F.expr(dsum("value", "total_value", 8)).alias("total_value"))
     )
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("complete")
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    return spark.table(name).select(
-        F.col("w.start").alias("window_start"), "event_type",
-        "n_events", "total_value")
+    out = run_to_memory(stream, prefix="po_stream_tumbling",
+                        output_mode="complete", min_data_batches=4)
+    return out.select(F.col("w.start").alias("window_start"), "event_type",
+                      "n_events", "total_value")
 
 
 _STREAM_TUMBLING_ORACLE = f"""
@@ -487,55 +518,26 @@ register("events_stream_tumbling", events_stream_tumbling,
 
 def events_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator under the oracle gate: a running
-    per-event-type (count, max value) carried in ``GroupState`` across
-    micro-batches via ``applyInPandasWithState`` — the engine's arbitrary-
-    stateful surface (SURVEY §2.9), previously pytest-only.
+    per-event-type (count, max value) carried in ``GroupState`` across the
+    four time-quartile micro-batches via ``applyInPandasWithState`` — the
+    engine's arbitrary-stateful surface (SURVEY §2.9), previously
+    pytest-only.
 
     Update mode emits one row per key per touched batch; the final
     projection takes the struct-max per key, and since the running count is
     strictly increasing that selects each key's LAST emission — equal to
-    the batch aggregate no matter how availableNow slices the input.
+    the batch aggregate no matter how the input is sliced.
     """
-    import tempfile
+    def step(st, rows):
+        n, max_val = st
+        m = float(rows["value"].max())
+        return n + len(rows), m if max_val is None else max(max_val, m)
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    d = _stream_source_dir(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-
-    def track(key, pdfs, state: GroupState):
-        total, max_val = state.get if state.exists else (0, None)
-        for pdf in pdfs:
-            total += len(pdf)
-            if len(pdf):
-                m = float(pdf["value"].max())
-                max_val = m if max_val is None else max(max_val, m)
-        state.update((total, max_val))
-        yield pd.DataFrame({"event_type": [key[0]], "n_events": [total],
-                            "max_value": [max_val]})
-
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_stateful_{_STREAM_SEQ[0]}"
-    stream = (
-        spark.readStream.schema(schema).parquet(d)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            track,
-            outputStructType="event_type string, n_events long, max_value double",
-            stateStructType="n_events long, max_value double",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    )
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("update")
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    final = F.max(F.struct("n_events", "max_value")).alias("s")
-    return (spark.table(name).groupBy("event_type").agg(final)
-            .select("event_type", F.col("s.n_events").alias("n_events"),
-                    F.col("s.max_value").alias("max_value")))
+    return (_keyed_fold_stream(
+        read_file_stream(spark, _quartile_src(spark, sf_dir)),
+        "po_stream_stateful", step, (0, None),
+        "n_events long, max_value double", key="event_type string")
+        .select("event_type", "s.n_events", "s.max_value"))
 
 
 _STREAM_STATEFUL_ORACLE = """
@@ -547,20 +549,25 @@ register("events_stream_stateful", events_stream_stateful,
          _STREAM_STATEFUL_ORACLE)
 
 
-_STREAM_DUP_SRC: dict[str, str] = {}
+def _doubled_events_src(spark: SparkSession, sf_dir: str) -> str:
+    """Every event written TWICE (two single-file appends, two forced
+    micro-batches) — the at-least-once fixture of the dedup gates."""
+    return doubled_source(load_events(spark, sf_dir),
+                          cache_key=("events", sf_dir))
 
 
 def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming EXACT DEDUP under the oracle gate — the ingest-time shape
     of a training-data pipeline (drop repeats as the firehose arrives, not
     in a later batch pass): the file source carries every event TWICE (two
-    parquet copies), an actual Structured Streaming query deduplicates on
-    ``event_id`` with keyed state (``dropDuplicates``), and the sink must
-    reduce back to exactly the original corpus no matter how availableNow
-    slices micro-batches (first-seen wins; copies are byte-identical so
-    the choice is immaterial).  The gate aggregates the deduped sink
-    batch-side; the oracle aggregates the ORIGINAL events — equality
-    proves the stream removed precisely the injected duplicates.
+    parquet copies, replayed as two micro-batches), an actual Structured
+    Streaming query deduplicates on ``event_id`` with keyed state
+    (``dropDuplicates``), and the sink must reduce back to exactly the
+    original corpus — the second copy meets the first one's state (first-seen
+    wins; copies are byte-identical so the choice is immaterial).  The gate
+    aggregates the deduped sink batch-side; the oracle aggregates the
+    ORIGINAL events — equality proves the stream removed precisely the
+    injected duplicates.
 
     At scale the unbounded keyed state is the documented cost of exact
     streaming dedup; the watermark-bounded variant
@@ -569,27 +576,11 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate-able one — the production variant runs for real (with observed
     state eviction) in
     ``tests/test_streaming_events.py::test_watermarked_stream_dedup_bounds_state``."""
-    import tempfile
-
-    if sf_dir not in _STREAM_DUP_SRC:
-        d = tempfile.mkdtemp(prefix="po_stream_dup_")
-        ev = load_events(spark, sf_dir)
-        ev.write.mode("overwrite").parquet(d)
-        ev.write.mode("append").parquet(d)  # the duplicate copy
-        _STREAM_DUP_SRC[sf_dir] = d
-    d = _STREAM_DUP_SRC[sf_dir]
-    schema = spark.read.parquet(d).schema
-
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_dedup_{_STREAM_SEQ[0]}"
-    stream = (spark.readStream.schema(schema).parquet(d)
+    stream = (read_file_stream(spark, _doubled_events_src(spark, sf_dir))
               .dropDuplicates(["event_id"]))
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    return (spark.table(name).groupBy("event_type")
+    out = run_to_memory(stream, prefix="po_stream_dedup",
+                        output_mode="append", min_data_batches=2)
+    return (out.groupBy("event_type")
             .agg(F.count("*").alias("n_events"),
                  F.expr(dsum("value", "total_value", 8)).alias("total_value")))
 
@@ -776,30 +767,22 @@ def events_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink, availableNow) — the 4th real streaming gate, covering the one
     window type (dynamic-gap sessions) the other streaming entries don't.
 
+    The source is the four time-quartile files, so sessions that straddle
+    a quartile boundary merge across micro-batches in the state store.
     Complete output mode keeps every session in the sink so the result is
     batching-independent and equals the batch lag/cumsum sessionization
     (events_sessionize's idiom): a session's end is its last event
     + the 30-minute gap.  The oracle reproduces exactly that from the
     batch side — Spark's unified-model guarantee as a value-hash check.
     """
-    import tempfile
-
-    d = _stream_source_dir(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_sessions_{_STREAM_SEQ[0]}"
     stream = (
-        spark.readStream.schema(schema).parquet(d)
+        read_file_stream(spark, _quartile_src(spark, sf_dir))
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("complete")
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    return spark.table(name).select(
+    out = run_to_memory(stream, prefix="po_stream_sessions",
+                        output_mode="complete", min_data_batches=4)
+    return out.select(
         "user_id", F.col("w.start").alias("session_start"),
         F.col("w.end").alias("session_end"), "n_events")
 
@@ -994,69 +977,29 @@ def events_stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering (modeled by the quartile files + maxFilesPerTrigger=1); the
     collapse guard raises if the run degenerates to fewer batches.
     """
-    import tempfile
+    def step(st, rows):
+        tok, last, a, dn = st
+        for t in rows["ts"]:
+            t_us = t.value // 1000          # pandas ns -> micros
+            refill = 0 if last == -1 else (t_us - last) >> _RL_SHIFT
+            tok = min(_RL_CAP, tok + refill)
+            if tok >= _RL_COST:
+                tok -= _RL_COST
+                a += 1
+            else:
+                dn += 1
+            last = t_us
+        return tok, last, a, dn
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    d = _ensure_quartile_src(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-
-    def fold(key, pdfs, state: GroupState):
-        tok, last, a, dn = (state.get if state.exists
-                            else (_RL_CAP, -1, 0, 0))
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            rows = (pd.concat(chunks, ignore_index=True)
-                    .sort_values(["ts", "event_id"]))
-            for t in rows["ts"]:
-                t_us = t.value // 1000          # pandas ns -> micros
-                refill = 0 if last == -1 else (t_us - last) >> _RL_SHIFT
-                tok = min(_RL_CAP, tok + refill)
-                if tok >= _RL_COST:
-                    tok -= _RL_COST
-                    a += 1
-                else:
-                    dn += 1
-                last = t_us
-        state.update((tok, last, a, dn))
-        yield pd.DataFrame({
-            "user_id": [key[0]], "n_events": [a + dn],
-            "n_admitted": [a], "n_denied": [dn], "final_tokens": [tok]})
-
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_rl_{_STREAM_SEQ[0]}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(d)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=("user_id long, n_events long, "
-                              "n_admitted long, n_denied long, "
-                              "final_tokens long"),
-            stateStructType=("tok long, last long, a long, d long"),
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    )
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("update")
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    if data_batches < 4:
-        raise AssertionError(
-            f"stream collapsed to {data_batches} data batches; "
-            "expected 4 (one per time-quartile file)")
-    last = F.max(F.struct("n_events", "n_admitted", "n_denied",
-                          "final_tokens")).alias("s")
-    return (spark.table(name).groupBy("user_id").agg(last)
-            .select("user_id", F.col("s.n_events").alias("n_events"),
-                    F.col("s.n_admitted").alias("n_admitted"),
-                    F.col("s.n_denied").alias("n_denied"),
-                    F.col("s.final_tokens").alias("final_tokens")))
+    return (_keyed_fold_stream(
+        read_file_stream(spark, _quartile_src(spark, sf_dir)),
+        "po_stream_rl", step, (_RL_CAP, -1, 0, 0),
+        "tok long, last long, a long, d long",
+        out_cols=("n_events long, n_admitted long, n_denied long, "
+                  "final_tokens long"),
+        emit=lambda st: (st[2] + st[3], st[2], st[3], st[0]))
+        .select("user_id", "s.n_events", "s.n_admitted", "s.n_denied",
+                "s.final_tokens"))
 
 
 register("events_stream_rate_limit", events_stream_rate_limit,
@@ -1131,17 +1074,9 @@ def events_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     every boundary-straddling bar.  Complete mode keeps every bar in the
     sink; the result must equal the batch oracle row-for-row.
     """
-    import tempfile
-
-    d = _ensure_quartile_src(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_ohlc_{_STREAM_SEQ[0]}"
     key = F.struct("ts", "event_id")
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(d)
+        read_file_stream(spark, _quartile_src(spark, sf_dir))
         .groupBy("event_type", F.window("ts", "1 hour").alias("w"))
         .agg(F.min_by("value", key).alias("open"),
              F.max("value").alias("high"),
@@ -1149,18 +1084,9 @@ def events_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.max_by("value", key).alias("close"),
              F.count("*").alias("n_events"),
              F.expr(dsum("value", "volume", 8)).alias("volume")))
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("complete")
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    if data_batches < 4:
-        raise AssertionError(
-            f"stream collapsed to {data_batches} data batches; "
-            "expected 4 (one per time-quartile file)")
-    return spark.table(name).select(
+    out = run_to_memory(stream, prefix="po_stream_ohlc",
+                        output_mode="complete", min_data_batches=4)
+    return out.select(
         "event_type", F.col("w.start").alias("bar_hour"),
         "open", "high", "low", "close", "n_events", "volume")
 
@@ -1371,50 +1297,44 @@ def events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     whenever the micro-batching lands, so the raw pair set is
     batching-independent and equals the batch range join — the oracle is
     the same predicate run batch-side.
+
+    Both sides read the unsliced source in ONE micro-batch: with slicing,
+    watermark-driven state eviction would make the pair set depend on the
+    batch boundaries.  Stream-stream joins keep FOUR state stores per
+    shuffle partition, each paying a multi-second local init — the reason
+    the harness scopes every run to 4 partitions (state parallelism is a
+    cluster-sizing knob, not a semantics one).
     """
-    import tempfile
-
-    d = _stream_source_dir(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_ssj_{_STREAM_SEQ[0]}"
-    views = (spark.readStream.schema(schema).parquet(d)
-             .where(F.col("event_type") == "view")
-             .select("user_id", F.col("event_id").alias("view_id"),
-                     F.col("ts").alias("view_ts"))
-             .withWatermark("view_ts", "1 hour"))
-    clicks = (spark.readStream.schema(schema).parquet(d)
-              .where(F.col("event_type") == "click")
-              .select(F.col("user_id").alias("c_user_id"),
-                      F.col("event_id").alias("click_id"),
-                      F.col("ts").alias("click_ts"))
-              .withWatermark("click_ts", "1 hour"))
+    views, clicks = _view_click_streams(spark, sf_dir)
     joined = views.join(
         clicks,
         (F.col("user_id") == F.col("c_user_id"))
         & (F.col("click_ts") >= F.col("view_ts"))
         & (F.col("click_ts") <= F.col("view_ts") + F.expr("INTERVAL 30 MINUTES")))
-    # stream-stream joins keep FOUR state stores per shuffle partition and
-    # each store pays a multi-second local init: 32 partitions ≈ 100 s of
-    # store loading for a 10k-row fixture.  Scope the partition count down
-    # for this run (state parallelism is a cluster-sizing knob, not a
-    # semantics one — on a real cluster you size it to executors × cores).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (joined.writeStream.format("memory").queryName(name)
-             .outputMode("append")
-             .option("checkpointLocation",
-                     tempfile.mkdtemp(prefix="po_stream_ck_"))
-             .trigger(availableNow=True))
-        q = _start_await_scoped(spark, q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name).select(
+    out = run_to_memory(joined, prefix="po_stream_ssj", output_mode="append",
+                        min_data_batches=1)
+    return out.select(
         "user_id", "view_id", "click_id",
         (F.unix_micros("click_ts") - F.unix_micros("view_ts"))
         .alias("delta_us"))
+
+
+def _view_click_streams(spark: SparkSession, sf_dir: str):
+    """The (views, clicks) watermarked stream pair of the join gates, both
+    over the unsliced source."""
+    d = _stream_source_dir(spark, sf_dir)
+    views = (read_file_stream(spark, d, None)
+             .where(F.col("event_type") == "view")
+             .select("user_id", F.col("event_id").alias("view_id"),
+                     F.col("ts").alias("view_ts"))
+             .withWatermark("view_ts", "1 hour"))
+    clicks = (read_file_stream(spark, d, None)
+              .where(F.col("event_type") == "click")
+              .select(F.col("user_id").alias("c_user_id"),
+                      F.col("event_id").alias("click_id"),
+                      F.col("ts").alias("click_ts"))
+              .withWatermark("click_ts", "1 hour"))
+    return views, clicks
 
 
 _STREAM_SSJ_ORACLE = """
@@ -1678,33 +1598,6 @@ FROM seq
 # registered via the r6 consolidation pack — see end of file
 
 
-_STREAM_EWMA_SRC: dict[str, str] = {}
-
-
-def _ensure_quartile_src(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per sf_dir) the four time-quartile parquet files the
-    streaming state gates replay as FORCED ordered micro-batches
-    (sequential single-file appends => strictly increasing mtimes => the
-    file source replays oldest-first)."""
-    import tempfile
-
-    if sf_dir not in _STREAM_EWMA_SRC:
-        d = tempfile.mkdtemp(prefix="po_stream_ewma_")
-        ev = load_events(spark, sf_dir).select(
-            "ts", "event_id", "user_id", "value", "event_type")
-        qs = ev.agg(F.expr(
-            "percentile(unix_micros(ts), array(0.25, 0.5, 0.75))")).first()[0]
-        lo = F.unix_micros(F.col("ts"))
-        slices = [lo <= F.lit(int(qs[0])),
-                  (lo > F.lit(int(qs[0]))) & (lo <= F.lit(int(qs[1]))),
-                  (lo > F.lit(int(qs[1]))) & (lo <= F.lit(int(qs[2]))),
-                  lo > F.lit(int(qs[2]))]
-        for cond in slices:
-            ev.where(cond).coalesce(1).write.mode("append").parquet(d)
-        _STREAM_EWMA_SRC[sf_dir] = d
-    return _STREAM_EWMA_SRC[sf_dir]
-
-
 def events_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming EWMA with state CONTINUATION across micro-batches — the
     incremental form of ``events_ewma_users``, run as a REAL Structured
@@ -1727,60 +1620,18 @@ def events_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     Kafka per-partition order (keyed by user so a user's events stay in
     one ordered partition).
     """
-    import tempfile
+    def step(st, rows):
+        n, ewma = st
+        for v in rows["value"]:
+            v = float(v)
+            ewma = v if ewma is None else 0.25 * v + 0.75 * ewma
+            n += 1
+        return n, ewma
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    d = _ensure_quartile_src(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-
-    def fold(key, pdfs, state: GroupState):
-        n, ewma = state.get if state.exists else (0, None)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            rows = (pd.concat(chunks, ignore_index=True)
-                    .sort_values(["ts", "event_id"]))
-            for v in rows["value"]:
-                v = float(v)
-                ewma = v if ewma is None else 0.25 * v + 0.75 * ewma
-                n += 1
-        state.update((n, ewma))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                            "ewma": [ewma]})
-
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_ewma_{_STREAM_SEQ[0]}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(d)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fold,
-            outputStructType="user_id long, n_events long, ewma double",
-            stateStructType="n_events long, ewma double",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    )
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("update")
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    # the point of this gate is CROSS-BATCH state continuation: if the
-    # source ever collapses into a single micro-batch (maxFilesPerTrigger
-    # ignored / files coalesced), fail loudly instead of green-lighting a
-    # degenerate run
-    data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    if data_batches < 4:
-        raise AssertionError(
-            f"stream collapsed to {data_batches} data batches; "
-            "expected 4 (one per time-quartile file)")
-    last = F.max(F.struct("n_events", "ewma")).alias("s")
-    return (spark.table(name).groupBy("user_id").agg(last)
-            .select("user_id", F.col("s.n_events").alias("n_events"),
-                    F.col("s.ewma").alias("ewma")))
+    return (_keyed_fold_stream(
+        read_file_stream(spark, _quartile_src(spark, sf_dir)),
+        "po_stream_ewma", step, (0, None), "n_events long, ewma double")
+        .select("user_id", "s.n_events", "s.ewma"))
 
 
 register("events_stream_ewma", events_stream_ewma, _EWMA_ORACLE)
@@ -2187,61 +2038,22 @@ def events_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (long, double, long) per user; Kafka per-partition order (user-keyed)
     supplies the within-key ordering the quartile files model here.
     """
-    import tempfile
+    def step(st, rows):
+        n, s, alarms = st
+        for v in rows["value"]:
+            t = max(0.0, s + (float(v) - 55.25))
+            if t > 250.5:
+                s, alarms = 0.0, alarms + 1
+            else:
+                s = t
+            n += 1
+        return n, s, alarms
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    d = _ensure_quartile_src(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-
-    def fold(key, pdfs, state: GroupState):
-        n, s, alarms = state.get if state.exists else (0, 0.0, 0)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            rows = (pd.concat(chunks, ignore_index=True)
-                    .sort_values(["ts", "event_id"]))
-            for v in rows["value"]:
-                t = max(0.0, s + (float(v) - 55.25))
-                if t > 250.5:
-                    s, alarms = 0.0, alarms + 1
-                else:
-                    s = t
-                n += 1
-        state.update((n, s, alarms))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                            "final_s": [s], "n_alarms": [alarms]})
-
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_cusum_{_STREAM_SEQ[0]}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(d)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=("user_id long, n_events long, "
-                              "final_s double, n_alarms long"),
-            stateStructType="n_events long, final_s double, n_alarms long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    )
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("update")
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    if data_batches < 4:
-        raise AssertionError(
-            f"stream collapsed to {data_batches} data batches; "
-            "expected 4 (one per time-quartile file)")
-    last = F.max(F.struct("n_events", "final_s", "n_alarms")).alias("s")
-    return (spark.table(name).groupBy("user_id").agg(last)
-            .select("user_id", F.col("s.n_events").alias("n_events"),
-                    F.col("s.n_alarms").alias("n_alarms"),
-                    F.col("s.final_s").alias("final_s")))
+    return (_keyed_fold_stream(
+        read_file_stream(spark, _quartile_src(spark, sf_dir)),
+        "po_stream_cusum", step, (0, 0.0, 0),
+        "n_events long, final_s double, n_alarms long")
+        .select("user_id", "s.n_events", "s.n_alarms", "s.final_s"))
 
 
 register("events_stream_cusum", events_stream_cusum, _CUSUM_ORACLE)
@@ -2318,20 +2130,12 @@ FROM dau d LEFT JOIN news n USING (day)
 # late/admitted (quartile geometry is driver-owned and can change).
 # --------------------------------------------------------------------------
 
-_STREAM_LATE_SRC: dict[str, str] = {}
-
-
+@functools.cache
 def _ensure_late_src(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
-    if sf_dir in _STREAM_LATE_SRC:
-        return _STREAM_LATE_SRC[sf_dir]
-    d = tempfile.mkdtemp(prefix="po_stream_late_")
+    d = tracked_mkdtemp("po_stream_late_")
     ev = load_events(spark, sf_dir).select(
         "ts", "event_id", "user_id", "value")
-    qs = ev.agg(F.expr(
-        "percentile(unix_micros(ts), array(0.25, 0.5, 0.75))")).first()[0]
-    lo = F.unix_micros(F.col("ts"))
+    qs, parts = _quartile_slices(ev)
     ranked = ev.withColumn(
         "_rn", F.row_number().over(Window.orderBy("ts", "event_id"))) \
         .withColumn("_n", F.count("*").over(Window.partitionBy()))
@@ -2355,42 +2159,21 @@ def _ensure_late_src(spark: SparkSession, sf_dir: str) -> str:
         raise AssertionError("admitted plants fall behind batch-4 watermark")
     if not adm[1] + _dt.timedelta(minutes=45) < bounds[1] - _dt.timedelta(minutes=30):
         raise AssertionError("admitted plants' windows not closed by final wm")
-    slices = [lo <= F.lit(int(qs[0])),
-              (lo > F.lit(int(qs[0]))) & (lo <= F.lit(int(qs[1]))),
-              (lo > F.lit(int(qs[1]))) & (lo <= F.lit(int(qs[2])))]
-    for cond in slices:
-        ev.where(cond).coalesce(1).write.mode("append").parquet(d)
-    (ev.where(lo > F.lit(int(qs[2]))).unionByName(late20).unionByName(adm20)
-     .coalesce(1).write.mode("append").parquet(d))
-    _STREAM_LATE_SRC[sf_dir] = d
+    parts[3] = parts[3].unionByName(late20).unionByName(adm20)
+    for p in parts:
+        p.coalesce(1).write.mode("append").parquet(d)
     return d
 
 
 def events_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    d = _ensure_late_src(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_late_{_STREAM_SEQ[0]}"
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(d)
+        read_file_stream(spark, _ensure_late_src(spark, sf_dir))
         .withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "15 minutes").alias("w"))
         .agg(F.count("*").alias("n_events")))
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    if data_batches < 4:
-        raise AssertionError(
-            f"stream collapsed to {data_batches} data batches; expected 4")
-    return spark.table(name).select(
-        F.col("w.start").alias("window_start"), "n_events")
+    out = run_to_memory(stream, prefix="po_stream_late",
+                        output_mode="append", min_data_batches=4)
+    return out.select(F.col("w.start").alias("window_start"), "n_events")
 
 
 _STREAM_LATE_ORACLE = """
@@ -2488,21 +2271,14 @@ GROUP BY event_type
 #     deduped pair survives (copies differ only in ts).
 # --------------------------------------------------------------------------
 
-_STREAM_WMDUP_SRC: dict[str, str] = {}
-
-
+@functools.cache
 def _ensure_wmdup_src(spark: SparkSession, sf_dir: str) -> str:
     import datetime as _dt
-    import tempfile
 
-    if sf_dir in _STREAM_WMDUP_SRC:
-        return _STREAM_WMDUP_SRC[sf_dir]
-    d = tempfile.mkdtemp(prefix="po_stream_wmdup_")
+    d = tracked_mkdtemp("po_stream_wmdup_")
     ev = load_events(spark, sf_dir).select(
         "ts", "event_id", "user_id", "event_type", "value")
-    qs = ev.agg(F.expr(
-        "percentile(unix_micros(ts), array(0.25, 0.5, 0.75))")).first()[0]
-    lo = F.unix_micros(F.col("ts"))
+    qs, parts = _quartile_slices(ev)
     ranked = ev.withColumn(
         "_rn", F.row_number().over(Window.orderBy("ts", "event_id")))
     near20 = (ranked.where((F.col("_rn") > 100) & (F.col("_rn") <= 120))
@@ -2522,41 +2298,21 @@ def _ensure_wmdup_src(spark: SparkSession, sf_dir: str) -> str:
         raise AssertionError("far replays would be dropped as late input")
     if not orig_hi + _dt.timedelta(minutes=10) < q3 - _dt.timedelta(minutes=10):
         raise AssertionError("far replays' original state not provably evicted")
-    parts = [
-        ev.where(lo <= F.lit(int(qs[0]))).unionByName(near20),
-        ev.where((lo > F.lit(int(qs[0]))) & (lo <= F.lit(int(qs[1])))),
-        ev.where((lo > F.lit(int(qs[1]))) & (lo <= F.lit(int(qs[2])))),
-        ev.where(lo > F.lit(int(qs[2]))).unionByName(far20),
-    ]
+    parts[0] = parts[0].unionByName(near20)
+    parts[3] = parts[3].unionByName(far20)
     for p in parts:
         p.coalesce(1).write.mode("append").parquet(d)
-    _STREAM_WMDUP_SRC[sf_dir] = d
     return d
 
 
 def events_stream_dedup_watermark(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    import tempfile
-
-    d = _ensure_wmdup_src(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_wmdup_{_STREAM_SEQ[0]}"
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(d)
+    stream = (read_file_stream(spark, _ensure_wmdup_src(spark, sf_dir))
               .withWatermark("ts", "10 minutes")
               .dropDuplicatesWithinWatermark(["event_id"]))
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    if data_batches < 4:
-        raise AssertionError(
-            f"stream collapsed to {data_batches} data batches; expected 4")
-    return (spark.table(name).groupBy("event_type")
+    out = run_to_memory(stream, prefix="po_stream_wmdup",
+                        output_mode="append", min_data_batches=4)
+    return (out.groupBy("event_type")
             .agg(F.count("*").alias("n_events"),
                  F.expr(dsum("value", "total_value", 8)).alias("total_value")))
 
@@ -2709,31 +2465,23 @@ def events_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch twin.  Events whose user has no customer row would drop (inner
     join semantics); the fixture's user ids are a subset of customer keys
     at every SF, so the gate's row count also pins that no row leaks.
+    The source is the four time-quartile files: each micro-batch probes
+    the dimension on its own.
     """
-    import tempfile
-
     from ._util import load
 
-    d = _stream_source_dir(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
     dim = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment")
-
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_static_{_STREAM_SEQ[0]}"
     stream = (
-        spark.readStream.schema(schema).parquet(d)
+        read_file_stream(spark, _quartile_src(spark, sf_dir))
         .join(F.broadcast(dim), "user_id")
         .groupBy(F.window("ts", "1 day").alias("w"), "c_mktsegment")
         .agg(F.count("*").alias("n_events"),
              F.expr(dsum("value", "total_value", 8)).alias("total_value"))
     )
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("complete")
-         .option("checkpointLocation", tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    return spark.table(name).select(
+    out = run_to_memory(stream, prefix="po_stream_static",
+                        output_mode="complete", min_data_batches=4)
+    return out.select(
         F.col("w.start").alias("window_start"), "c_mktsegment",
         "n_events", "total_value")
 
@@ -2948,65 +2696,25 @@ def events_stream_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate single-batch run.  The batch/stream operator pairs now:
     EWMA, sessionization, dedup, CUSUM, Holt.
     """
-    import tempfile
+    def step(st, rows):
+        n, lvl, trend = st
+        for v in rows["value"]:
+            v = float(v)
+            if lvl is None:
+                lvl, trend = v, 0.0
+            else:
+                l_new = 0.25 * v + 0.75 * (lvl + trend)
+                trend = 0.5 * (l_new - lvl) + 0.5 * trend
+                lvl = l_new
+            n += 1
+        return n, lvl, trend
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    d = _ensure_quartile_src(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-
-    def fold(key, pdfs, state: GroupState):
-        n, lvl, trend = state.get if state.exists else (0, None, 0.0)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            rows = (pd.concat(chunks, ignore_index=True)
-                    .sort_values(["ts", "event_id"]))
-            for v in rows["value"]:
-                v = float(v)
-                if lvl is None:
-                    lvl, trend = v, 0.0
-                else:
-                    l_new = 0.25 * v + 0.75 * (lvl + trend)
-                    trend = 0.5 * (l_new - lvl) + 0.5 * trend
-                    lvl = l_new
-                n += 1
-        state.update((n, lvl, trend))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                            "level": [lvl], "trend": [trend]})
-
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_holt_{_STREAM_SEQ[0]}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(d)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=("user_id long, n_events long, "
-                              "level double, trend double"),
-            stateStructType="n_events long, level double, trend double",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    )
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("update")
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    if data_batches < 4:
-        raise AssertionError(
-            f"stream collapsed to {data_batches} data batches; "
-            "expected 4 (one per time-quartile file)")
-    last = F.max(F.struct("n_events", "level", "trend")).alias("s")
-    return (spark.table(name).groupBy("user_id").agg(last)
-            .select("user_id", F.col("s.n_events").alias("n_events"),
-                    F.col("s.level").alias("level"),
-                    F.col("s.trend").alias("trend"),
-                    (F.col("s.level") + F.col("s.trend"))
-                    .alias("forecast_1")))
+    return (_keyed_fold_stream(
+        read_file_stream(spark, _quartile_src(spark, sf_dir)),
+        "po_stream_holt", step, (0, None, 0.0),
+        "n_events long, level double, trend double")
+        .select("user_id", "s.n_events", "s.level", "s.trend",
+                (F.col("s.level") + F.col("s.trend")).alias("forecast_1")))
 
 
 register("events_stream_holt", events_stream_holt, _HOLT_ORACLE)
@@ -3126,68 +2834,31 @@ def events_stream_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal to the batch fold (no IEEE subtleties at all).  Batch/stream
     pairs now: EWMA, sessionization, dedup, CUSUM, Holt, CEP.
     """
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    d = _ensure_quartile_src(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-    src = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", 1).parquet(d))
-
-    def fold(key, pdfs, state: GroupState):
-        n, st = state.get if state.exists else (0, 0)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            rows = (pd.concat(chunks, ignore_index=True)
-                    .sort_values(["ts", "event_id"]))
-            for c in rows["c"]:
-                c = int(c)
-                m4 = st - st % 4
-                if c == 1:
-                    st = m4 + 1
-                elif c == 2 and st % 4 == 1:
-                    st = m4 + 2
-                elif c == 3 and st % 4 == 2:
-                    st = m4 + 4
-                else:
-                    st = m4
-                n += 1
-        state.update((n, st))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                            "st": [st]})
+    def step(state, rows):
+        n, st = state
+        for c in rows["c"]:
+            c = int(c)
+            m4 = st - st % 4
+            if c == 1:
+                st = m4 + 1
+            elif c == 2 and st % 4 == 1:
+                st = m4 + 2
+            elif c == 3 and st % 4 == 2:
+                st = m4 + 4
+            else:
+                st = m4
+            n += 1
+        return n, st
 
     code = (F.when(F.col("event_type") == "view", 1)
             .when(F.col("event_type") == "click", 2)
             .when(F.col("event_type") == "purchase", 3)
             .otherwise(0).cast("long"))
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_pattern_{_STREAM_SEQ[0]}"
-    stream = (
-        src.select("user_id", "ts", "event_id", code.alias("c"))
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fold,
-            outputStructType="user_id long, n_events long, st long",
-            stateStructType="n_events long, st long",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    )
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("update")
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    if data_batches < 4:
-        raise AssertionError(
-            f"stream collapsed to {data_batches} data batches; "
-            "expected 4 (one per time-quartile file)")
-    last = F.max(F.struct("n_events", "st")).alias("s")
-    return (spark.table(name).groupBy("user_id").agg(last)
-            .select("user_id", F.col("s.n_events").alias("n_events"),
+    src = (read_file_stream(spark, _quartile_src(spark, sf_dir))
+           .select("user_id", "ts", "event_id", code.alias("c")))
+    return (_keyed_fold_stream(src, "po_stream_pattern", step, (0, 0),
+                               "n_events long, st long")
+            .select("user_id", "s.n_events",
                     F.expr("s.st div 4").alias("n_matches"),
                     (F.col("s.st") % 4).alias("end_phase")))
 
@@ -3276,26 +2947,10 @@ def events_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-click outer row; an engine that drops unmatched views (inner
     semantics) or leaks join state (never emits) reddens the hash.  The
     final watermark is min(max view_ts, max click_ts) − 1 h, mirrored in
-    SQL on the oracle side.
+    SQL on the oracle side.  Like the inner join, it reads the unsliced
+    source in one micro-batch.
     """
-    import tempfile
-
-    d = _stream_source_dir(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_soj_{_STREAM_SEQ[0]}"
-    views = (spark.readStream.schema(schema).parquet(d)
-             .where(F.col("event_type") == "view")
-             .select("user_id", F.col("event_id").alias("view_id"),
-                     F.col("ts").alias("view_ts"))
-             .withWatermark("view_ts", "1 hour"))
-    clicks = (spark.readStream.schema(schema).parquet(d)
-              .where(F.col("event_type") == "click")
-              .select(F.col("user_id").alias("c_user_id"),
-                      F.col("event_id").alias("click_id"),
-                      F.col("ts").alias("click_ts"))
-              .withWatermark("click_ts", "1 hour"))
+    views, clicks = _view_click_streams(spark, sf_dir)
     joined = views.join(
         clicks,
         (F.col("user_id") == F.col("c_user_id"))
@@ -3303,17 +2958,8 @@ def events_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("click_ts") <= F.col("view_ts")
            + F.expr("INTERVAL 30 MINUTES")),
         "left_outer")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (joined.writeStream.format("memory").queryName(name)
-             .outputMode("append")
-             .option("checkpointLocation",
-                     tempfile.mkdtemp(prefix="po_stream_ck_"))
-             .trigger(availableNow=True))
-        q = _start_await_scoped(spark, q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    out = run_to_memory(joined, prefix="po_stream_soj", output_mode="append",
+                        min_data_batches=1)
     # eviction-unambiguous cutoff, computed batch-side (bounded scalars)
     batch = load_events(spark, sf_dir)
     mx = batch.agg(
@@ -3323,8 +2969,7 @@ def events_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.unix_micros("ts"))).alias("mc")).first()
     wm = min(mx["mv"], mx["mc"]) - 3600 * 1_000_000
     cutoff = wm - 1800 * 1_000_000 - 86400 * 1_000_000
-    return (spark.table(name)
-            .where(F.unix_micros("view_ts") <= F.lit(cutoff))
+    return (out.where(F.unix_micros("view_ts") <= F.lit(cutoff))
             .select("user_id", "view_id", "click_id",
                     (F.unix_micros("click_ts") - F.unix_micros("view_ts"))
                     .alias("delta_us")))
@@ -3376,14 +3021,10 @@ def events_stream_timeout_sessions(spark: SparkSession, sf_dir: str) \
     30-minute gap rule, so the oracle is the batch sessionizer grouped
     to (user, session) rows.
     """
-    import tempfile
-
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     gap_us = 1800 * 1_000_000
-    d = _ensure_quartile_src(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
 
     def fold(key, pdfs, state: GroupState):
         out = []
@@ -3414,11 +3055,8 @@ def events_stream_timeout_sessions(spark: SparkSession, sf_dir: str) \
         yield pd.DataFrame(
             out, columns=["user_id", "start_us", "end_us", "n_events"])
 
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_tmo_{_STREAM_SEQ[0]}"
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(d)
+        read_file_stream(spark, _quartile_src(spark, sf_dir))
         .withWatermark("ts", "10 minutes")
         .groupBy("user_id")
         .applyInPandasWithState(
@@ -3429,23 +3067,13 @@ def events_stream_timeout_sessions(spark: SparkSession, sf_dir: str) \
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout)
     )
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("append")
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    if data_batches < 4:
-        raise AssertionError(
-            f"stream collapsed to {data_batches} data batches; "
-            "expected 4 (one per time-quartile file)")
+    sink = run_to_memory(stream, prefix="po_stream_tmo",
+                         output_mode="append", min_data_batches=4)
     ev = load_events(spark, sf_dir)
     q3 = ev.agg(F.expr(
         "percentile(unix_micros(ts), 0.75)")).first()[0]
     cutoff = int(q3) - 600 * 1_000_000 - 86400 * 1_000_000
-    return (spark.table(name)
-            .where(F.col("end_us") <= F.lit(cutoff))
+    return (sink.where(F.col("end_us") <= F.lit(cutoff))
             .select("user_id", "start_us", "end_us", "n_events"))
 
 
@@ -3584,49 +3212,29 @@ register("events_geohash_density", events_geohash_density,
 # slicing (the unified-model guarantee, per-source edition).
 # --------------------------------------------------------------------------
 
-_SPLIT_SRC: dict[str, tuple[str, str]] = {}
-
-
+@functools.cache
 def _ensure_split_src(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import tempfile
-
-    if sf_dir not in _SPLIT_SRC:
-        ev = load_events(spark, sf_dir)
-        d1 = tempfile.mkdtemp(prefix="po_stream_even_")
-        d2 = tempfile.mkdtemp(prefix="po_stream_odd_")
-        # null-safe split: a NULL event_id must land in exactly one
-        # source, not vanish from both (testdata is driver-owned and
-        # changes between rounds)
-        par = F.coalesce(F.col("event_id") % 2, F.lit(0))
-        ev.where(par == 0).repartition(2) \
-            .write.mode("overwrite").parquet(d1)
-        ev.where(par == 1).repartition(2) \
-            .write.mode("overwrite").parquet(d2)
-        _SPLIT_SRC[sf_dir] = (d1, d2)
-    return _SPLIT_SRC[sf_dir]
+    ev = load_events(spark, sf_dir)
+    d1 = tracked_mkdtemp("po_stream_even_")
+    d2 = tracked_mkdtemp("po_stream_odd_")
+    # null-safe split: a NULL event_id must land in exactly one source,
+    # not vanish from both
+    par = F.coalesce(F.col("event_id") % 2, F.lit(0))
+    ev.where(par == 0).repartition(2).write.mode("overwrite").parquet(d1)
+    ev.where(par == 1).repartition(2).write.mode("overwrite").parquet(d2)
+    return d1, d2
 
 
 def events_stream_multi_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     d1, d2 = _ensure_split_src(spark, sf_dir)
-    schema = spark.read.parquet(d1).schema
-    s1 = (spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(d1))
-    s2 = spark.readStream.schema(schema).parquet(d2)
-    agg = (s1.unionByName(s2)
+    agg = (read_file_stream(spark, d1)
+           .unionByName(read_file_stream(spark, d2, None))
            .groupBy(F.window("ts", "30 minutes").alias("w"), "event_type")
            .agg(F.count("*").alias("n_events"),
                 F.expr(dsum("value", "total_value", 8)).alias("total_value")))
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_multisrc_{_STREAM_SEQ[0]}"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete")
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    return spark.table(name).select(
+    out = run_to_memory(agg, prefix="po_stream_multisrc",
+                        output_mode="complete", min_data_batches=2)
+    return out.select(
         F.col("w.start").alias("window_start"), "event_type",
         "n_events", "total_value")
 
@@ -3654,57 +3262,27 @@ register("events_stream_multi_source", events_stream_multi_source,
 # families per partition — under RocksDBStateStoreProvider, and must
 # still converge to the batch oracle over the original corpus: state
 # round-tripping through RocksDB serialization must be semantics-
-# invariant.  The provider conf is read per-query at start; it is set
-# before start() and restored after, so the other 20 runs keep their
-# default-provider evidence.  Shuffle partitions scoped to 4 around the
-# run (the stream-stream-join lesson: 32 partitions x 2 stateful ops of
-# local store init dwarf a 10k-row fixture).
+# invariant.  The provider conf is read per-query at start; scoped_conf
+# sets it around the run and unsets it after, so the other runs keep
+# their default-provider evidence.
 # --------------------------------------------------------------------------
 
 
 def events_stream_rocksdb_state(spark: SparkSession, sf_dir: str) \
         -> DataFrame:
-    import tempfile
-
-    if sf_dir not in _STREAM_DUP_SRC:
-        d = tempfile.mkdtemp(prefix="po_stream_dup_")
-        ev = load_events(spark, sf_dir)
-        ev.write.mode("overwrite").parquet(d)
-        ev.write.mode("append").parquet(d)
-        _STREAM_DUP_SRC[sf_dir] = d
-    d = _STREAM_DUP_SRC[sf_dir]
-    schema = spark.read.parquet(d).schema
-
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_rocksdb_{_STREAM_SEQ[0]}"
-    key = "spark.sql.streaming.stateStore.providerClass"
-    default_provider = ("org.apache.spark.sql.execution.streaming."
-                        "state.HDFSBackedStateStoreProvider")
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = default_provider
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming."
-                        "state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        stream = (spark.readStream.schema(schema).parquet(d)
-                  .dropDuplicates(["event_id"])
-                  .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-                  .agg(F.count("*").alias("n_events"),
-                       F.expr(dsum("value", "total_value", 8))
-                       .alias("total_value")))
-        q = (stream.writeStream.format("memory").queryName(name)
-             .outputMode("complete")
-             .option("checkpointLocation",
-                     tempfile.mkdtemp(prefix="po_stream_ck_"))
-             .trigger(availableNow=True))
-        q = _start_await_scoped(spark, q)
-    finally:
-        spark.conf.set(key, prev or default_provider)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name).select(
+    stream = (read_file_stream(spark, _doubled_events_src(spark, sf_dir))
+              .dropDuplicates(["event_id"])
+              .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+              .agg(F.count("*").alias("n_events"),
+                   F.expr(dsum("value", "total_value", 8))
+                   .alias("total_value")))
+    with scoped_conf(spark, {
+            "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"}):
+        out = run_to_memory(stream, prefix="po_stream_rocksdb",
+                            output_mode="complete", min_data_batches=2)
+    return out.select(
         F.col("w.start").alias("window_start"), "event_type",
         "n_events", "total_value")
 
@@ -3792,66 +3370,28 @@ register("events_time_weighted_avg", events_time_weighted_avg, _TWAP_ORACLE)
 
 def events_stream_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
-    import tempfile
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    def step(st, rows):
+        last_us, last_vg, num, den, gaps = st
+        for ts, v in zip(rows["ts"], rows["value"]):
+            us = int(ts.value // 1000)
+            vg = math.floor(float(v) * 1000)
+            if last_us is not None:
+                dt_s = (us - last_us) // 1_000_000
+                num += last_vg * dt_s
+                den += dt_s
+                gaps += 1
+            last_us, last_vg = us, vg
+        return last_us, last_vg, num, den, gaps
 
-    d = _ensure_quartile_src(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
-
-    def fold(key, pdfs, state: GroupState):
-        last_us, last_vg, num, den, gaps = \
-            state.get if state.exists else (None, None, 0, 0, 0)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            rows = (pd.concat(chunks, ignore_index=True)
-                    .sort_values(["ts", "event_id"]))
-            for ts, v in zip(rows["ts"], rows["value"]):
-                us = int(ts.value // 1000)
-                vg = math.floor(float(v) * 1000)
-                if last_us is not None:
-                    dt_s = (us - last_us) // 1_000_000
-                    num += last_vg * dt_s
-                    den += dt_s
-                    gaps += 1
-                last_us, last_vg = us, vg
-        state.update((last_us, last_vg, num, den, gaps))
-        yield pd.DataFrame({"user_id": [key[0]], "twap_num": [num],
-                            "twap_den": [den], "n_gaps": [gaps]})
-
-    _STREAM_SEQ[0] += 1
-    name = f"po_stream_twap_{_STREAM_SEQ[0]}"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(d)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fold,
-            outputStructType=("user_id long, twap_num long, "
-                              "twap_den long, n_gaps long"),
-            stateStructType=("last_us long, last_vg long, num long, "
-                             "den long, n_gaps long"),
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    )
-    q = (stream.writeStream.format("memory").queryName(name)
-         .outputMode("update")
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="po_stream_ck_"))
-         .trigger(availableNow=True))
-    q = _start_await_scoped(spark, q)
-    data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    if data_batches < 4:
-        raise AssertionError(
-            f"stream collapsed to {data_batches} data batches; "
-            "expected 4 (one per time-quartile file)")
-    last = F.max(F.struct("n_gaps", "twap_num", "twap_den")).alias("s")
-    return (spark.table(name).groupBy("user_id").agg(last)
-            .where(F.col("s.n_gaps") > 0)
-            .select("user_id", F.col("s.twap_num").alias("twap_num"),
-                    F.col("s.twap_den").alias("twap_den"),
-                    F.col("s.n_gaps").alias("n_gaps")))
+    return (_keyed_fold_stream(
+        read_file_stream(spark, _quartile_src(spark, sf_dir)),
+        "po_stream_twap", step, (None, None, 0, 0, 0),
+        "last_us long, last_vg long, num long, den long, n_gaps long",
+        out_cols="n_gaps long, twap_num long, twap_den long",
+        emit=lambda st: (st[4], st[2], st[3]))
+        .where(F.col("s.n_gaps") > 0)
+        .select("user_id", "s.twap_num", "s.twap_den", "s.n_gaps"))
 
 
 register("events_stream_twap", events_stream_twap, _TWAP_ORACLE)

@@ -11,8 +11,6 @@ joins must never degrade to ``CartesianProduct``.
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -34,8 +32,8 @@ def plan_of(df, mode: str = "simple") -> str:
 
 
 @pytest.fixture(scope="module")
-def store(spark):
-    st = DatasetStore(tempfile.mkdtemp(prefix="po_plans_"))
+def store(spark, tmp_path_factory):
+    st = DatasetStore(str(tmp_path_factory.mktemp("plans")))
     st.create("t", "docs")
     st.write_entries("t", "docs", [(f"r{i}", {"n": i}) for i in range(50)])
     return st
@@ -69,13 +67,13 @@ def test_column_pruning_reaches_scan(spark, store):
     assert "links" not in scan_schema
 
 
-def test_join_against_empty_collection_is_eliminated(spark, store):
+def test_join_against_empty_collection_is_eliminated(spark, store, tmp_path):
     """empty_local_df is a local relation: PropagateEmptyRelation must
     delete joins against an empty collection at plan time (a first lens
     build skips its cache-diff join this way)."""
     empty = spark.createDataFrame([], "record_id string, version long")
     # the helper, not createDataFrame: ExistingRDD scans don't fold
-    st2 = DatasetStore(tempfile.mkdtemp(prefix="po_plans2_"))
+    st2 = DatasetStore(str(tmp_path))
     st2.create("t", "nothing")
     cur = store.read_df(spark, "t", "docs")
     cached = st2.read_df(spark, "t", "nothing").select("record_id", "version")

@@ -261,16 +261,15 @@ def test_time_travel_read(spark, tmp_path):
             state(gone)
 
 
-def test_stray_files_in_segment_dir_are_ignored(spark):
+def test_stray_files_in_segment_dir_are_ignored(spark, tmp_path):
     """The listing-based segment resolution must tolerate foreign files —
     a stray 'data.parquet' (no seq in the name) previously crashed every
     read of the collection with an int-parse error."""
     import os
-    import tempfile
 
     from pigeon_optics_spark.store import DatasetStore
 
-    st = DatasetStore(tempfile.mkdtemp(prefix="po_stray_"))
+    st = DatasetStore(str(tmp_path))
     st.create("t", "s")
     st.write_entries("t", "s", [(f"r{i}", {"n": i}) for i in range(5)])
     d = os.path.join(st.root, "datasets", "t", "s")

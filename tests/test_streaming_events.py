@@ -184,9 +184,10 @@ def test_stream_ewma_multi_batch_matches_batch_fold(spark):
 # the fixed time-quartile slicing above pins the stateful continuations
 # only at ONE set of batch boundaries; here the SAME gate code runs
 # against a source split at RANDOM row boundaries (seeded, replayable)
-# and must stay bit-exact with the batch fold.  The source is injected
-# through the gates' documented per-sf_dir cache, so the code under test
-# is the real registered gate, not a test-local re-implementation.
+# and must stay bit-exact with the batch fold.  The source is injected by
+# swapping the gates' quartile-source function (``_quartile_src``), so the
+# code under test is the real registered gate, not a test-local
+# re-implementation.
 # ---------------------------------------------------------------------------
 
 
@@ -223,7 +224,8 @@ _SELF_REFS: dict = {}
 
 
 @pytest.mark.parametrize("seed", [0xC0FFEE, 20260816])
-def test_stateful_stream_random_batch_splits(spark, tmp_path, seed):
+def test_stateful_stream_random_batch_splits(spark, tmp_path, seed,
+                                             monkeypatch):
     """The stateful streaming gates are batching-invariant: random split
     points (4-7 files, seeded) produce bit-exact equality — floats
     compared with ==, integers exactly.  Gates with a Spark batch twin
@@ -235,17 +237,12 @@ def test_stateful_stream_random_batch_splits(spark, tmp_path, seed):
     import random
 
     from pigeon_optics_spark.queries import events_queries as eq
-    from pigeon_optics_spark.queries._streaming_util import (
-        scoped_shuffle_partitions,
-    )
 
     self_gates = [eq.events_stream_twap, eq.events_stream_timeout_sessions]
-    saved = eq._STREAM_EWMA_SRC.get(SF_DIR)
-    with scoped_shuffle_partitions(spark, 4):
-        for fn in self_gates:
-            if fn.__name__ not in _SELF_REFS:
-                # natural quartile source (populates the per-sf cache)
-                _SELF_REFS[fn.__name__] = _rows_sorted(fn(spark, SF_DIR))
+    for fn in self_gates:
+        if fn.__name__ not in _SELF_REFS:
+            # natural quartile source
+            _SELF_REFS[fn.__name__] = _rows_sorted(fn(spark, SF_DIR))
 
     rng = random.Random(seed)
     k = rng.randint(4, 7)
@@ -259,18 +256,11 @@ def test_stateful_stream_random_batch_splits(spark, tmp_path, seed):
              (eq.events_stream_ohlc, eq.events_ohlc_bars),
              (eq.events_stream_holt, eq.events_holt_trend),
              (eq.events_stream_pattern, eq.events_pattern_matches)]
-    eq._STREAM_EWMA_SRC[SF_DIR] = d
-    try:
-        with scoped_shuffle_partitions(spark, 4):
-            for stream_fn, batch_fn in pairs:
-                got = _rows_sorted(stream_fn(spark, SF_DIR))
-                want = _rows_sorted(batch_fn(spark, SF_DIR))
-                assert got == want, (stream_fn.__name__, seed, k)
-            for fn in self_gates:
-                got = _rows_sorted(fn(spark, SF_DIR))
-                assert got == _SELF_REFS[fn.__name__], (fn.__name__, seed, k)
-    finally:
-        if saved is None:
-            eq._STREAM_EWMA_SRC.pop(SF_DIR, None)
-        else:
-            eq._STREAM_EWMA_SRC[SF_DIR] = saved
+    monkeypatch.setattr(eq, "_quartile_src", lambda spark, sf_dir: d)
+    for stream_fn, batch_fn in pairs:
+        got = _rows_sorted(stream_fn(spark, SF_DIR))
+        want = _rows_sorted(batch_fn(spark, SF_DIR))
+        assert got == want, (stream_fn.__name__, seed, k)
+    for fn in self_gates:
+        got = _rows_sorted(fn(spark, SF_DIR))
+        assert got == _SELF_REFS[fn.__name__], (fn.__name__, seed, k)

@@ -1,16 +1,18 @@
-"""Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash.
+"""Deduplication operators: exact digest, exact Jaccard, MinHash+LSH, SimHash.
 
 Scale notes (the 100 TB stance):
 
 - **exact**: one hash-groupBy shuffle on a 16-byte digest — the cheapest
   possible dedup; always run it first to shrink the corpus.
-- **n-gram Jaccard**: exact pairwise similarity via a shingle-equi-join.
-  Quadratic under shared-template corpora (the join output is Σ df(s)² —
-  measured 413 s at sf0.1 vs 3 s at sf0.01 on the synthetic docs): this is
-  the *verification* tool and the exactness reference, never the scale
-  path.  A df-capped candidate variant was tried and rejected — on
-  template-heavy corpora true near-dup pairs overlap mostly in high-df
-  shingles, so the cap cost ~28% recall.  Use MinHash-LSH at scale.
+- **exact Jaccard**: one set-similarity join, ``_shingle_jaccard_pairs``,
+  with two shinglers — char-5-grams (``ngram_jaccard_pairs``) and word
+  trigrams (``prefix_jaccard_pairs``).  It counts every shared shingle
+  on a shingle-equi-join, so its cost is Σ df(s)² over shingles s
+  (measured 413 s at sf0.1 vs 3 s at sf0.01 on the synthetic docs): the *verification* tool and the exactness
+  reference, never the scale path.  Filters in front of it were tried
+  and rejected — a df-capped candidate variant cost ~28% recall on
+  template-heavy corpora, and a PPJoin prefix filter kept most char-5
+  pairs while making the join 2.6x slower.  Use MinHash-LSH at scale.
 - **MinHash + LSH banding**: the scale path.  Signatures are k=64 mins of
   a Carter-Wegman family (one md5 per shingle); banding over the first
   8 bands × 4 rows turns near-dup search into an equi-join on
@@ -49,15 +51,20 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", n: int = 5,
-                        threshold: float = 0.5) -> DataFrame:
-    """Exact n-gram Jaccard similar pairs (a < b, jaccard ≥ threshold).
+def _shingle_jaccard_pairs(df: DataFrame, shingles: Column, num: int,
+                           den: int, id_col: str) -> DataFrame:
+    """Every doc pair (id_a < id_b) whose shingle sets have Jaccard
+    >= num/den → (id_a, id_b, n_common, n_union): the one exact
+    set-similarity join.  ``shingles`` is a distinct-shingle array
+    expression over ``df``'s columns (resolved by name, so it serves both
+    the corpus and its spread copy); docs with no shingles never pair.
 
-    Plan: explode distinct shingles → self-equi-join on shingle (build
-    side hashed, probe side streamed BY DOC) → count common → |A∪B| from
+    Plan: explode shingles → self-equi-join on the shingle (build side
+    hashed, probe side streamed BY DOC) → count common → |A∪B| from
     per-doc sizes.  The join key is the shingle, so only docs sharing
-    content ever meet.
+    content ever meet.  The threshold is the integer cross-multiplication
+    ``den*n_common >= num*n_union`` — no float division, so every engine
+    agrees on pairs that sit exactly on it.
 
     The Σ_sh c_sh² *work* is intrinsic to exactness-with-counts
     (n_common must count every shared shingle), but its PLACEMENT is
@@ -87,18 +94,18 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     audit how a re-keyed shuffle interacts with the NEXT operator's
     locality before salting.
 
-    Still the EXACT reference baseline, and still quadratic in shared
-    shingle counts: the bounded generators (minhash/LSH band-bucket
-    cap, PPJoin prefix, simhash) are the scale paths this operator
-    exists to verify.  Do not run it on a full corpus.
+    No filter fronts the join: at sf0.1 a PPJoin prefix filter (Bayardo
+    2007; Xiao 2008) kept 8.2M of the 12.5M char-5 pairs and made the
+    char-5 join 2.6x slower, and a size filter in the join condition was
+    slower on both shinglers (ROADMAP B).  Still quadratic in
+    shared-shingle counts: MinHash-LSH is the scale path this join
+    exists to verify.
     """
     sizes = df.select(F.col(id_col).alias("id"),
-                      F.size(char_shingles(text_col, n)).alias("n_shingles"))
-    ex = df.select(F.col(id_col).alias("id"),
-                   F.explode(char_shingles(text_col, n)).alias("sh"))
+                      F.size(shingles).alias("n_shingles"))
+    ex = df.select(F.col(id_col).alias("id"), F.explode(shingles).alias("sh"))
     a = _spread(df).select(
-        F.col(id_col).alias("id"),
-        F.explode(char_shingles(text_col, n)).alias("sh")).alias("a")
+        F.col(id_col).alias("id"), F.explode(shingles).alias("sh")).alias("a")
     b = ex.alias("b")
     common = (
         a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
@@ -107,16 +114,25 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     )
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("size_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("size_b"))
+    n_union = F.col("size_a") + F.col("size_b") - F.col("n_common")
     return (
         common.join(sa, "id_a").join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("n_common")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_common", "jaccard")
+        .select("id_a", "id_b", "n_common", n_union.alias("n_union"))
+        .where(F.lit(den) * F.col("n_common") >= F.lit(num) * F.col("n_union"))
     )
+
+
+def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
+                        id_col: str = "doc_id", n: int = 5,
+                        num: int = 1, den: int = 2) -> DataFrame:
+    """Exact char-n-gram Jaccard similar pairs (a < b, jaccard ≥ num/den)
+    → (id_a, id_b, n_common, jaccard); see ``_shingle_jaccard_pairs``.
+    Do not run it on a full corpus: the cost is Σ df(s)²."""
+    return (_shingle_jaccard_pairs(df, char_shingles(text_col, n), num, den,
+                                   id_col)
+            .select("id_a", "id_b", "n_common",
+                    (F.col("n_common").cast("double") / F.col("n_union"))
+                    .alias("jaccard")))
 
 
 #: 2^61 - 1, the Mersenne prime used by the Carter-Wegman MinHash family.
@@ -164,6 +180,28 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     return ex.groupBy("id").agg(F.expr(sig_expr))
 
 
+def _band_hashes(sig: DataFrame, bands: int, band_rows: int) -> DataFrame:
+    """(id, sig) → one row per band: (id, band_id, band_hash), where
+    band_hash = md5 of the band's ``band_rows`` signature values joined by
+    '|' — the LSH banding shared by the pair join and its diagnostics."""
+    r = band_rows
+    return sig.select(
+        "id",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda b: F.struct(
+                    b.alias("band_id"),
+                    F.md5(F.array_join(
+                        F.transform(F.slice("sig", b * r + 1, r),
+                                    lambda x: x.cast("string")),
+                        "|")).alias("band_hash"),
+                ),
+            )
+        ).alias("bh"),
+    ).select("id", "bh.band_id", "bh.band_hash")
+
+
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", k: int = 64, bands: int = 8,
                       band_rows: int = 4, n: int = 5,
@@ -203,28 +241,13 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
        P ≈ 0.6% while recall at Jaccard ≥ 0.6 is ≈ 95%;
     6. exact n-gram Jaccard on the survivors only.
     """
-    r = band_rows
     # persist + materialize: the signature table feeds THREE consumers
     # (banding + both sides of the estimate filter); concurrent stages of
     # one job each recompute an unmaterialized persist, so force it now.
     # Tiny (k longs per doc); evicted LRU.
     sig = minhash_signatures(df, text_col, id_col, k, n).persist()
     sig.count()
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band_id"),
-                    F.md5(F.array_join(
-                        F.transform(F.slice("sig", b * r + 1, r),
-                                    lambda x: x.cast("string")),
-                        "|")).alias("band_hash"),
-                ),
-            )
-        ).alias("bh"),
-    ).select("id", "bh.band_id", "bh.band_hash")
+    banded = _band_hashes(sig, bands, band_rows)
     if max_bucket_size is not None:
         # aggregation keyed exactly like the join — AQE reuses the exchange;
         # left_semi keeps only rows in surviving buckets
@@ -299,23 +322,8 @@ def lsh_bucket_stats(df: DataFrame, text_col: str = "text",
     max_bucket, n_buckets_dropped, n_rows_dropped).  Run this (and log the
     result) when tuning ``max_bucket_size`` on a new corpus — a silent cap is
     a silent recall hole."""
-    r = band_rows
-    sig = minhash_signatures(df, text_col, id_col, k, n)
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band_id"),
-                    F.md5(F.array_join(
-                        F.transform(F.slice("sig", b * r + 1, r),
-                                    lambda x: x.cast("string")),
-                        "|")).alias("band_hash"),
-                ),
-            )
-        ).alias("bh"),
-    ).select("id", "bh.band_id", "bh.band_hash")
+    banded = _band_hashes(minhash_signatures(df, text_col, id_col, k, n),
+                          bands, band_rows)
     sizes = banded.groupBy("band_id", "band_hash").agg(F.count("*").alias("bsz"))
     dropped = F.col("bsz") > max_bucket_size
     return (
@@ -668,84 +676,24 @@ def word_trigram_set(text: str | Column) -> Column:
 
 
 def prefix_jaccard_pairs(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id", num: int = 3, den: int = 5,
-                         max_bucket_size: int = 64) -> DataFrame:
-    """EXACT-threshold set-similarity self-join via prefix filtering — the
-    AllPairs/PPJoin family (Bayardo et al. 2007; Xiao et al. 2008): every
-    pair with word-trigram-set Jaccard >= num/den whose docs share at
-    least one prefix shingle in a bucket under ``max_bucket_size`` is
-    found exactly (MinHash-LSH's complement: probabilistic recall there,
-    exact verification here).  The UNCONDITIONAL exactness guarantee
-    holds only with ``max_bucket_size=None``: the default cap trades the
-    template-cluster pathology (one shingle shared by >64 near-identical
-    docs floods the candidate join) for bounded worst-case cost, exactly
-    like the minhash band-bucket cap — pass None when completeness
-    matters more than the bound.
+                         id_col: str = "doc_id", num: int = 3,
+                         den: int = 5) -> DataFrame:
+    """Exact word-trigram-set Jaccard pairs (a < b, inter/uni >= num/den)
+    → (doc_a, doc_b, inter, uni), matching pairs only: every such pair is
+    found (MinHash-LSH's complement — probabilistic recall there, exact
+    here).  ``word_trigram_set`` shingles on the one exact join,
+    ``_shingle_jaccard_pairs``; the threshold is the integer
+    cross-multiplication ``den*inter >= num*uni``.
 
-    Algorithm:
-      1. one global document-frequency pass orders each doc's shingles
-         rarest-first (total order: (df, shingle));
-      2. prefix length L = n - ceil(theta*n) + 1, computed in INTEGER
-         arithmetic ((num*n + den-1) div den) so both engines agree;
-         the prefix-filter theorem: two sets with Jaccard >= theta must
-         share at least one prefix element under a common global order;
-      3. candidates = equi-join on prefix shingles (id_a < id_b), dedup;
-      4. verify: exact |intersection| via array_intersect, threshold as
-         the integer cross-multiplication den*|A∩B| >= num*|A∪B| — no
-         float division anywhere.
-
-    ``max_bucket_size`` drops prefix shingles shared by more docs before
-    the join (the minhash bucket-cap stance): rarest-first ordering makes
-    big prefix buckets pathological (a fully-duplicated corpus), and each
-    dropped bucket only matters for pairs sharing NO other prefix
-    shingle.  → (doc_a, doc_b, inter, uni), matching pairs only.
-
-    Scale shape: the join key is a rare-by-construction shingle, so
-    bucket sizes are naturally small (measured max 10 at sf0.1) and the
-    cap bounds the worst case; candidate verification re-joins the two
-    shingle arrays by id — one shuffle each side, no all-pairs stage.
+    The name is historical, from a former PPJoin prefix-filter plan;
+    the shared-shingle count measured faster on the same rows (see
+    ``_shingle_jaccard_pairs`` for why no filter fronts the join).
     """
-    w = df.select(F.col(id_col).alias("id"),
-                  word_trigram_set(text_col).alias("ws"))
-    # persist + materialize: w feeds the token pass AND both verify joins
-    # (the r1 unmaterialized-persist lesson).  Deliberately NOT unpersisted:
-    # the returned plan reads the cache lazily — evicting before the caller
-    # materializes would recompute the shingle scan three times (same
-    # stance as minhash_lsh_pairs' signature cache; harnesses clear cache
-    # between queries).
-    w = w.persist()
-    w.count()
-    tok = w.select("id", F.explode("ws").alias("t"))
-    freq = tok.groupBy("t").agg(F.count("*").alias("freq"))
-    ordered = (tok.join(freq, "t")
-               .groupBy("id")
-               .agg(F.transform(
-                   F.array_sort(F.collect_list(F.struct("freq", "t"))),
-                   lambda s: s.getField("t")).alias("ws_sorted")))
-    pre = ordered.select(
-        "id",
-        F.expr("slice(ws_sorted, 1, size(ws_sorted)"
-               f" - (({num} * size(ws_sorted) + {den - 1}) div {den}) + 1)")
-        .alias("prefix"))
-    ptok = pre.select("id", F.explode("prefix").alias("t"))
-    small = (ptok.groupBy("t").agg(F.count("*").alias("n_docs"))
-             .where(F.col("n_docs") <= max_bucket_size).select("t"))
-    ptok = ptok.join(small, "t")
-    cand = (ptok.alias("a")
-            .join(ptok.alias("b"),
-                  (F.col("a.t") == F.col("b.t"))
-                  & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("da"), F.col("b.id").alias("db"))
-            .distinct())
-    wa = w.select(F.col("id").alias("da"), F.col("ws").alias("wsa"))
-    wb = w.select(F.col("id").alias("db"), F.col("ws").alias("wsb"))
-    inter = F.size(F.array_intersect("wsa", "wsb"))
-    uni = F.size("wsa") + F.size("wsb") - inter
-    return (cand.join(wa, "da").join(wb, "db")
-            .select(F.col("da").alias("doc_a"), F.col("db").alias("doc_b"),
-                    inter.cast("long").alias("inter"),
-                    uni.cast("long").alias("uni"))
-            .where(F.lit(den) * F.col("inter") >= F.lit(num) * F.col("uni")))
+    return (_shingle_jaccard_pairs(df, word_trigram_set(text_col), num, den,
+                                   id_col)
+            .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"),
+                    F.col("n_common").alias("inter"),
+                    F.col("n_union").alias("uni")))
 
 
 # --------------------------------------------------------------------------

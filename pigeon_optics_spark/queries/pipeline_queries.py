@@ -248,7 +248,7 @@ register("dedup_exact_documents", dedup_exact_documents, _EXACT_ORACLE)
 
 
 def dedup_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_jaccard_pairs(load(spark, sf_dir, "documents"), threshold=0.5)
+    return ngram_jaccard_pairs(load(spark, sf_dir, "documents"), num=1, den=2)
 
 
 _NGRAM_ORACLE = """
@@ -3006,15 +3006,14 @@ register("text_quality_classifier", text_quality_classifier,
 
 
 # --------------------------------------------------------------------------
-# PPJoin-family exact-threshold similarity join (pipeline.dedup.
-# prefix_jaccard_pairs): every word-trigram-set pair with Jaccard >= 3/5
-# whose docs share a prefix shingle in an under-cap bucket (exactness is
-# unconditional only with max_bucket_size=None — see the docstring),
-# found by prefix filtering + integer cross-multiplication verify — the
-# exact complement of the probabilistic MinHash-LSH gate.  25 matching
-# pairs from 165 candidates at sf0.01 (prefix filter prunes 97.6% of the
-# pair space at sf0.1).  The 64-doc prefix-bucket cap is mirrored in the
-# oracle (never binds at gate SFs — measured max bucket 10).
+# Exact-threshold similarity join on word trigrams (pipeline.dedup.
+# prefix_jaccard_pairs, a name kept from its former prefix-filter plan):
+# every word-trigram-set pair with Jaccard >= 3/5, counted on the shared
+# shingle join and decided by integer cross-multiplication — the exact
+# complement of the probabilistic MinHash-LSH gate.  The oracle finds
+# the same pair set independently, by PPJoin prefix filtering (two sets
+# with Jaccard >= 3/5 share a prefix shingle under any common global
+# order) and list_intersect verification, with no bucket cap.
 # --------------------------------------------------------------------------
 
 
@@ -3057,11 +3056,7 @@ pre AS (
            AS prefix
   FROM ordered
 ),
-ptok0 AS (SELECT doc_id, unnest(prefix) AS t FROM pre),
-ptok AS (
-  SELECT * FROM ptok0
-  WHERE t IN (SELECT t FROM ptok0 GROUP BY t HAVING COUNT(*) <= 64)
-),
+ptok AS (SELECT doc_id, unnest(prefix) AS t FROM pre),
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM ptok a JOIN ptok b ON a.t = b.t AND a.doc_id < b.doc_id
@@ -3681,9 +3676,9 @@ register("emb_maxsim_colbert", emb_maxsim_colbert, _MAXSIM_ORACLE)
 # has low Jaccard but near-total containment of the short side; Broder's
 # original resemblance-vs-containment split).  Candidates come from
 # shared RARE shingles (corpus frequency 2..64 — the minhash bucket-cap
-# stance), verified by exact intersection against the FULL sets (the
-# prefix_jaccard verify pattern); decisions are division-free integer
-# cross-multiplication (5*inter >= 4*|side|).
+# stance), verified by exact intersection against the FULL sets;
+# decisions are division-free integer cross-multiplication
+# (5*inter >= 4*|side|).
 #
 # Fixture: docs 0-19 get a planted TRUNCATED COPY (first half of the
 # token stream, id +40M — clear of every SF's id range) so one-way-only
@@ -3903,7 +3898,7 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                             "CAST(length(text) * (52 + (doc_id * 3) % 12) "
                             "DIV 100 AS INT))").alias("text")))
     base = docs.unionByName(trunc)
-    truth = (ngram_jaccard_pairs(base, threshold=0.5)
+    truth = (ngram_jaccard_pairs(base, num=1, den=2)
              .select("id_a", "id_b", "jaccard"))
     lsh = (minhash_lsh_pairs(base)
            .select("id_a", "id_b", F.lit(True).alias("hit")))
@@ -6974,7 +6969,7 @@ def dedup_pair_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merged gate (r6): the former dedup_simhash_pairs / prefix_jaccard /
     containment / cdc_chunks / lsh_recall_eval / split_leakage — the
     bounded candidate-pair generator family (banded SimHash Hamming,
-    PPJoin prefix filter, rare-shingle containment, FastCDC shared
+    exact word-trigram Jaccard, rare-shingle containment, FastCDC shared
     chunks, planted-pair LSH recall eval, split-leakage audit).  Every
     sub-generator keeps its falsifiable cap fixture."""
     return pack_union([

@@ -1632,7 +1632,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialized persist: totals AND the filter below both consume the
     # subtree.  Deliberately NOT unpersisted (the returned plan reads it
-    # lazily — the prefix_jaccard/minhash stance); one cached per-part
+    # lazily — the minhash_lsh_pairs stance); one cached per-part
     # aggregate per process is the accepted cost.
     # per-part aggregate; without .count() the one-shuffle agg runs twice
     per_part = per_part.persist()

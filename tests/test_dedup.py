@@ -14,6 +14,8 @@ from pigeon_optics_spark.pipeline.dedup import (
     exact_dedup,
     lsh_bucket_stats,
     minhash_lsh_pairs,
+    ngram_jaccard_pairs,
+    prefix_jaccard_pairs,
 )
 
 
@@ -248,14 +250,47 @@ def test_strict_rate_limit_rejects_non_timestamp(spark):
         strict_rate_limit(df).collect()
 
 
-def test_prefix_jaccard_complete_vs_bruteforce(spark):
-    """The prefix filter must lose NOTHING: every pair with trigram-set
-    Jaccard >= 3/5 found by brute force must appear (exactness is the
-    operator's whole claim vs MinHash-LSH)."""
+def _word_trigrams(text):
+    toks = [w.lower() for w in (text or "").split()]
+    if len(toks) < 3:
+        return {" ".join(toks)} if toks else set()
+    return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+
+
+def _char5(text):
+    # NULL text never joins; shorter texts are their own single shingle
+    if text is None:
+        return set()
+    return {text[i:i + 5] for i in range(max(len(text) - 4, 1))}
+
+
+def _prefix_rows(df):
+    return {(r["doc_a"], r["doc_b"], r["inter"], r["uni"])
+            for r in prefix_jaccard_pairs(df).collect()}
+
+
+def _ngram_rows(df):
+    rows = set()
+    for r in ngram_jaccard_pairs(df).collect():
+        uni = round(r["n_common"] / r["jaccard"])
+        assert r["jaccard"] == r["n_common"] / uni
+        rows.add((r["id_a"], r["id_b"], r["n_common"], uni))
+    return rows
+
+
+@pytest.mark.parametrize("shingles, pairs, num, den, on_threshold", [
+    pytest.param(_word_trigrams, _prefix_rows, 3, 5, (30, 31, 3, 5),
+                 id="trigram"),
+    pytest.param(_char5, _ngram_rows, 1, 2, (32, 33, 2, 4), id="char5"),
+])
+def test_prefix_jaccard_complete_vs_bruteforce(spark, shingles, pairs, num,
+                                               den, on_threshold):
+    """The exact join must lose NOTHING, on either shingler: every pair
+    with shingle-set Jaccard >= num/den found by brute force must appear,
+    with its exact counts (exactness is the operator's whole claim vs
+    MinHash-LSH), including a pair sitting exactly ON the threshold."""
     import itertools
     import random
-
-    from pigeon_optics_spark.pipeline.dedup import prefix_jaccard_pairs
 
     rng = random.Random(11)
     vocab = [f"w{i}" for i in range(30)]
@@ -268,45 +303,39 @@ def test_prefix_jaccard_complete_vs_bruteforce(spark):
         docs.append((i, " ".join(toks)))
     docs.append((24, "tiny doc"))          # < 3 tokens branch
     docs.append((25, "tiny doc"))          # its exact duplicate
-    all_docs = docs + [(26, ""), (27, "   "), (28, None)]  # shingle-less
-    df = spark.createDataFrame(all_docs, "doc_id long, text string")
-
-    def trigrams(text):
-        toks = [w.lower() for w in text.split()]
-        if len(toks) < 3:
-            return {" ".join(toks)}
-        return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+    docs += [(26, ""), (27, "   "), (28, None)]  # no word trigrams
+    # Jaccard exactly 3/5 on word trigrams and exactly 1/2 on char-5
+    docs.append((30, "e1 e2 e3 e4 e5 e6"))
+    docs.append((31, "e1 e2 e3 e4 e5 ex"))
+    docs.append((32, "abcdefg"))
+    docs.append((33, "abcdefx"))
+    df = spark.createDataFrame(docs, "doc_id long, text string")
 
     want = set()
-    sets = {i: trigrams(t) for i, t in docs}
+    sets = {i: shingles(t) for i, t in docs}
     for a, b in itertools.combinations(sorted(sets), 2):
         inter = len(sets[a] & sets[b])
         uni = len(sets[a] | sets[b])
-        if 5 * inter >= 3 * uni:
+        if inter and den * inter >= num * uni:
             want.add((a, b, inter, uni))
-    got = {(r["doc_a"], r["doc_b"], r["inter"], r["uni"])
-           for r in prefix_jaccard_pairs(df).collect()}
+    got = pairs(df)
     assert got == want
-    assert (24, 25, 1, 1) in got  # the short-doc duplicate pair surfaced
-    # empty/whitespace/NULL docs have NO shingles: never pair, not even
-    # with each other (oracle-parity: a '' shingle would pair them in
-    # Spark while DuckDB's NULL aggregate silently dropped them)
-    assert not any(a >= 26 or b >= 26 for a, b, _, _ in got)
+    assert on_threshold in got
+    # the short-doc duplicate pair surfaced
+    assert any(a == 24 and b == 25 and i == u for a, b, i, u in got)
+    # empty/whitespace/NULL docs never pair, not even with each other
+    # (oracle-parity: a '' trigram would pair them in Spark while
+    # DuckDB's NULL aggregate silently dropped them)
+    assert not any({a, b} & {26, 27, 28} for a, b, _, _ in got)
 
 
 def test_prefix_jaccard_bucket_cap_bounds_join(spark):
-    """A fully-duplicated corpus puts every doc's rare prefix shingle in
-    ONE bucket; the cap must drop it (bounded join) and the pairs above
-    the cap are the documented recall trade."""
-    from pigeon_optics_spark.pipeline.dedup import prefix_jaccard_pairs
-
+    """A fully-duplicated corpus puts every doc in every shingle's
+    bucket: the exact join still verifies all C(10,2) identical pairs."""
     df = spark.createDataFrame(
         [(i, "alpha beta gamma delta epsilon") for i in range(10)],
         "doc_id long, text string")
-    # cap smaller than the corpus: every prefix bucket is dropped
-    assert prefix_jaccard_pairs(df, max_bucket_size=5).count() == 0
-    # cap above: all C(10,2) identical pairs verified
-    assert prefix_jaccard_pairs(df, max_bucket_size=64).count() == 45
+    assert prefix_jaccard_pairs(df).count() == 45
 
 
 def test_prefix_jaccard_no_cartesian(spark):

@@ -863,7 +863,8 @@ def test_graph_guards_and_frontier_equivalence(spark):
 
 
 def test_ngram_pairs_probe_spread_and_pair_local_agg(spark, sf_dir):
-    """The exact-pair self-join's r12 shape (528 s -> 19 s at sf0.1):
+    """The exact-pair self-join's r12 shape (528 s -> 19 s at sf0.1),
+    pinned for both of its shinglers (char-5 and word trigrams):
 
     1. the PROBE side is round-robined to session parallelism BEFORE its
        shingle explode (the quadratic join output otherwise runs inside
@@ -875,21 +876,27 @@ def test_ngram_pairs_probe_spread_and_pair_local_agg(spark, sf_dir):
        cost 6x the executor cpu in spilled partial-agg maps);
     3. no cartesian anywhere.
     """
-    from pigeon_optics_spark.pipeline.dedup import ngram_jaccard_pairs
+    from pigeon_optics_spark.pipeline.dedup import (
+        ngram_jaccard_pairs,
+        prefix_jaccard_pairs,
+    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = plan_of(ngram_jaccard_pairs(docs))
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    # (1) the spread: a round-robin exchange exists under a Generate
-    assert "RoundRobinPartitioning" in p, p
-    # (2) pair locality: between the FIRST (partial) HashAggregate above
-    # the pair join and the join itself there must be no Exchange
-    lines = p.splitlines()
-    join_i = min(i for i, ln in enumerate(lines)
-                 if "Join" in ln and "sh#" in ln)
-    aggs = [i for i, ln in enumerate(lines) if "HashAggregate" in ln and i < join_i]
-    assert aggs, p
-    partial_i = max(aggs)  # innermost aggregate above the join
-    between = lines[partial_i + 1:join_i]
-    assert not any("Exchange" in ln for ln in between), p
+    for op in (ngram_jaccard_pairs, prefix_jaccard_pairs):
+        p = plan_of(op(docs))
+        assert "CartesianProduct" not in p
+        assert "BroadcastNestedLoopJoin" not in p
+        # (1) the spread: a round-robin exchange exists under a Generate
+        assert "RoundRobinPartitioning" in p, p
+        # (2) pair locality: between the FIRST (partial) HashAggregate
+        # above the pair join and the join itself there must be no
+        # Exchange
+        lines = p.splitlines()
+        join_i = min(i for i, ln in enumerate(lines)
+                     if "Join" in ln and "sh#" in ln)
+        aggs = [i for i, ln in enumerate(lines)
+                if "HashAggregate" in ln and i < join_i]
+        assert aggs, p
+        partial_i = max(aggs)  # innermost aggregate above the join
+        between = lines[partial_i + 1:join_i]
+        assert not any("Exchange" in ln for ln in between), p

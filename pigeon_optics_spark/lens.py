@@ -70,7 +70,7 @@ import pyarrow as pa
 from .paths import DataPath, decode_path, encode_path
 from .reduce import fold, merge_into
 from .session import job_desc
-from .store import SEGMENT_DDL, DatasetStore, _segment_files
+from .store import DatasetStore, _segment_files
 from .values import (
     PMap,
     PSet,
@@ -456,10 +456,10 @@ def reduce_outputs(outputs_df, num_partitions: int | None = None, *,
 
     ``presorted=True`` skips the shuffle+sort: the caller guarantees every
     out_id group is contiguous within one read partition and rows are already
-    in fold order within each group (the emissions store writes segments
-    range-partitioned by out_id and sorted by the full fold key — see
-    ``build_lens``'s first-build path, which validates the single-row-group
-    precondition before taking this branch).
+    in fold order within each group (a first build's base segment, written
+    range-partitioned by out_id and sorted by the full fold key in
+    single-row-group files — see :func:`_distributed_build` — or
+    :func:`_reduce_affected`'s own out_id shuffle and sort).
 
     Output values are serialized in **canonical** form, so the store write
     can hash them JVM-side (``precanonical=True``) with byte-identical
@@ -473,8 +473,7 @@ def reduce_outputs(outputs_df, num_partitions: int | None = None, *,
     else:
         df = outputs_df.repartition(
             *( [num_partitions] if num_partitions else [] ), "out_id"
-        ).sortWithinPartitions("out_id", "input_idx", "nat_key", "src_rid",
-                               "emit_idx")
+        ).sortWithinPartitions(*_FOLD_KEY)
 
     def fold_partition(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         # a group split across Arrow batches folds as one: the fold sees a
@@ -513,24 +512,28 @@ def _cache_name(name: str) -> str:
 # The map cache is keyed by input *path* (right for freshness / log capture)
 # and holds no emissions; the reduce gathers by *out_id*.  The emissions
 # store is the one copy of every emission: the map output exploded once at
-# write time and persisted
-# as parquet segments RANGE-SORTED BY out_id, so an incremental re-reduce
-# reads only the row groups holding affected keys (min/max pruning on the
-# pushed-down ``out_id IN (...)`` filter).  An emission row is current iff
-# its version is at or above its path's max STALE FLOOR (the sidecar log
-# below — O(churn) validity; compaction validates against the authoritative
-# cache keys instead).  The validity key is the cache ROW's version, NOT
-# its segment seq: cache compaction re-stamps every row with one new seq
-# (physical), but preserves per-row versions (logical) — seq-keyed validity
-# would invalidate the whole emissions log at the first compaction (silently
-# dropping retained contributions on later incremental rebuilds).  A cache
-# row's version advances exactly when its path is re-mapped: the cache value
-# embeds the input record's version, so hash suppression can never keep an
-# old version on a re-map — every logged generation is stamped with exactly
-# its cache row's version.  Segments compact alongside the cache.
+# write time and persisted as parquet segments RANGE-SORTED BY out_id, so an
+# incremental re-reduce reads only the row groups holding affected keys
+# (min/max pruning on the pushed-down ``out_id IN (...)`` filter).
+#
+# Validity is the store segment log's rule (:func:`_live_emissions`): per
+# key ``(out_id, path)`` the rows at the highest ``version`` win, and a row
+# whose ``value`` is NULL is a tombstone that emits nothing (a real
+# emission's value is always a tagged-JSON string).  Each build writes ONE
+# segment at the log's next seq and stamps its rows' version with that seq
+# (:func:`_next_emit_seq`), so a build's rows outrank every earlier build's.
+# The segment holds the build's fresh emissions plus one tombstone per
+# ``(out_id, path)`` the log already holds for a path the build re-mapped or
+# pruned — the scan that finds those keys is the one that finds the
+# affected out_ids, so validity stays O(churn) and never reads the cache.
+# Compaction applies the same rule to the whole log and drops the
+# tombstones.
 # --------------------------------------------------------------------------
 
 _EMIT_COLS = ["out_id", "input_idx", "nat_key", "src_rid", "emit_idx", "value"]
+
+#: the deterministic fold order (module docstring); segments are sorted by it
+_FOLD_KEY = ("out_id", "input_idx", "nat_key", "src_rid", "emit_idx")
 
 #: stored emission-log columns (``nat_key`` is derived at read time).
 #: Spark reads pass the DDL, driver reads the arrow schema: an explicit
@@ -547,8 +550,9 @@ _EMIT_LOG_SCHEMA = pa.schema([
 _EMITS_DDL = "array<struct<i:int,k:string,v:string>>"
 
 #: The driver-side bound of an incremental build.  A delta of at most this
-#: many rows takes the one-job small-delta plan, whose affected keys and
-#: gathered emissions must also stay within it; the Spark plan gathers
+#: many rows takes the one-job small-delta plan, whose tombstone scan,
+#: affected keys and gathered emissions must also stay within it; the
+#: Spark plan gathers
 #: affected-out_id emissions via a driver-side ``IN`` list (≤ this many
 #: keys: the literal list pushes into the sorted log's row-group pruning)
 #: or via a left-semi join (unbounded).  Module-level so tests can lower it
@@ -592,43 +596,34 @@ def _emit_segments(store: DatasetStore, author: str, name: str) -> list[str]:
     return [p for _s, p in keep]
 
 
-# --------------------------------------------------------------------------
-# stale-floor sidecar — O(churn) validity, never O(base)
-#
-# Validity used to be a semi-join of gathered emissions against the CURRENT
-# (path, version) of every cache row — correct, but its build side scanned
-# and shuffled the whole cache-key set on every incremental rebuild: a
-# 1-record delta cost O(base) (measured: the r9 10x probe's linear-in-base
-# residue).  The sidecar inverts it: each build appends one small
-# ``stale_<seq>.parquet`` of (path, version=FLOOR) rows — every path the
-# build re-mapped or pruned, stamped with the post-write cache version.  An
-# emission row (path, v) is STALE iff v < the path's max floor: every
-# re-map/prune writes its new generation at the floor version (or nothing,
-# for prunes), so exactly one generation survives per path.  Validity is
-# then ``old_part LEFT JOIN floors`` — both sides O(churn)/O(affected),
-# broadcastable, independent of base size.  Compaction folds the log to
-# currently-valid rows (via the authoritative cache-key join, unchanged)
-# and deletes the floors, which are redundant afterwards: kept rows carry
-# the current cache version, which is >= every floor ever written.
-#
-# Crash safety (crash-injected in tests/test_lens_crash.py): every build
-# installs a ``_build_inflight`` marker before its cache write and removes
-# it after set_config.  A marker found at build start means the previous
-# build died somewhere between those two points — the cache may hold row
-# generations the emissions log lacks, the log may hold an orphaned
-# segment, floors may be missing, and the output collection may be stale.
-# Recovery does not repair that state; it discards it
-# (:func:`_reset_lens_state`: a new empty cache, no emission log, no
-# cursor) and the build runs as a first build, re-mapping every live input
-# record and overwriting the output with hash suppression — so the lens
-# has one recovery path, the first build every lens runs.  O(base) once,
-# only after a detected crash.  A built lens whose log has no segment at
-# all (lost, or deleted by hand) resets the same way.  The cursor is not
-# enough to detect a crash on its own: a crashed FIRST build has none, yet
-# its cache already holds rows that a full diff would take as current.
-# --------------------------------------------------------------------------
+def _next_emit_seq(segs: list[str]) -> int:
+    """One past the latest of ``segs`` (:func:`_emit_segments`): the seq of
+    the log's next segment and the ``version`` stamp of its rows."""
+    import os
 
-_STALE_RE = re.compile(r"^stale_(\d+)_[0-9a-f]+\.parquet$")
+    if not segs:
+        return 1
+    return int(_EMIT_SEG_RE.match(os.path.basename(segs[-1])).group(1)) + 1
+
+
+# --------------------------------------------------------------------------
+# crash safety (crash-injected in tests/test_lens_crash.py)
+#
+# Every build installs a ``_build_inflight`` marker before its cache write
+# and removes it after set_config.  A marker found at build start means the
+# previous build died somewhere between those two points — the cache may
+# hold row generations the emissions log lacks, the log may hold an
+# orphaned segment, and the output collection may be stale.  Recovery does
+# not repair that state; it discards it (:func:`_reset_lens_state`: a new
+# empty cache, no emission log, no cursor) and the build runs as a first
+# build, re-mapping every live input record and overwriting the output with
+# hash suppression — so the lens has one recovery path, the first build
+# every lens runs.  O(base) once, only after a detected crash.  A built
+# lens whose log has no segment at all (lost, or deleted by hand) resets
+# the same way.  The cursor is not enough to detect a crash on its own: a
+# crashed FIRST build has none, yet its cache already holds rows that a
+# full diff would take as current.
+# --------------------------------------------------------------------------
 
 #: build-in-flight marker (crash detection) — present while a build is
 #: between its cache write and its set_config; found at build start ⇒ reset
@@ -657,99 +652,6 @@ def _remove_inflight_marker(d: str) -> None:
         os.remove(os.path.join(d, _INFLIGHT_MARKER))
 
 
-def _write_stale_floors(df, d: str, seq: int) -> None:
-    """Append one floors sidecar: (path, version) rows, version = the floor
-    below which that path's emissions are dead.  Stage-then-rename like the
-    emit segments; O(delta) rows, coalesced small.  The uuid suffix makes
-    every write collision-free — a build whose cache write adds no
-    segment reuses the previous cache seq and must never clobber that
-    build's floors; redundant floors are harmless under the max()
-    aggregation."""
-    import os
-    import shutil
-    import uuid
-
-    os.makedirs(d, exist_ok=True)
-    stage = os.path.join(d, f"_stage_{uuid.uuid4().hex}")
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    for fn in os.listdir(stage):
-        if not fn.endswith(".parquet"):
-            os.remove(os.path.join(stage, fn))
-    final = os.path.join(d, f"stale_{seq:08d}_{uuid.uuid4().hex[:8]}.parquet")
-    shutil.rmtree(final, ignore_errors=True)
-    os.replace(stage, final)
-
-
-def _write_stale_floors_local(paths: list[str], version: int, d: str,
-                              seq: int) -> None:
-    """Driver-side floors write for the small-delta build, which holds the
-    exact delta-path list on the driver: one pyarrow file instead of a
-    Spark job.  Identical naming/semantics to :func:`_write_stale_floors`;
-    readable by the same :func:`_read_stale_floors`."""
-    import os
-    import uuid
-
-    import pyarrow.parquet as pq
-
-    os.makedirs(d, exist_ok=True)
-    tbl = pa.table({
-        "path": pa.array(paths, pa.string()),
-        "version": pa.array([int(version)] * len(paths), pa.int64()),
-    })
-    stage = os.path.join(d, f"_stage_{uuid.uuid4().hex}.floors")
-    pq.write_table(tbl, stage)
-    final = os.path.join(d, f"stale_{seq:08d}_{uuid.uuid4().hex[:8]}.parquet")
-    os.replace(stage, final)
-
-
-def _stale_floor_files(d: str) -> list[str]:
-    """Every floors sidecar in the emit dir (files or part-file dirs)."""
-    import os
-
-    if not os.path.isdir(d):
-        return []
-    return [os.path.join(d, fn) for fn in sorted(os.listdir(d))
-            if _STALE_RE.match(fn)]
-
-
-def _read_stale_floors(spark, files: list[str]):
-    """Union of the given floors sidecars as (path, version), or None if
-    there are none.  Callers list the files BEFORE their own floors write
-    (:func:`_stale_floor_files`), so a build validates against PRIOR floors
-    only.  Floors made redundant by a later compaction are deleted there;
-    reading a leftover stale one is harmless (kept rows carry the current
-    cache version, which is >= any floor ever written for that path)."""
-    if not files:
-        return None
-    return spark.read.schema("path string, version long").parquet(*files)
-
-
-def _floor_max_local(files: list[str]) -> dict[str, int]:
-    """Driver twin of :func:`_read_stale_floors` + max per path."""
-    import pyarrow.parquet as pq
-
-    floors: dict[str, int] = {}
-    for f in files:
-        for seg_file in _segment_files(f):
-            t = pq.read_table(seg_file, columns=["path", "version"])
-            for p, v in zip(t["path"].to_pylist(), t["version"].to_pylist()):
-                floors[p] = max(v, floors.get(p, v))
-    return floors
-
-
-def _drop_stale_floors(d: str) -> None:
-    import os
-    import shutil
-
-    if not os.path.isdir(d):
-        return
-    for fn in os.listdir(d):
-        if _STALE_RE.match(fn):
-            p = os.path.join(d, fn)
-            shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) \
-                else os.remove(p)
-
-
 def _write_emit_segment(df, d: str, seq: int, *, base: bool = False,
                         num_parts: int = 1):
     """Stage-then-rename write of one emissions segment, range-partitioned by
@@ -760,7 +662,7 @@ def _write_emit_segment(df, d: str, seq: int, *, base: bool = False,
     ``nat_key`` is SORTED BY but not STORED (r4): it is a pure function of
     ``src_rid`` (byte-parity of the Python and JVM derivations is pinned by
     tests/test_values.py), and for padded ids it is the widest column in the
-    row — deriving it at read time (:func:`_read_emit_log`) cuts emission
+    row — deriving it at read time (:func:`_with_nat_key`) cuts emission
     shuffle and parquet bytes ~30% with identical fold order.
 
     (An r10/r11 variant additionally persisted the post-shuffle sorted
@@ -773,11 +675,6 @@ def _write_emit_segment(df, d: str, seq: int, *, base: bool = False,
     import shutil
     import uuid
 
-    import time as _time
-    _t0 = _time.time()
-    _tr = (lambda tag: print(f"[emit_seg] {tag}: {_time.time() - _t0:.2f}s",
-                             flush=True)) if os.environ.get("PO_LENS_TIMING") \
-        else (lambda tag: None)
     os.makedirs(d, exist_ok=True)
     stage = os.path.join(d, f"_stage_{uuid.uuid4().hex}")
     # range partitioning SAMPLES the frame before shuffling it — two
@@ -798,14 +695,12 @@ def _write_emit_segment(df, d: str, seq: int, *, base: bool = False,
     cache = df.persist() if persisted else df
     try:
         (cache.repartitionByRange(num_parts, "out_id")
-         .sortWithinPartitions("out_id", "input_idx", "nat_key",
-                               "src_rid", "emit_idx")
+         .sortWithinPartitions(*_FOLD_KEY)
          .drop("nat_key")
          .write.mode("overwrite").parquet(stage))
     finally:
         if persisted:
             cache.unpersist(blocking=True)
-    _tr("shuffle+sort+write")
     for fn in os.listdir(stage):
         if not fn.endswith(".parquet"):
             os.remove(os.path.join(stage, fn))
@@ -826,9 +721,7 @@ def _write_emit_segment_local(tbl, d: str, seq: int) -> str:
     import pyarrow.parquet as pq
 
     os.makedirs(d, exist_ok=True)
-    tbl = tbl.sort_by([(c, "ascending") for c in
-                       ("out_id", "input_idx", "nat_key", "src_rid",
-                        "emit_idx")])
+    tbl = tbl.sort_by([(c, "ascending") for c in _FOLD_KEY])
     tbl = tbl.select(_EMIT_LOG_SCHEMA.names).cast(_EMIT_LOG_SCHEMA)
     stage = os.path.join(d, f"_stage_{uuid.uuid4().hex}.emit")
     pq.write_table(tbl, stage)
@@ -838,17 +731,21 @@ def _write_emit_segment_local(tbl, d: str, seq: int) -> str:
 
 
 def _read_emit_log(spark, segs: list[str]):
-    """Read emission segments → the full fold frame, with ``nat_key``
-    DERIVED from ``src_rid`` via the JVM natural-sort expression (stored
-    segments don't carry it).  The derived value is byte-identical to the
-    map side's ``natural_pad`` (parity test in tests/test_values.py)."""
+    """Read emission segments → the stored columns (``_EMIT_LOG_DDL``)."""
+    return spark.read.schema(_EMIT_LOG_DDL).parquet(*segs)
+
+
+def _with_nat_key(df):
+    """Add the fold key's ``nat_key``, DERIVED from ``src_rid`` via the JVM
+    natural-sort expression (stored segments don't carry it).  The derived
+    value is byte-identical to the map side's ``natural_pad`` (parity test
+    in tests/test_values.py).  Derive it after filters and joins: Spark
+    does not push a join below the regex projection."""
     from pyspark.sql import functions as F
 
     from .values import natural_sort_col_expr
 
-    return (spark.read.schema(_EMIT_LOG_DDL).parquet(*segs)
-            .withColumn("nat_key",
-                        F.expr(natural_sort_col_expr("src_rid"))))
+    return df.withColumn("nat_key", F.expr(natural_sort_col_expr("src_rid")))
 
 
 def _scan_emit_log(files: list[str], columns: list[str], flt,
@@ -871,48 +768,43 @@ def _scan_emit_log(files: list[str], columns: list[str], flt,
     return pa.Table.from_batches(batches, schema=schema)
 
 
-def _cache_keys_df(spark, segs: list[str]):
-    """Current (path, version) of a cache segment log — a thin columnar read
-    (record_id/seq/version/deleted only; the fat ``value`` column never
-    leaves parquet), latest-wins window only when >1 segment.  ``seq`` is
-    read purely for latest-wins resolution; the returned validity key is the
-    row's *version* (survives cache compaction, which re-stamps seq)."""
+def _live_emissions(log):
+    """The emission log's validity rule — the store segment log's: per
+    ``(out_id, path)`` the rows at the highest ``version`` win, and a
+    tombstone (NULL ``value``) among them emits nothing.  The window needs
+    only out_id clustering, so on a frame already partitioned by out_id it
+    adds no shuffle."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    if not segs:
-        return None
-    df = spark.read.schema(SEGMENT_DDL).parquet(*segs).select(
-        F.col("record_id").alias("path"), "seq", "version", "deleted")
-    if len(segs) > 1:
-        w = Window.partitionBy("path").orderBy(F.desc("seq"))
-        df = df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1)
-    return df.where(~F.col("deleted")).select("path", "version")
+    top = F.max("version").over(Window.partitionBy("out_id", "path"))
+    return (log.withColumn("_top", top)
+            .where((F.col("version") == F.col("_top"))
+                   & F.col("value").isNotNull())
+            .drop("_top"))
 
 
-def _emissions_df(mapped):
+def _emissions_df(mapped, seq: int):
     """Map rows (path, input_idx, record_id, nat_key, outputs) → one row
-    per emission (path, out_id, input_idx, nat_key, src_rid, emit_idx,
-    value)."""
+    per emission (path, version=``seq``, out_id, input_idx, nat_key,
+    src_rid, emit_idx, value)."""
     from pyspark.sql import functions as F
 
     return mapped.select(
-        "path", "input_idx", "nat_key",
-        F.col("record_id").alias("src_rid"),
+        "path", F.lit(seq).cast("long").alias("version"), "input_idx",
+        "nat_key", F.col("record_id").alias("src_rid"),
         F.explode(F.from_json("outputs", _EMITS_DDL)).alias("e"),
-    ).select("path", F.col("e.k").alias("out_id"), "input_idx", "nat_key",
-             "src_rid", F.col("e.i").alias("emit_idx"),
+    ).select("path", "version", F.col("e.k").alias("out_id"), "input_idx",
+             "nat_key", "src_rid", F.col("e.i").alias("emit_idx"),
              F.col("e.v").alias("value"))
 
 
 def _compact_emissions(spark, store: DatasetStore, author: str,
                        name: str) -> None:
-    """Fold the emissions log into one base segment of currently-valid rows
-    (physical only, like cache compaction): a logged generation is valid
-    iff its (path, version) is a live cache row — every generation is
-    stamped with its cache row's version (see the emissions-store
-    comment), so this keeps exactly the newest generation of every live
-    path."""
+    """Fold the emissions log into one base segment of its live rows
+    (:func:`_live_emissions`; physical only, like cache compaction): the
+    latest generation of every live ``(out_id, path)`` keeps its version,
+    and the tombstones, with every row they retire, are gone."""
     import os
     import shutil
 
@@ -920,27 +812,19 @@ def _compact_emissions(spark, store: DatasetStore, author: str,
     segs = _emit_segments(store, author, name)
     if len(segs) <= 1:
         return
-    cache_meta = store.get_meta(author, _cache_name(name), source=_CACHE_SOURCE)
-    keys = _cache_keys_df(spark, store._segments(cache_meta))  # noqa: SLF001
-    log = _read_emit_log(spark, segs)
-    valid = (log.limit(0) if keys is None
-             else log.join(keys, ["path", "version"], "left_semi"))
-    valid = valid.select("path", "version", *_EMIT_COLS)
+    valid = _with_nat_key(_live_emissions(_read_emit_log(spark, segs)))
     n = valid.count()
     num_parts = max(1, min(256, n // 200_000 + 1))
-    final = _write_emit_segment(valid, d, cache_meta.last_seq, base=True,
+    final = _write_emit_segment(valid, d, _next_emit_seq(segs), base=True,
                                 num_parts=num_parts)
-    # dir-wide sweep (not just `segs`): invisible orphans — e.g. a delta
-    # segment written at a base segment's seq — never appear in
-    # _emit_segments and would otherwise linger forever
+    # dir-wide sweep (not just `segs`): segments _emit_segments hides
+    # (below the newest base) would otherwise linger forever
     for fn in os.listdir(d):
         p = os.path.join(d, fn)
         if (_EMIT_SEG_RE.match(fn)
                 and os.path.abspath(p) != os.path.abspath(final)):
             shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) \
                 else os.remove(p)
-    # floors are redundant against a freshly-compacted (all-valid) log
-    _drop_stale_floors(d)
 
 
 def _reset_lens_state(store: DatasetStore, author: str, name: str) -> None:
@@ -1036,16 +920,18 @@ def _small_delta_build(spark, store: DatasetStore, author: str, name: str, *,
     driver over the same file formats, in the same durable-write order as
     :func:`_distributed_build` (so the crash protocol is unchanged): the
     hash-suppressed cache write (:meth:`DatasetStore.write_entries`,
-    precanonical — ``sha256(value)``, byte-identical to the JVM ``sha2``),
-    one single-file emission segment, the stale floors, the affected-key
-    gather (a filtered read of the out_id-sorted log, the prior-floor
-    validity check, and the anti-join on delta paths), the fold
-    (:func:`fold_emissions`), and the hash-suppressed output write.
+    precanonical — ``sha256(value)``, byte-identical to the JVM ``sha2``);
+    one single-file emission segment, holding the fresh emissions and a
+    tombstone for every ``(out_id, path)`` a filtered read of the log finds
+    for a delta path; the gather of the segment's out_ids from the
+    out_id-sorted log, the validity rule of :func:`_live_emissions` and the
+    fold (:func:`fold_emissions`); and the hash-suppressed output write.
 
     Driver memory: the collected delta is at most ``AFFECTED_COLLECT_MAX``
-    records (the selection rule in :func:`build_lens`); an affected-key set
-    or an emission gather over the same bound is folded on Spark instead
-    (:func:`_reduce_affected`, fed from the driver tables).
+    records (the selection rule in :func:`build_lens`); a tombstone scan
+    over the same bound hands the segment write and the fold to Spark
+    (:func:`_write_and_reduce`), an affected-key set or emission gather
+    over it the fold (:func:`_reduce_affected`).
 
     Returns ``(output collection meta, records mapped)``."""
     import pyarrow.compute as pc
@@ -1069,68 +955,77 @@ def _small_delta_build(spark, store: DatasetStore, author: str, name: str, *,
 
     emit_d = _emit_dir(store, author, name)
     _install_inflight_marker(emit_d)
-    cache_meta = store.write_entries(
+    store.write_entries(
         author, _cache_name(name),
         [*zip(paths, m["value"].to_pylist()), *((p, None) for p in gone)],
         source=_CACHE_SOURCE, precanonical=True, no_links=True)
-    seq_now, ver_now = cache_meta.last_seq, cache_meta.version
     trace("cache_write")
 
-    # one row per emission, stamped with the post-write cache version
+    # one row per emission, stamped with this build's segment seq
+    seq = _next_emit_seq(old_emit_segs)
     emits = m["emits"].combine_chunks()
     src = m.select(["path", "input_idx", "nat_key", "src_rid"]).take(
         pc.list_parent_indices(emits))
     flat = pc.list_flatten(emits)
     new = pa.table({
         "path": src["path"],
-        "version": pa.array([ver_now] * len(flat), pa.int64()),
+        "version": pa.array([seq] * len(flat), pa.int64()),
         "out_id": flat.field("k"), "input_idx": src["input_idx"],
         "nat_key": src["nat_key"], "src_rid": src["src_rid"],
         "emit_idx": flat.field("i"), "value": flat.field("v")})
-    if n_fresh > 0:
-        _write_emit_segment_local(new, emit_d, seq_now)
-        trace("emit_write")
-    prior_floors = _stale_floor_files(emit_d)
-    _write_stale_floors_local(delta_paths, ver_now, emit_d, seq_now)
-    trace("stale_write")
-
-    # affected out_ids: this build's emissions + every logged generation of
-    # the delta paths (see _reduce_affected)
+    # … and one tombstone per (out_id, path) the log holds for a delta path
     old_files = [f for seg in old_emit_segs for f in _segment_files(seg)]
-    old_ids = _scan_emit_log(old_files, ["out_id"],
-                             pc.field("path").isin(delta_paths),
-                             max_rows=AFFECTED_COLLECT_MAX)
-    affected = None if old_ids is None else sorted(
-        set(new["out_id"].to_pylist()) | set(old_ids["out_id"].to_pylist()))
+    keys = ["path", "out_id", "input_idx", "src_rid"]
+    old_keys = _scan_emit_log(old_files, keys,
+                              pc.field("path").isin(delta_paths),
+                              max_rows=AFFECTED_COLLECT_MAX)
+    if old_keys is None:
+        # over the driver bound: write the segment and fold on Spark
+        return _write_and_reduce(
+            spark, store, author, name,
+            emit_delta=spark.createDataFrame(new),
+            delta_paths=spark.createDataFrame(
+                pa.table({"path": pa.array(delta_paths, pa.string())})),
+            old_emit_segs=old_emit_segs, seq=seq, trace=trace), n_fresh
+    tombs = old_keys.group_by(keys).aggregate([])
+    n = tombs.num_rows
+    seg = pa.concat_tables([new, pa.table({
+        **{c: tombs[c] for c in keys},
+        "version": pa.array([seq] * n, pa.int64()),
+        "nat_key": pa.array([natural_pad(r) for r in
+                             tombs["src_rid"].to_pylist()], pa.string()),
+        "emit_idx": pa.nulls(n, pa.int32()),
+        "value": pa.nulls(n, pa.string()),
+    }).select(new.column_names).cast(new.schema)])
+    affected = sorted(set(seg["out_id"].to_pylist()))
+    if not affected:
+        return store.get_meta(author, name, source="lenses"), n_fresh
+    seg_path = _write_emit_segment_local(seg, emit_d, seq)
+    trace("emit_write")
+
     old = None
-    if affected is not None and len(affected) <= AFFECTED_COLLECT_MAX:
-        if not affected:
-            return store.get_meta(author, name, source="lenses"), n_fresh
+    if len(affected) <= AFFECTED_COLLECT_MAX:
         old = _scan_emit_log(old_files, _EMIT_LOG_SCHEMA.names,
                              pc.field("out_id").isin(affected),
                              max_rows=AFFECTED_COLLECT_MAX)
     if old is None:
-        # over the driver bound: fold on Spark, from the same inputs
-        return _reduce_affected(
-            spark, store, author, name,
-            emit_delta=spark.createDataFrame(new),
-            old_log=_read_emit_log(spark, old_emit_segs),
-            delta_paths=spark.createDataFrame(
-                pa.table({"path": pa.array(delta_paths, pa.string())})),
-            floors=_read_stale_floors(spark, prior_floors),
-            trace=trace), n_fresh
+        # over the driver bound: fold on Spark, from the written log
+        return _reduce_affected(spark, store, author, name,
+                                segs=[*old_emit_segs, seg_path],
+                                trace=trace), n_fresh
 
-    # validity: drop generations below their path's max PRIOR floor, and
-    # every old generation of a delta path — the twin of _reduce_affected's
-    # anti-join, and like it what retires the previous generation
-    floors = _floor_max_local(prior_floors)
-    delta_set = set(delta_paths)
-    rows = [(o, i, natural_pad(r), r, e, v) for p, ver, o, i, r, e, v in
-            zip(*(old[c].to_pylist() for c in _EMIT_LOG_SCHEMA.names))
-            if p not in delta_set and ver >= floors.get(p, ver)]
-    rows += zip(*(new[c].to_pylist() for c in _EMIT_COLS))
-    rows.sort(key=lambda r: r[:5])  # the full fold key
-    reduced = dict(fold_emissions((r[0], r[5]) for r in rows))
+    # validity (:func:`_live_emissions`): the rows at the highest version
+    # of their (out_id, path), tombstones dropped
+    rows = [row for t in (old, seg) for row in
+            zip(*(t[c].to_pylist() for c in _EMIT_LOG_SCHEMA.names))]
+    top: dict = {}
+    for p, ver, o, *_ in rows:
+        top[o, p] = max(ver, top.get((o, p), ver))
+    live = sorted(((o, i, natural_pad(r), r, e, v)
+                   for p, ver, o, i, r, e, v in rows
+                   if v is not None and ver == top[o, p]),
+                  key=lambda r: r[:5])  # the full fold key
+    reduced = dict(fold_emissions((r[0], r[5]) for r in live))
     trace(f"reduce(n={len(reduced)})")
     # affected ids with no remaining emissions are deleted outputs
     stats_meta = store.write_entries(
@@ -1140,32 +1035,53 @@ def _small_delta_build(spark, store: DatasetStore, author: str, name: str, *,
     return stats_meta, n_fresh
 
 
+def _write_and_reduce(spark, store: DatasetStore, author: str, name: str, *,
+                      emit_delta, delta_paths, old_emit_segs: list[str],
+                      seq: int, num_parts: int = 1, trace):
+    """The Spark tail of an incremental build, after its cache write: write
+    this build's emission segment at ``seq`` — ``emit_delta`` (stamped
+    ``seq``) plus one tombstone per ``(out_id, path)`` the log holds for a
+    ``delta_paths`` path — then re-reduce its out_ids
+    (:func:`_reduce_affected`).  Returns the output collection's meta."""
+    from pyspark.sql import functions as F
+
+    tombs = _with_nat_key(
+        _read_emit_log(spark, old_emit_segs)
+        .join(F.broadcast(delta_paths), "path", "left_semi")
+        .select("path", "out_id", "input_idx", "src_rid").distinct()
+        .withColumns({"version": F.lit(seq).cast("long"),
+                      "emit_idx": F.lit(None).cast("int"),
+                      "value": F.lit(None).cast("string")}))
+    with job_desc(spark, f"lens {author}:{name} emit write"):
+        seg = _write_emit_segment(emit_delta.unionByName(tombs),
+                                  _emit_dir(store, author, name), seq,
+                                  num_parts=num_parts)
+    trace("emit_write")
+    return _reduce_affected(spark, store, author, name,
+                            segs=[*old_emit_segs, seg], trace=trace)
+
+
 def _reduce_affected(spark, store: DatasetStore, author: str, name: str, *,
-                     emit_delta, old_log, delta_paths, floors, trace):
-    """Re-reduce the affected out_ids of an incremental build on Spark and
-    write them (the output write); returns the output collection's meta.
+                     segs: list[str], trace):
+    """Re-reduce the out_ids of this build's emission segment (``segs[-1]``)
+    over the whole log ``segs`` on Spark and write them (the output write);
+    returns the output collection's meta.
 
     Emissions come from the EMISSIONS STORE (exploded at write time,
     range-sorted by out_id), not from re-parsing the cache.  Only
-    *affected* out_ids are re-reduced: keys touched by fresh map results,
-    by the pre-change emissions of re-mapped paths, or by pruned paths.
-    Gathering those keys' emissions is a PRUNED scan — the ``out_id IN
-    (...)`` predicate pushes into the sorted parquet and skips non-matching
-    row groups; validity (latest generation only) is a thin (path, version)
-    join against the PRIOR ``floors``, never a fat-value parse.  Untouched
+    *affected* out_ids are re-reduced: the segment holds every key a fresh
+    emission touches or a tombstone retires.  Gathering those keys'
+    emissions is a PRUNED scan — the ``out_id IN (...)`` predicate pushes
+    into the sorted parquet and skips non-matching row groups; validity
+    (:func:`_live_emissions`) rides the fold's out_id shuffle.  Untouched
     keys keep their stored reduction — at 100 TB a point-write re-reduces a
     handful of keys reading a handful of row groups (the reference
     re-folds everything each build, lens.js:204-225; this is strictly
     stronger incrementality)."""
     from pyspark.sql import functions as F
 
-    # out_ids from NEW map results + from ALL logged generations of the
-    # changed/pruned paths (a path-only semi-join: stale generations'
-    # out_ids re-reduce too — idempotent, and it spares the build the
-    # O(base) cache-key scan the exact-version match needed)
-    old_ids = (old_log.join(F.broadcast(delta_paths), "path", "left_semi")
-               .select("out_id"))
-    affected = (emit_delta.select("out_id").unionByName(old_ids)
+    log = _read_emit_log(spark, segs)
+    affected = (_read_emit_log(spark, segs[-1:]).select("out_id")
                 .distinct().persist())
     # one probe job replaces the old count()+collect() pair: collect up
     # to cap+1 rows — emptiness, the cap branch, AND the id list all
@@ -1183,38 +1099,16 @@ def _reduce_affected(spark, store: DatasetStore, author: str, name: str, *,
             # driver-side key list ⇒ parquet pushdown prunes row groups
             # of the sorted log; the whole gather reads ~|affected| keys
             ids = [r["out_id"] for r in probe_rows]
-            old_part = old_log.where(F.col("out_id").isin(ids))
-            new_part = emit_delta.where(F.col("out_id").isin(ids))
+            gathered = log.where(F.col("out_id").isin(ids))
         else:
             ids = None
-            old_part = old_log.join(affected, "out_id", "left_semi")
-            new_part = emit_delta.join(affected, "out_id", "left_semi")
-        # validity: drop generations below their path's max floor
-        # (PRIOR floors, read before this build appended its own).
-        # Both join sides are O(churn)/O(affected) — AQE broadcasts the
-        # aggregated floors; nothing here scales with base size.
-        if floors is not None:
-            floor_max = floors.groupBy("path").agg(
-                F.max("version").alias("_floor"))
-            valid_old = (old_part.join(floor_max, "path", "left")
-                         .where(F.col("_floor").isNull()
-                                | (F.col("version") >= F.col("_floor")))
-                         .drop("_floor"))
-        else:
-            valid_old = old_part
-        # this build's emit_delta re-homes EVERY delta path at ver_now,
-        # and the PRIOR floors never cover a delta path's previous
-        # generation (that generation is at or above every floor written
-        # for its path before this build).  So this anti-join — and its
-        # twin, ``p not in delta_set`` in _small_delta_build — is what
-        # retires the previous generation on EVERY incremental build;
-        # without it the old and new generations would both fold.
-        # O(churn): the delta paths are broadcast.
-        valid_old = valid_old.join(F.broadcast(delta_paths),
-                                   "path", "left_anti")
-        gathered = valid_old.select(*_EMIT_COLS).unionByName(
-            new_part.select(*_EMIT_COLS))
-        reduced = reduce_outputs(gathered).persist()
+            gathered = log.join(affected, "out_id", "left_semi")
+        # the (out_id, path) validity window needs no shuffle of its own
+        # on the out_id-partitioned frame the fold needs anyway
+        live = _with_nat_key(_live_emissions(gathered.repartition("out_id")))
+        reduced = reduce_outputs(
+            live.sortWithinPartitions(*_FOLD_KEY).select(*_EMIT_COLS),
+            presorted=True).persist()
         # materialize NOW: the write plan references `reduced` twice
         # (upserts + the deletes anti-join); an unmaterialized persist
         # would re-run the whole reduce per reference inside one job
@@ -1267,7 +1161,6 @@ def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
     gone = gone_paths.select(F.col("path").alias("record_id"),
                              F.lit(None).cast("string").alias("value"))
     delta = cache_entries.unionByName(gone)
-    delta_paths = mapped.select("path").unionByName(gone_paths)
     # inflight marker: from the cache write to set_config this build holds
     # partially-committed state; a crash in the window is detected and
     # recovered by the next build (crash-safety comment at _INFLIGHT_MARKER)
@@ -1278,22 +1171,17 @@ def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
                            source=_CACHE_SOURCE, precanonical=True,
                            no_links=True)
     trace("cache_write")
-    cache_meta_now = store.get_meta(author, _cache_name(name),
-                                    source=_CACHE_SOURCE)
-    seq_now = cache_meta_now.last_seq       # emission SEGMENT numbering
-    ver_now = cache_meta_now.version        # per-row validity stamp
 
     # emissions come straight off the persisted map result
-    emit_delta = (_emissions_df(mapped)
-                  .withColumn("version", F.lit(ver_now).cast("long")))
-
+    seq = _next_emit_seq(old_emit_segs)
+    emit_delta = _emissions_df(mapped, seq)
+    # ~20k rows/file: single-row-group files (foldable without a shuffle)
+    # AND enough files that the direct fold uses every core
+    num_parts = max(1, min(256, n_fresh // 20_000 + 1))
     if first_build:
-        # ~20k rows/file: single-row-group files (foldable without a
-        # shuffle) AND enough files that the direct fold uses every core
-        num_parts = max(1, min(256, n_fresh // 20_000 + 1))
         with job_desc(spark, f"lens {author}:{name} emit write"):
             seg_path = _write_emit_segment(
-                emit_delta, emit_d, seq_now, base=True, num_parts=num_parts)
+                emit_delta, emit_d, seq, base=True, num_parts=num_parts)
         trace("emit_write")
         # Fold off the just-written segment (page-cache-hot): ~20k-row
         # single-row-group files are never split, so every out_id group is
@@ -1302,7 +1190,8 @@ def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
         # this decode; the InMemoryRelation build cost ~3× the decode —
         # see _write_emit_segment.)
         reduced = reduce_outputs(
-            _read_emit_log(spark, [seg_path]).select(*_EMIT_COLS),
+            _with_nat_key(_read_emit_log(spark, [seg_path]))
+            .select(*_EMIT_COLS),
             presorted=True)
         stats_meta = store.write_entries_df(spark, author, name, reduced,
                                             source="lenses",
@@ -1310,31 +1199,10 @@ def _distributed_build(spark, store: DatasetStore, author: str, name: str, *,
                                             precanonical=True,
                                             assume_unique_ids=True)
     else:
-        if n_fresh > 0:
-            num_parts = max(1, min(256, n_fresh // 20_000 + 1))
-            with job_desc(spark, f"lens {author}:{name} emit write"):
-                _write_emit_segment(emit_delta, emit_d, seq_now,
-                                    num_parts=num_parts)
-            trace("emit_write")
-        old_log = _read_emit_log(spark, old_emit_segs)
-
-        # read PRIOR floors first: this build's own floors only affect its
-        # delta paths, which the gather excludes outright (anti-join) — so
-        # right after a compaction (zero floor files) the validity join
-        # disappears from the plan entirely
-        floors = _read_stale_floors(spark, _stale_floor_files(emit_d))
-
-        # stale-floor sidecar (see the module comment above
-        # _STALE_RE): every path this build touched gets floor
-        # ver_now — its new generation (if any) is AT ver_now and survives;
-        # every older generation dies.
-        _write_stale_floors(
-            delta_paths.withColumn("version", F.lit(ver_now).cast("long")),
-            emit_d, seq_now)
-        trace("stale_write")
-        stats_meta = _reduce_affected(
+        stats_meta = _write_and_reduce(
             spark, store, author, name, emit_delta=emit_delta,
-            old_log=old_log, delta_paths=delta_paths, floors=floors,
+            delta_paths=mapped.select("path").unionByName(gone_paths),
+            old_emit_segs=old_emit_segs, seq=seq, num_parts=num_parts,
             trace=trace)
     mapped.unpersist(blocking=True)
     return stats_meta, n_fresh
@@ -1361,10 +1229,12 @@ def build_lens(spark, store: DatasetStore, author: str, name: str, *,
       distributed job, cost ∝ the delta and the affected keys.
 
     Both follow one durable-write order (cache segment → emit segment →
-    stale floors → output write → cursor), bracketed by the inflight
-    marker.  A build that finds the marker (a crash) or a built lens with
-    no emission segment (a lost log) resets the lens's cache and log and
-    runs as a first build (crash-safety comment at ``_INFLIGHT_MARKER``).
+    output write → cursor), bracketed by the inflight marker.  The emit
+    segment also retires the old generations of every re-mapped or pruned
+    path with tombstone rows (the emissions-store comment).  A build that
+    finds the marker (a crash) or a built lens with no emission segment (a
+    lost log) resets the lens's cache and log and runs as a first build
+    (crash-safety comment at ``_INFLIGHT_MARKER``).
 
     Returns build stats {mapped, outputs, version, records_changed};
     ``outputs`` is None unless ``count_outputs`` (the count is a whole extra

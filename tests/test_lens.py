@@ -252,7 +252,8 @@ class TestGoldenBuild:
     def test_emissions_log_many_builds_and_compaction(self, spark, store):
         # 10 incremental builds push the emissions log past the compaction
         # threshold; every intermediate state must stay correct (validity is
-        # the (path, version) match — stale generations never resurface)
+        # latest-wins per (out_id, path) — retired generations never
+        # resurface)
         import os
 
         from pigeon_optics_spark.lens import _emit_dir, _emit_segments
@@ -293,7 +294,8 @@ class TestGoldenBuild:
         # emissions log after 9+ builds — incremental rebuilds then silently
         # dropped retained contributions of untouched records, and
         # _compact_emissions wrote an empty base (log destroyed).  Validity
-        # is keyed on (path, version) now, which compaction preserves.
+        # is the emission log's own latest-wins rule now; it never reads
+        # the cache.
         from pigeon_optics_spark.lens import _cache_name, _emit_segments
 
         store.create("system", "d")
@@ -628,75 +630,144 @@ def test_build_lens_leaves_no_persistent_rdds(spark, tmp_path):
                 == before), f"rebuild {i} leaked a persisted RDD"
 
 
-class TestStaleFloors:
-    """The stale-floor sidecar (r10): incremental validity is an anti-join
-    against per-build (path, floor) files — O(churn) — instead of the
-    O(base) cache-key semi-join.  These pin the sidecar's lifecycle and
-    the equivalence with ground truth across re-maps and deletes."""
+class TestTombstones:
+    """Emission-log validity is the store segment log's rule: per
+    ``(out_id, path)`` the rows at the highest version win, and a NULL
+    value is a tombstone that emits nothing.  A build retires the old
+    generations of every path it re-maps or prunes with tombstone rows in
+    its own segment.  These pin the rule against ground truth on both
+    plans, across re-maps, moves and deletes, with non-idempotent counts
+    so a generation folded twice shows as a wrong number."""
 
-    def _out(self, store):
+    CODE = """\
+for tag in data['tags']:
+    output(tag, Set([path.recordID]))
+    output('n:' + tag, 1)
+"""
+
+    def _lens(self, spark, store, records, plan, monkeypatch):
+        if plan == "spark":
+            import pigeon_optics_spark.lens as lens_mod
+
+            monkeypatch.setattr(lens_mod, "AFFECTED_COLLECT_MAX", 0)
+        store.create("system", "test-dataset")
+        store.write_entries("system", "test-dataset", records)
+        create_lens(store, "system", "tag-index",
+                    inputs=["/datasets/system:test-dataset"], code=self.CODE)
+        build_lens(spark, store, "system", "tag-index")
+
+    def _put(self, spark, store, rid, tags):
+        store.write("system", "test-dataset", rid, {"tags": tags})
+        build_lens(spark, store, "system", "tag-index")
+
+    def _out(self, store, name="tag-index"):
         return {r["id"]: r["value"] for r in
-                store.iterate("system", "tag-index", source="lenses",
+                store.iterate("system", name, source="lenses",
                               fast_read=True)}
 
     def _fresh_rebuild(self, spark, store):
         """Ground truth: the same inputs through a brand-new lens."""
         create_lens(store, "system", "truth",
-                    inputs=["/datasets/system:test-dataset"],
-                    code=INVERT_CODE)
+                    inputs=["/datasets/system:test-dataset"], code=self.CODE)
         build_lens(spark, store, "system", "truth")
-        return {r["id"]: r["value"] for r in
-                store.iterate("system", "truth", source="lenses",
-                              fast_read=True)}
+        return self._out(store, "truth")
 
-    def test_floor_files_written_and_compacted(self, spark, store):
+    def test_log_holds_only_segments(self, spark, store, monkeypatch):
         import os
 
-        from pigeon_optics_spark.lens import _STALE_RE, _emit_dir
+        from pigeon_optics_spark.lens import _emit_dir
 
-        store.create("system", "test-dataset")
-        store.write_entries("system", "test-dataset",
-                            [("a", {"tags": ["x"]}), ("b", {"tags": ["y"]})])
-        create_lens(store, "system", "tag-index",
-                    inputs=["/datasets/system:test-dataset"],
-                    code=INVERT_CODE)
+        self._lens(spark, store, [("a", {"tags": ["x"]}),
+                                  ("b", {"tags": ["y", "x"]})],
+                   "small", monkeypatch)
+        for i in range(9):  # enough re-maps to cross the compaction bound
+            self._put(spark, store, "a", [f"t{i}"])
+        store.delete_record("system", "test-dataset", "b")
         build_lens(spark, store, "system", "tag-index")
-        d = _emit_dir(store, "system", "tag-index")
-        n_floors = lambda: sum(bool(_STALE_RE.match(f))  # noqa: E731
-                               for f in os.listdir(d))
-        assert n_floors() == 0  # base segment, no churn yet
-        for i in range(9):  # enough rebuilds to cross the compaction bound
-            store.write("system", "test-dataset", "a", {"tags": [f"t{i}"]})
-            build_lens(spark, store, "system", "tag-index")
-        # compaction ran (>8 segments) and dropped the then-redundant
-        # floors; at most the post-compaction builds' floors remain
-        assert n_floors() < 9
+        entries = os.listdir(_emit_dir(store, "system", "tag-index"))
+        assert entries and all(f.startswith("seg_") for f in entries), entries
         assert self._out(store) == self._fresh_rebuild(spark, store)
 
-    def test_multi_generation_path_keeps_only_latest(self, spark, store):
-        store.create("system", "test-dataset")
-        store.write_entries("system", "test-dataset",
-                            [("a", {"tags": ["x", "keep"]}),
-                             ("b", {"tags": ["keep"]})])
-        create_lens(store, "system", "tag-index",
-                    inputs=["/datasets/system:test-dataset"],
-                    code=INVERT_CODE)
-        build_lens(spark, store, "system", "tag-index")
+    @pytest.mark.parametrize("plan", ["small", "spark"])
+    def test_multi_generation_path_keeps_only_latest(self, spark, store,
+                                                     monkeypatch, plan):
+        self._lens(spark, store, [("a", {"tags": ["x", "keep"]}),
+                                  ("b", {"tags": ["keep"]})],
+                   plan, monkeypatch)
         # two successive re-maps of the same path WITHOUT compaction: the
         # log holds three generations of 'a'; only the newest may fold
-        store.write("system", "test-dataset", "a", {"tags": ["y", "keep"]})
-        build_lens(spark, store, "system", "tag-index")
-        store.write("system", "test-dataset", "a", {"tags": ["z", "keep"]})
-        build_lens(spark, store, "system", "tag-index")
+        self._put(spark, store, "a", ["y", "keep"])
+        self._put(spark, store, "a", ["z", "keep"])
         got = self._out(store)
         assert "x" not in got and "y" not in got
         assert got["z"] == PSet(["a"])
-        assert got["keep"] == PSet(["a", "b"])
+        assert got["keep"] == PSet(["a", "b"]) and got["n:keep"] == 2
         # and a delete: every generation of 'a' must die
         store.delete_record("system", "test-dataset", "a")
         build_lens(spark, store, "system", "tag-index")
         got = self._out(store)
         assert "z" not in got and got["keep"] == PSet(["b"])
+        assert got == self._fresh_rebuild(spark, store)
+
+    @pytest.mark.parametrize("plan", ["small", "spark"])
+    def test_path_moves_back_to_a_retired_out_id(self, spark, store,
+                                                 monkeypatch, plan):
+        """A → B → A without compaction: the move back emits at A again
+        while A's first generation is tombstoned; only the newest may
+        fold, once."""
+        self._lens(spark, store, [("a", {"tags": ["A"]}),
+                                  ("b", {"tags": ["A"]})], plan, monkeypatch)
+        self._put(spark, store, "a", ["B"])
+        assert self._out(store) == {"A": PSet(["b"]), "n:A": 1,
+                                    "B": PSet(["a"]), "n:B": 1}
+        self._put(spark, store, "a", ["A"])
+        got = self._out(store)
+        assert got == {"A": PSet(["a", "b"]), "n:A": 2}
+        assert got == self._fresh_rebuild(spark, store)
+
+    @pytest.mark.parametrize("plan", ["small", "spark"])
+    def test_prune_only_build_writes_only_tombstones(self, spark, store,
+                                                     monkeypatch, plan):
+        import pyarrow.parquet as pq
+
+        from pigeon_optics_spark.lens import _emit_segments
+
+        self._lens(spark, store, [("a", {"tags": ["A"]}),
+                                  ("b", {"tags": ["A", "B"]})],
+                   plan, monkeypatch)
+        store.delete_record("system", "test-dataset", "b")
+        stats = build_lens(spark, store, "system", "tag-index")
+        assert stats["mapped"] == 0
+        segs = _emit_segments(store, "system", "tag-index")
+        assert len(segs) == 2
+        seg = pq.read_table(segs[-1])
+        assert seg["value"].null_count == seg.num_rows
+        assert sorted(zip(seg["out_id"].to_pylist(),
+                          seg["path"].to_pylist())) == [
+            (o, "/datasets/system:test-dataset/records/b")
+            for o in ("A", "B", "n:A", "n:B")]
+        got = self._out(store)
+        assert got == {"A": PSet(["a"]), "n:A": 1}
+        assert got == self._fresh_rebuild(spark, store)
+
+    @pytest.mark.parametrize("plan", ["small", "spark"])
+    def test_redeleting_a_pruned_path_keeps_its_tombstones(
+            self, spark, store, monkeypatch, plan):
+        """A pruned path deleted again leaves the compute cache untouched
+        (a fully suppressed write adds no cache segment), yet the build
+        still writes the path's tombstones again: its segment must not
+        replace the previous build's, which holds that build's re-map of
+        'a' and the tombstones retiring 'a''s first generation."""
+        self._lens(spark, store, [("a", {"tags": ["A"]}),
+                                  ("b", {"tags": ["A", "B"]})],
+                   plan, monkeypatch)
+        store.delete_record("system", "test-dataset", "b")
+        self._put(spark, store, "a", ["C"])
+        store.write("system", "test-dataset", "b", {"tags": ["D"]})
+        store.delete_record("system", "test-dataset", "b")
+        build_lens(spark, store, "system", "tag-index")
+        got = self._out(store)
+        assert got == {"C": PSet(["a"]), "n:C": 1}
         assert got == self._fresh_rebuild(spark, store)
 
 

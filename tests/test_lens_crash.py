@@ -1,9 +1,10 @@
 """Crash-injection tests for the lens build protocol (VERDICT r10 item 3).
 
 A build's durable writes happen in this order: cache segment -> emit
-segment -> stale floors -> output write -> set_config (cursor advance) ->
-compactions.  The ``_build_inflight`` marker brackets the whole window;
-these tests kill a build at each seam, then assert the next build HEALS:
+segment (fresh emissions plus the tombstones that retire old generations)
+-> output write -> set_config (cursor advance) -> compactions.  The
+``_build_inflight`` marker brackets the whole window; these tests kill a
+build at each seam, then assert the next build HEALS:
 it finds the marker, resets the lens (empty compute cache, no emission
 log, no cursor) and runs a first build that re-maps every live input
 record.  The final output collection must equal a fresh single build over
@@ -64,17 +65,9 @@ def _crash_patch(monkeypatch, window: str):
             raise Boom("pre_emit")
         monkeypatch.setattr(lens_mod, "_write_emit_segment", boom)
         monkeypatch.setattr(lens_mod, "_write_emit_segment_local", boom)
-    elif window == "pre_floors":
-        # dies after the emit write, before the stale-floor write —
-        # the exact window VERDICT r10 flagged as argued-not-tested
-        # (both writers: small deltas go through the driver-side one)
-        def boom(*a, **k):
-            raise Boom("pre_floors")
-        monkeypatch.setattr(lens_mod, "_write_stale_floors", boom)
-        monkeypatch.setattr(lens_mod, "_write_stale_floors_local", boom)
     elif window == "pre_output":
-        # dies after floors, before the output write (both writers: the
-        # small-delta build writes its output driver-side)
+        # dies after the emit write, before the output write (both
+        # writers: the small-delta build writes its output driver-side)
         orig_df = DatasetStore.write_entries_df
         orig = DatasetStore.write_entries
 
@@ -98,7 +91,7 @@ def _crash_patch(monkeypatch, window: str):
         raise ValueError(window)
 
 
-WINDOWS = ["pre_emit", "pre_floors", "pre_output", "pre_cursor"]
+WINDOWS = ["pre_emit", "pre_output", "pre_cursor"]
 
 
 @pytest.mark.parametrize("window", WINDOWS)
@@ -128,7 +121,7 @@ def test_incremental_crash_heals(spark, tmp_path, monkeypatch, window,
         live[rid] = v
 
     # a healthy base build, then a second incremental one (so the log has
-    # real history for floors/orphans to interact with)
+    # real history for tombstones/orphans to interact with)
     put("r1", ["cat", "dog"])
     put("r2", ["dog"])
     build_lens(spark, inc, "a", "l")
@@ -174,8 +167,8 @@ def test_incremental_crash_heals(spark, tmp_path, monkeypatch, window,
                  if got[k] != want[k]},
     }
 
-    # post-heal incrementality must still be exact (floors/compaction
-    # state after a heal feeds the next delta build)
+    # post-heal incrementality must still be exact (the log and
+    # compaction state after a heal feed the next delta build)
     put("r6", ["dog", "cat"])
     inc.delete_record("a", "d", "r3")
     del live["r3"]
@@ -229,7 +222,7 @@ def test_double_crash_then_heal(spark, tmp_path, monkeypatch):
     live["r1"] = {"tags": ["cat", "fox"]}
     inc.write("a", "d", "r1", live["r1"])
     with monkeypatch.context() as mp:
-        _crash_patch(mp, "pre_floors")
+        _crash_patch(mp, "pre_emit")
         with pytest.raises(Boom):
             build_lens(spark, inc, "a", "l")
     spark.catalog.clearCache()

@@ -72,7 +72,7 @@ def _force_plan(monkeypatch, plan: str) -> None:
 def test_incremental_equals_fresh_rebuild(spark, tmp_path, monkeypatch,
                                           seed, rounds, plan):
     """rounds=10 (seed 47) drives the sequence across the emit-log
-    compaction bound (>8 segments), so floor bookkeeping and compaction
+    compaction bound (>8 segments), so tombstone bookkeeping and compaction
     are both exercised under random op interleaving."""
     _force_plan(monkeypatch, plan)
     rng = random.Random(seed)

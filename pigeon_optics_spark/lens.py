@@ -812,8 +812,13 @@ def _compact_emissions(spark, store: DatasetStore, author: str,
     segs = _emit_segments(store, author, name)
     if len(segs) <= 1:
         return
+    import pyarrow.parquet as pq
+
     valid = _with_nat_key(_live_emissions(_read_emit_log(spark, segs)))
-    n = valid.count()
+    # sized from the footers' row counts (an upper bound on the live rows:
+    # it includes tombstones and the rows they retire), not a count job
+    n = sum(pq.ParquetFile(f).metadata.num_rows
+            for seg in segs for f in _segment_files(seg))
     num_parts = max(1, min(256, n // 200_000 + 1))
     final = _write_emit_segment(valid, d, _next_emit_seq(segs), base=True,
                                 num_parts=num_parts)

@@ -202,6 +202,43 @@ def _band_hashes(sig: DataFrame, bands: int, band_rows: int) -> DataFrame:
     ).select("id", "bh.band_id", "bh.band_hash")
 
 
+def _lsh_survivors(sig: DataFrame, bands: int, band_rows: int,
+                   est_min_matches: int,
+                   max_bucket_size: int | None) -> DataFrame:
+    """Steps 2-5 of :func:`minhash_lsh_pairs`: signatures (id, sig) →
+    candidate pairs (id_a < id_b) that share an uncapped band bucket and
+    pass the signature-estimate filter."""
+    banded = _band_hashes(sig, bands, band_rows)
+    if max_bucket_size is not None:
+        # aggregation keyed exactly like the join — AQE reuses the exchange;
+        # left_semi keeps only rows in surviving buckets
+        small_buckets = (
+            banded.groupBy("band_id", "band_hash")
+            .agg(F.count("*").alias("bsz"))
+            .where(F.col("bsz") <= max_bucket_size)
+            .select("band_id", "band_hash")
+        )
+        banded = banded.join(small_buckets, ["band_id", "band_hash"], "left_semi")
+    a, b = banded.alias("a"), banded.alias("b")
+    cands = (
+        a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
+               & (F.col("a.band_hash") == F.col("b.band_hash"))
+               & (F.col("a.id") < F.col("b.id")))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+    )
+    # signature-estimate pre-filter (broadcastable: k longs per doc)
+    siga = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+    sigb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+    return (
+        cands.join(siga, "id_a").join(sigb, "id_b")
+        .withColumn("est_matches", F.size(F.filter(
+            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)))
+        .where(F.col("est_matches") >= est_min_matches)
+        .select("id_a", "id_b")
+    )
+
+
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", k: int = 64, bands: int = 8,
                       band_rows: int = 4, n: int = 5,
@@ -241,41 +278,25 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
        P ≈ 0.6% while recall at Jaccard ≥ 0.6 is ≈ 95%;
     6. exact n-gram Jaccard on the survivors only.
     """
-    # persist + materialize: the signature table feeds THREE consumers
-    # (banding + both sides of the estimate filter); concurrent stages of
-    # one job each recompute an unmaterialized persist, so force it now.
-    # Tiny (k longs per doc); evicted LRU.
-    sig = minhash_signatures(df, text_col, id_col, k, n).persist()
-    sig.count()
-    banded = _band_hashes(sig, bands, band_rows)
-    if max_bucket_size is not None:
-        # aggregation keyed exactly like the join — AQE reuses the exchange;
-        # left_semi keeps only rows in surviving buckets
-        small_buckets = (
-            banded.groupBy("band_id", "band_hash")
-            .agg(F.count("*").alias("bsz"))
-            .where(F.col("bsz") <= max_bucket_size)
-            .select("band_id", "band_hash")
-        )
-        banded = banded.join(small_buckets, ["band_id", "band_hash"], "left_semi")
-    a, b = banded.alias("a"), banded.alias("b")
-    cands = (
-        a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
-               & (F.col("a.band_hash") == F.col("b.band_hash"))
-               & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    # signature-estimate pre-filter (broadcastable: k longs per doc)
-    siga = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sigb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    survivors = (
-        cands.join(siga, "id_a").join(sigb, "id_b")
-        .withColumn("est_matches", F.size(F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)))
-        .where(F.col("est_matches") >= est_min_matches)
-        .select("id_a", "id_b")
-    )
+    # The three frames this pass shares — the signatures (banding + both
+    # sides of the estimate filter), the survivors (both sides of the
+    # final join + the needed-id set) and the survivor docs' shingles (both
+    # sides of the final join) — are each materialized ONCE with
+    # ``localCheckpoint``: a frame shared inside one job is recomputed per
+    # consumer unless materialized first.  Not ``persist`` + ``count``: a
+    # persisted frame carries its whole cached plan into every plan built
+    # on it, so the final physical plan string grew to 1.27 MB at sf0.001
+    # (1.3 KB checkpointed) and every planning pass walked it; and
+    # checkpointed blocks are freed by the ContextCleaner once the
+    # returned frame is dropped, where persisted ones stay cached until
+    # ``clearCache``.  The price: a local checkpoint cuts the lineage, so
+    # a block lost with its executor (a crash, or dynamic allocation
+    # removing it) cannot be recomputed and the job fails, where a
+    # persisted block would be rebuilt — the trade the iterative graph
+    # operators here already make.
+    sig = minhash_signatures(df, text_col, id_col, k, n).localCheckpoint()
+    survivors = _lsh_survivors(sig, bands, band_rows, est_min_matches,
+                               max_bucket_size).localCheckpoint()
     # verify survivors with exact Jaccard — shingling only the docs that
     # actually appear in a surviving pair.  The naive alternative joins
     # survivors against a corpus-wide shingle projection on BOTH sides:
@@ -286,18 +307,13 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # ~|survivor docs| rows.  (At sf0.1 this is ~1.5s SLOWER — two extra
     # tiny stages dominate 5k docs — but the corpus-scan count is what
     # matters at the design scale; measured both, kept the scale shape.)
-    survivors = survivors.persist()
-    survivors.count()  # materialize: referenced 3x in the final job
     needed = (survivors.select(F.col("id_a").alias("id"))
               .unionByName(survivors.select(F.col("id_b").alias("id")))
               .distinct())
     sh = (df.join(F.broadcast(needed),
                   df[id_col] == needed["id"], "left_semi")
           .select(F.col(id_col).alias("id"), char_shingles(text_col, n).alias("sh"))
-          .persist())
-    sh.count()  # materialize: referenced on BOTH sides of the final join —
-    # an unmaterialized persist shared by two subtrees of one job recomputes
-    # (the r1 lens-reduce lesson); one tiny extra stage over survivor docs
+          .localCheckpoint())
     sha = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     shb = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     return (
@@ -437,25 +453,52 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     )
 
 
+#: Pair graphs of at most this many distinct directed edges (two per
+#: undirected pair) are solved by union-find on the driver; larger ones run
+#: the label-propagation loop.  Set from a measurement on 4 cores (one
+#: process per reading, numbers in SCALING.md): the driver path beat the
+#: loop at every size up to 800k edges on both shapes tried — 4-doc cliques,
+#: the loop's cheapest shape, and 8-doc chains — was even with it at 1.6M
+#: on cliques and lost at 3.2M.  It holds ~370 bytes of driver memory per
+#: edge, so the cap also bounds that at ~370 MB.  Module-level so tests
+#: can lower it to force the loop.
+CC_COLLECT_MAX = 1_000_000
+
+
 def connected_components(pairs: DataFrame, src: str = "id_a",
                          dst: str = "id_b", max_iter: int = 25) -> DataFrame:
     """Cluster near-duplicate PAIRS into components → (id, component_id),
-    ``component_id`` = the lexicographically smallest member.
+    ``component_id`` = the smallest member.  A pair with a NULL endpoint
+    is not an edge: it is dropped.
 
     This is the step after pair detection in a dedup pipeline: keep one
     canonical doc per component instead of dropping one doc per pair (pair-
     wise dropping over-deletes chains: a~b, b~c drops b AND c even when
     a~c is false).
 
-    Algorithm: min-label propagation with pointer jumping — each round a
-    node adopts the smallest label among itself, its neighbors' labels, and
-    its label's own label (``comp[comp[n]]``, the doubling step that makes
-    long chains converge in O(log n) rounds instead of O(diameter)).  Each
-    round is two shuffles (join + groupBy-min) over the label table; edges
-    are never mutated.  Convergence = a round changes no label (checked on
-    the driver with one count per round — scalar, not collect).
+    The edge list (both directions, distinct) is ``localCheckpoint``-ed
+    and probed once with ``limit(CC_COLLECT_MAX + 1)``.  A graph within
+    that bound — every pair graph the near-dup operators emit at the
+    tested scales — is collected and solved by union-find on the driver
+    (the smaller root always wins, so a root is its set's minimum), and
+    the result comes back as a local DataFrame of the ids' type.  The
+    loop below costs two shuffles and a count per round for a graph the
+    driver solves in milliseconds.  Ids are compared as the Python values
+    ``collect`` returns, which order like Spark for integer and string
+    ids.  Above the bound the probe's rows are discarded (3.2-3.6 s for
+    the 1M rows on 4 cores); probing with ``count`` first would cost
+    0.35-0.48 s there, but would add a job (0.09-0.26 s) to every graph
+    within the bound.
 
-    Determinism: labels are ids, min is total, order-free.
+    Larger graphs run min-label propagation with pointer jumping — each
+    round a node adopts the smallest label among itself, its neighbors'
+    labels, and its label's own label (``comp[comp[n]]``, the doubling
+    step that makes long chains converge in O(log n) rounds instead of
+    O(diameter)).  Each round is two shuffles (join + groupBy-min) over
+    the label table; edges are never mutated.  Convergence = a round
+    changes no label (checked on the driver with one count per round —
+    scalar, not collect).  Determinism: labels are ids, min is total,
+    order-free.
 
     Iteration hygiene: every round ends in ``localCheckpoint`` — the
     self-join (pointer jump) references the label table twice, so without
@@ -463,10 +506,33 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     spends exponential time planning (the classic Spark iterative-algorithm
     trap; this hung before the checkpoint was added).
     """
+    from pyspark.sql.types import StructField, StructType
+
     edges = (pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-             .unionByName(pairs.select(F.col(dst).alias("a"),
-                                       F.col(src).alias("b")))
+             .where(F.col("a").isNotNull() & F.col("b").isNotNull()))
+    edges = (edges.unionByName(edges.select(F.col("b").alias("a"),
+                                            F.col("a").alias("b")))
              .distinct().localCheckpoint())
+    probe = edges.limit(CC_COLLECT_MAX + 1).collect()
+    if len(probe) <= CC_COLLECT_MAX:
+        parent = {}
+
+        def find(x):
+            while parent.setdefault(x, x) != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in probe:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        id_type = edges.schema["a"].dataType
+        return pairs.sparkSession.createDataFrame(
+            [(x, find(x)) for x in parent],
+            StructType([StructField("id", id_type),
+                        StructField("component_id", id_type)]))
+
     labels = (edges.select(F.col("a").alias("node"))
               .distinct()
               .withColumn("comp", F.col("node"))
@@ -666,9 +732,13 @@ def word_trigram_set(text: str | Column) -> Column:
     toks = F.transform(words_col(F.coalesce(c, F.lit(""))),
                        lambda w: F.lower(w))
     n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), n - 2),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, 3)))
+    # zip three shifted slices: ``toks`` inside a lambda would be
+    # re-evaluated (split + lower of the whole text) for every element
+    m = F.greatest(n - 2, F.lit(0))
+    grams = F.zip_with(
+        F.zip_with(F.slice(toks, 1, m), F.slice(toks, 2, m),
+                   lambda x, y: F.concat_ws(" ", x, y)),
+        F.slice(toks, 3, m), lambda xy, z: F.concat_ws(" ", xy, z))
     return F.array_distinct(
         F.when(n >= 3, grams)
         .when(n >= 1, F.array(F.concat_ws(" ", toks)))

@@ -74,16 +74,80 @@ def test_connected_components_chain_and_islands(spark):
                    "x": "x", "y": "x", "m": "m", "n": "m"}
 
 
-def test_connected_components_long_chain_converges(spark):
-    from pigeon_optics_spark.pipeline.dedup import connected_components
+def test_connected_components_long_chain_converges(spark, monkeypatch):
+    from pigeon_optics_spark.pipeline import dedup
 
     # 40-node chain: pointer jumping must converge well under max_iter
+    # (a cap of -1 sends the graph through the label-propagation loop)
+    monkeypatch.setattr(dedup, "CC_COLLECT_MAX", -1)
     pairs = spark.createDataFrame(
         [(f"n{i:02d}", f"n{i+1:02d}") for i in range(39)],
         "id_a string, id_b string")
-    rows = connected_components(pairs, max_iter=10).collect()
+    rows = dedup.connected_components(pairs, max_iter=10).collect()
     assert len(rows) == 40
     assert {r["component_id"] for r in rows} == {"n00"}
+
+
+def _components(monkeypatch, pairs, cap=None):
+    """``connected_components``, with ``CC_COLLECT_MAX`` set to ``cap``
+    unless None → (id → component_id, output schema)."""
+    from pigeon_optics_spark.pipeline import dedup
+
+    if cap is not None:
+        monkeypatch.setattr(dedup, "CC_COLLECT_MAX", cap)
+    out = dedup.connected_components(pairs)
+    return {r["id"]: r["component_id"] for r in out.collect()}, out.schema
+
+
+def _random_graph(seed, n_nodes=60, n_edges=45):
+    import random
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(1 << 40, (1 << 40) + 10_000), n_nodes)
+    return [tuple(rng.sample(ids, 2)) for _ in range(n_edges)]
+
+
+@pytest.mark.parametrize("rows, ddl, want", [
+    pytest.param([(f"n{i:02d}", f"n{i+1:02d}") for i in range(39)],
+                 "id_a string, id_b string",
+                 {f"n{i:02d}": "n00" for i in range(40)}, id="chain40"),
+    pytest.param(_random_graph(5), "id_a long, id_b long", None,
+                 id="random-long"),
+    # the same graph under string ids: the smallest member is the
+    # lexicographically smallest, not the numerically smallest
+    pytest.param([(f"d{a}", f"d{b}") for a, b in _random_graph(5)],
+                 "id_a string, id_b string", None, id="random-string"),
+    pytest.param([], "id_a long, id_b long", {}, id="empty"),
+    # a NULL endpoint is not an edge: (NULL, 3) and (4, NULL) add nothing
+    pytest.param([(None, 3), (4, None), (2, 1)], "id_a long, id_b long",
+                 {1: 1, 2: 1}, id="null-endpoints"),
+])
+def test_connected_components_driver_matches_loop(spark, monkeypatch, rows,
+                                                  ddl, want):
+    """The driver-side union-find and the label-propagation loop (forced
+    by a cap of -1, which sends even an empty graph through it) return the
+    same components with the same id type."""
+    pairs = spark.createDataFrame(rows, ddl)
+    driver, driver_schema = _components(monkeypatch, pairs)
+    loop, loop_schema = _components(monkeypatch, pairs, -1)
+    assert driver == loop
+    assert ([f.dataType for f in driver_schema]
+            == [f.dataType for f in loop_schema]
+            == [pairs.schema["id_a"].dataType] * 2)
+    if want is None:  # the random graphs: a Python union-find replica
+        parent = {}
+
+        def find(x):
+            while parent.setdefault(x, x) != x:
+                x = parent[x]
+            return x
+
+        for a, b in rows:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        want = {x: find(x) for x in parent}
+        assert len(set(want.values())) > 5  # a graph of several components
+    assert driver == want
 
 
 def test_deterministic_sample_partition_invariant(spark):
@@ -327,6 +391,27 @@ def test_prefix_jaccard_complete_vs_bruteforce(spark, shingles, pairs, num,
     # (oracle-parity: a '' trigram would pair them in Spark while
     # DuckDB's NULL aggregate silently dropped them)
     assert not any({a, b} & {26, 27, 28} for a, b, _, _ in got)
+
+
+def test_word_trigram_set_matches_python_reference(spark, sf_dir):
+    """``word_trigram_set`` against ``_word_trigrams`` on the edge cases
+    of its short-doc and tokenizer branches and on the sf corpus."""
+    from pigeon_optics_spark.pipeline.dedup import word_trigram_set
+
+    edge = [None, "", "   ", "one", "Two words", "three Word doc",
+            "  padded\t text \n with   runs  of\twhitespace ",
+            "MiXeD cAsE mixed CASE Mixed case"]
+    df = spark.createDataFrame(list(enumerate(edge)),
+                               "doc_id long, text string")
+    corpus = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        (F.col("doc_id") + 1000).alias("doc_id"), "text")
+    rows = (df.unionByName(corpus)
+            .select("doc_id", "text", word_trigram_set("text").alias("ws"))
+            .collect())
+    assert len(rows) > len(edge)
+    for r in rows:
+        assert len(r["ws"]) == len(set(r["ws"])), r["doc_id"]
+        assert set(r["ws"]) == _word_trigrams(r["text"]), r["doc_id"]
 
 
 def test_prefix_jaccard_bucket_cap_bounds_join(spark):

@@ -94,12 +94,28 @@ def test_empty_local_df_unions_fold(spark):
 
 
 def test_minhash_candidates_no_cartesian(spark, sf_dir):
-    from pigeon_optics_spark.pipeline.dedup import minhash_lsh_pairs
+    """The LSH candidates are an equi-join on (band_id, band_hash).
+    ``minhash_lsh_pairs`` checkpoints its survivors, so its own plan
+    shows only the verify join: the candidate/survivor frame is planned
+    here before its checkpoint."""
+    import re
+
+    from pigeon_optics_spark.pipeline.dedup import (
+        _lsh_survivors,
+        minhash_lsh_pairs,
+        minhash_signatures,
+    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         F.col("doc_id"), F.col("text"))
-    pairs = minhash_lsh_pairs(docs)
-    p = plan_of(pairs)
+    p = plan_of(_lsh_survivors(minhash_signatures(docs, k=64), bands=8,
+                               band_rows=4, est_min_matches=32,
+                               max_bucket_size=64))
+    assert "CartesianProduct" not in p
+    assert "BroadcastNestedLoopJoin" not in p
+    assert re.search(r"Join \[band_id#\d+, band_hash#\d+\], "
+                     r"\[band_id#\d+, band_hash#\d+\], Inner", p), p
+    p = plan_of(minhash_lsh_pairs(docs))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 
@@ -268,22 +284,28 @@ def test_moving_average_window_input_is_aggregated(spark, sf_dir):
     assert i_exch < i_agg, p
 
 
-def test_no_unbounded_global_windows_in_scan_gates(spark, sf_dir):
-    """Sweep: across every registry gate that is a pure parquet-scan query
-    (relational/pipeline/events — no store fixture, no streaming run), an
-    unpartitioned window may appear only when the plan also carries a
-    bounded-input marker upstream (aggregate or top-k limit).  Catches the
-    store_natural_order class of regression suite-wide."""
+@pytest.fixture(scope="module")
+def scan_gate_plans(spark, sf_dir):
+    """{gate: physical plan} for every registry gate that is a pure
+    parquet-scan query (relational/pipeline/events — no store fixture, no
+    streaming run), built once for the suite-wide sweeps below."""
     from pigeon_optics_spark.queries import all_queries
 
     skip_prefixes = ("store_", "codec_", "lens_", "reactive_",
                      "attachments_", "pipeline_end_to_end",
                      "events_stream_")  # fixtures / streaming runs
+    return {name: plan_of(fn(spark, sf_dir))
+            for name, (fn, _oracle) in all_queries().items()
+            if not name.startswith(skip_prefixes)}
+
+
+def test_no_unbounded_global_windows_in_scan_gates(scan_gate_plans):
+    """Sweep: across every scan-path gate, an unpartitioned window may
+    appear only when the plan also carries a bounded-input marker upstream
+    (aggregate or top-k limit).  Catches the store_natural_order class of
+    regression suite-wide."""
     offenders = []
-    for name, (fn, _oracle) in all_queries().items():
-        if name.startswith(skip_prefixes):
-            continue
-        p = plan_of(fn(spark, sf_dir))
+    for name, p in scan_gate_plans.items():
         if _unpartitioned_window_lines(p) and not (
                 "HashAggregate" in p or "TakeOrderedAndProject" in p
                 or "GlobalLimit" in p):
@@ -745,22 +767,14 @@ _BNLJ_WHITELIST = {
 }
 
 
-def test_no_unjustified_cartesian_or_bnlj_suite_wide(spark, sf_dir):
+def test_no_unjustified_cartesian_or_bnlj_suite_wide(scan_gate_plans):
     """Sweep every scan-path gate's physical plan: CartesianProduct is
     never acceptable; BroadcastNestedLoopJoin only in the audited
     whitelist above (scalar/bounded broadcasts).  Catches the classic
     silent-cross-join regression (a dropped join key planning as a
     nested loop over the corpus) suite-wide."""
-    from pigeon_optics_spark.queries import all_queries
-
-    skip_prefixes = ("store_", "codec_", "lens_", "reactive_",
-                     "attachments_", "pipeline_end_to_end",
-                     "events_stream_")
     offenders = []
-    for name, (fn, _oracle) in all_queries().items():
-        if name.startswith(skip_prefixes):
-            continue
-        p = plan_of(fn(spark, sf_dir))
+    for name, p in scan_gate_plans.items():
         if "CartesianProduct" in p:
             offenders.append((name, "CartesianProduct"))
         elif "BroadcastNestedLoopJoin" in p and name not in _BNLJ_WHITELIST:

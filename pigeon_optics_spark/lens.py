@@ -812,13 +812,11 @@ def _compact_emissions(spark, store: DatasetStore, author: str,
     segs = _emit_segments(store, author, name)
     if len(segs) <= 1:
         return
-    import pyarrow.parquet as pq
-
     valid = _with_nat_key(_live_emissions(_read_emit_log(spark, segs)))
     # sized from the footers' row counts (an upper bound on the live rows:
     # it includes tombstones and the rows they retire), not a count job
-    n = sum(pq.ParquetFile(f).metadata.num_rows
-            for seg in segs for f in _segment_files(seg))
+    n = sum(footer.metadata.num_rows
+            for seg in segs for _f, footer in store._footers.segment(seg))
     num_parts = max(1, min(256, n // 200_000 + 1))
     final = _write_emit_segment(valid, d, _next_emit_seq(segs), base=True,
                                 num_parts=num_parts)
@@ -844,6 +842,7 @@ def _reset_lens_state(store: DatasetStore, author: str, name: str) -> None:
         store.delete_collection(author, cache, source=_CACHE_SOURCE)
     store.create(author, cache, source=_CACHE_SOURCE)
     shutil.rmtree(_emit_dir(store, author, name), ignore_errors=True)
+    store._footers.forget(_emit_dir(store, author, name))
 
 
 def create_lens(store: DatasetStore, author: str, name: str, *, inputs: list[str],

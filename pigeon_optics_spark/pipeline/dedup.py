@@ -498,7 +498,8 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     the label table; edges are never mutated.  Convergence = a round
     changes no label (checked on the driver with one count per round —
     scalar, not collect).  Determinism: labels are ids, min is total,
-    order-free.
+    order-free.  A graph still changing labels after ``max_iter`` rounds
+    raises instead of returning unconverged component ids.
 
     Iteration hygiene: every round ends in ``localCheckpoint`` — the
     self-join (pointer jump) references the label table twice, so without
@@ -506,6 +507,8 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     spends exponential time planning (the classic Spark iterative-algorithm
     trap; this hung before the checkpoint was added).
     """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StructField, StructType
 
     edges = (pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -527,9 +530,15 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
+        # an Arrow table goes to the JVM as Arrow batches; a list of rows
+        # would be pickled through a Python-worker job
         id_type = edges.schema["a"].dataType
+        arrow_type = to_arrow_type(id_type)
+        ids = list(parent)
         return pairs.sparkSession.createDataFrame(
-            [(x, find(x)) for x in parent],
+            pa.table({"id": pa.array(ids, arrow_type),
+                      "component_id": pa.array([find(x) for x in ids],
+                                               arrow_type)}),
             StructType([StructField("id", id_type),
                         StructField("component_id", id_type)]))
 
@@ -556,6 +565,10 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
         labels = nxt
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds")
 
     return labels.select(F.col("node").alias("id"),
                          F.col("comp").alias("component_id"))

@@ -38,13 +38,17 @@ a Spark DataFrame (``read_df``: analytics, lens builds).
 
 from __future__ import annotations
 
+import bisect
+import collections
 import contextlib
 import fcntl
 import json
 import os
 import re
 import shutil
+import stat
 import tempfile
+import threading
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -144,6 +148,113 @@ def _segment_files(path: str) -> list[str]:
                   if f.endswith(".parquet"))
 
 
+def _open_parquet(f: str, metadata: "pq.FileMetaData | None" = None):
+    """Open one segment file; with ``metadata`` its footer is not re-read.
+    Every footer load and row-group read of the store goes through here."""
+    return pq.ParquetFile(f, metadata=metadata)
+
+
+@dataclass(frozen=True)
+class _Footer:
+    """One segment file's parsed footer, and ``(row group, min, max)`` of
+    ``record_id`` for each non-empty row group.  ``min``/``max`` are None
+    where the writer kept no usable statistics: such a group is always
+    read."""
+    metadata: pq.FileMetaData
+    id_ranges: tuple[tuple[int, str | None, str | None], ...]
+
+    def groups_holding(self, wanted: list[str]) -> list[int]:
+        """Row groups whose ``record_id`` range can hold an id of the
+        sorted list ``wanted``.  Python ``str`` order is code-point order,
+        which is the UTF-8 byte order parquet keeps string statistics in."""
+        hits = []
+        for rg, lo, hi in self.id_ranges:
+            if lo is not None:
+                i = bisect.bisect_left(wanted, lo)
+                if i == len(wanted) or wanted[i] > hi:
+                    continue
+            hits.append(rg)
+        return hits
+
+
+def _load_footer(f: str) -> _Footer:
+    with _open_parquet(f) as pf:
+        md = pf.metadata
+    ranges = []
+    for rg in range(md.num_row_groups):
+        group = md.row_group(rg)
+        if group.num_rows == 0:
+            continue
+        lo = hi = None
+        for c in range(group.num_columns):
+            col = group.column(c)
+            if col.path_in_schema != "record_id":
+                continue
+            st = col.statistics
+            # pyarrow keeps min/max only up to 4 KB each, and when just one
+            # side is over it writes that side as "" (seen on a 5,000-char
+            # max): a range with lo > hi is unusable, not empty
+            if (st is not None and st.has_min_max
+                    and isinstance(st.min, str) and isinstance(st.max, str)
+                    and st.min <= st.max):
+                lo, hi = st.min, st.max
+            break
+        ranges.append((rg, lo, hi))
+    return _Footer(md, tuple(ranges))
+
+
+class _FooterCache:
+    """Bounded LRU of segment file -> :class:`_Footer`, keyed by the
+    file's identity ``(path, inode, size, mtime)``: committed segment files
+    are never rewritten in place, so a parsed footer stays valid while its
+    key holds.  An entry is a few KB."""
+
+    CAPACITY = 4096  # files
+
+    def __init__(self):
+        self._entries: collections.OrderedDict[tuple, _Footer] = \
+            collections.OrderedDict()
+        self._lock = threading.Lock()
+
+    def segment(self, path: str) -> list[tuple[str, _Footer]]:
+        """``(file, footer)`` of each parquet file of committed segment
+        ``path`` (:func:`_segment_files`), one ``stat`` per file."""
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return [(path, self._get(path, st))]
+        return [(f, self._get(f, os.stat(f))) for f in _segment_files(path)]
+
+    def _get(self, f: str, st: os.stat_result) -> _Footer:
+        key = (f, st.st_ino, st.st_size, st.st_mtime_ns)
+        with self._lock:
+            hit = self._entries.get(key)
+            if hit is not None:
+                self._entries.move_to_end(key)
+                return hit
+        return self.load(f, st)
+
+    def load(self, f: str, st: os.stat_result | None = None) -> _Footer:
+        """Read ``f``'s footer and cache it, replacing any entry under the
+        same key."""
+        st = st or os.stat(f)
+        footer = _load_footer(f)
+        with self._lock:
+            self._entries[f, st.st_ino, st.st_size, st.st_mtime_ns] = footer
+            while len(self._entries) > self.CAPACITY:
+                self._entries.popitem(last=False)
+        return footer
+
+    def forget(self, directory: str) -> None:
+        """Drop the entries of every file under ``directory`` (a deleted
+        collection or emission log, whose segment paths a recreated one
+        reuses)."""
+        prefix = os.path.join(os.path.abspath(directory), "")
+        with self._lock:
+            for key in [k for k in self._entries
+                        if os.path.abspath(k[0]).startswith(prefix)]:
+                del self._entries[key]
+
+
 def _validate_name(name: str) -> None:
     if not isinstance(name, str) or not (1 <= len(name) <= MAX_NAME_LEN):
         raise StoreError(f"invalid collection name: {name!r}")
@@ -167,9 +278,6 @@ class DatasetStore:
         # per-collection write serialization (the reference queues mutations
         # per file, tiny-function-queue via fs/raw.js:80, fs/objects.js:127);
         # concurrent writers to ONE collection must not race seq/version
-        import collections
-        import threading
-
         self._locks: dict[str, threading.Lock] = collections.defaultdict(
             threading.Lock)
         self._locks_guard = threading.Lock()
@@ -180,6 +288,7 @@ class DatasetStore:
         # _save_catalog re-acquires.
         self._catalog_lock = threading.RLock()
         self._load_catalog()
+        self._footers = _FooterCache()
         # when set, writes containing hash:// links whose blob is absent are
         # rejected (ref base-data-model.js:185-188)
         self.attachment_checker = attachment_checker
@@ -282,12 +391,14 @@ class DatasetStore:
             return False
         if record_id is None:
             return True
-        return record_id in self._state_meta(self._catalog[key])
+        return record_id in self._read_latest(self._catalog[key],
+                                              [record_id], [])
 
     def delete_collection(self, author: str, name: str, *, source: str = "datasets") -> None:
         with self._txn(source, author, name), self._catalog_lock:
             meta = self._meta(source, author, name)
             shutil.rmtree(self._dir(meta), ignore_errors=True)
+            self._footers.forget(self._dir(meta))
             del self._catalog[meta.key]
             self._save_catalog()
         self._emit_change(meta)
@@ -372,8 +483,8 @@ class DatasetStore:
     def _state_meta(self, meta: CollectionMeta) -> dict[str, dict]:
         """record_id -> {hash, links, version} latest-wins resolution with
         the fat ``value`` column never leaving parquet: driver memory is
-        O(ids + hashes), not O(data).  Backs listing, existence tests and
-        iteration order."""
+        O(ids + hashes), not O(data).  Backs listing and iteration
+        order."""
         state: dict[str, dict] = {}
         for path in self._segments(meta):
             table = pq.read_table(
@@ -391,33 +502,44 @@ class DatasetStore:
 
     def _read_latest(self, meta: CollectionMeta, ids: Iterable[str],
                      columns: list[str]) -> dict[str, dict]:
-        """Latest-wins live rows (``columns`` only) for the given ids — one
-        filtered, column-pruned read per segment in seq order (the
-        ``record_id IN (...)`` predicate prunes row groups via parquet
-        statistics), so the cost follows the ids asked for, not the
-        collection size."""
+        """Latest-wins live rows (``columns`` only) for the given ids.
+
+        Zone-map pruned: each segment file's cached footer (:class:`_FooterCache`)
+        gives every row group's ``record_id`` min/max, so only the row
+        groups whose range can hold a wanted id are opened and decoded
+        (those groups' ``record_id``, ``columns`` and ``deleted`` in full),
+        then filtered to the ids.  A point read of a log of one-row
+        delta segments opens the base and the deltas that hold the id;
+        a base written as one row group (every driver-side write) is
+        decoded whole whenever the id falls inside its range."""
         import pyarrow.compute as pc
 
-        wanted = list(dict.fromkeys(ids))
+        wanted = sorted(set(ids))
         if not wanted:
             return {}
-        rows: dict[str, dict] = {}
-        flt = pc.field("record_id").isin(wanted)
+        value_set = pa.array(wanted, pa.string())
         cols = ["record_id", *columns, "deleted"]
+        rows: dict[str, dict] = {}
         for path in self._segments(meta):
-            for row in pq.read_table(path, columns=cols,
-                                     filters=flt).to_pylist():
-                if row["deleted"]:
-                    rows.pop(row["record_id"], None)
-                else:
-                    rows[row["record_id"]] = row
+            for f, footer in self._footers.segment(path):
+                hits = footer.groups_holding(wanted)
+                if not hits:
+                    continue
+                with _open_parquet(f, footer.metadata) as pf:
+                    table = pf.read_row_groups(hits, columns=cols)
+                table = table.filter(
+                    pc.is_in(table["record_id"], value_set=value_set))
+                for row in table.to_pylist():
+                    if row["deleted"]:
+                        rows.pop(row["record_id"], None)
+                    else:
+                        rows[row["record_id"]] = row
         return rows
 
     def _read_values(self, meta: CollectionMeta,
                      ids: Iterable[str]) -> dict[str, str]:
-        """Latest-wins tagged-JSON values for the given ids only, so a
-        point read touches a handful of pages regardless of collection
-        size."""
+        """Latest-wins tagged-JSON values for the given ids only
+        (:meth:`_read_latest`)."""
         return {rid: row["value"] for rid, row in
                 self._read_latest(meta, ids, ["value"]).items()}
 
@@ -425,8 +547,9 @@ class DatasetStore:
 
     def read(self, author: str, name: str, record_id: str, *,
              source: str = "datasets") -> Any:
-        """Point lookup: a filtered parquet read per segment (row-group
-        pruned), never a collection load."""
+        """Point lookup through :meth:`_read_latest`: only the segment
+        files and row groups whose ``record_id`` range holds the id are
+        read, never a collection load."""
         meta = self._meta(source, author, name)
         vals = self._read_values(meta, [record_id])
         if record_id not in vals:
@@ -445,7 +568,7 @@ class DatasetStore:
 
         Memory-bounded: the id/metadata index is resolved without loading
         values; with ``fast_read`` values are fetched in natural-order
-        chunks of ``value_chunk_size`` ids via filtered segment reads, so
+        chunks of ``value_chunk_size`` ids via :meth:`_read_latest`, so
         peak driver memory is one chunk of values, not the collection."""
         meta = self._meta(source, author, name)
         st = self._state_meta(meta)
@@ -596,9 +719,9 @@ class DatasetStore:
             seq = self._seg_seq(fn)
             if seq is None or seq <= since_seq:
                 continue
-            for f in _segment_files(os.path.join(d, fn)):
+            for f, footer in self._footers.segment(os.path.join(d, fn)):
                 n_bytes += os.path.getsize(f)
-                n_rows += pq.ParquetFile(f).metadata.num_rows
+                n_rows += footer.metadata.num_rows
         return n_bytes, n_rows
 
     # -- writes -------------------------------------------------------------
@@ -657,8 +780,8 @@ class DatasetStore:
         whole collection (unmentioned keys dropped) via a base segment.
         Identical-value writes are hash-suppressed: they neither rewrite the
         row nor bump versions.  Plain upserts resolve the current hash and
-        version of the batch's ids only (filtered segment reads), so a point
-        write costs the same at any collection size.
+        version of the batch's ids only (:meth:`_read_latest`), so a
+        point write reads only the segments that can hold its id.
 
         ``precanonical=True`` (engine-internal writers: the lens cache and
         output) takes each value as a tagged-JSON string already in
@@ -1011,6 +1134,10 @@ class DatasetStore:
     def _write_segment(self, rows: list[dict], path: str) -> None:
         table = pa.Table.from_pylist(rows, schema=SEGMENT_SCHEMA)
         pq.write_table(table, path)
+        # a write retried after a failed catalog save rewrites the same seq
+        # path, maybe within one mtime tick at the same size: cache the new
+        # footer under the key now, so no stale entry can answer for it
+        self._footers.load(path)
 
     def _emit_change(self, meta: CollectionMeta) -> None:
         """Change event (ref update-events.js:7-14): one JSON file per batch
@@ -1053,7 +1180,6 @@ class DatasetStore:
         base segment (hash/version/links preserved — purely physical, no
         version bump, no change event).  Keeps the latest-wins resolution at
         O(1) segments; on a cluster this is OPTIMIZE."""
-        import glob as _glob
         from pyspark.sql import functions as F
 
         meta = self._meta(source, author, name)
@@ -1068,16 +1194,16 @@ class DatasetStore:
              .select(*[f.name for f in SEGMENT_SCHEMA])
              .write.mode("overwrite").parquet(stage))
         path = os.path.join(self._dir(meta), f"seg_{seq:08d}.base.parquet")
-        n_rows = sum(pq.ParquetFile(p).metadata.num_rows
-                     for p in _glob.glob(os.path.join(stage, "*.parquet")))
-        if n_rows == 0:
-            shutil.rmtree(stage, ignore_errors=True)
+        for fn in os.listdir(stage):
+            if not fn.endswith(".parquet"):
+                os.remove(os.path.join(stage, fn))
+        os.replace(stage, path)
+        # counted on the committed files, so the footers the next reads
+        # need are already cached
+        if sum(footer.metadata.num_rows
+               for _f, footer in self._footers.segment(path)) == 0:
+            shutil.rmtree(path)
             self._write_segment([], path)
-        else:
-            for fn in os.listdir(stage):
-                if not fn.endswith(".parquet"):
-                    os.remove(os.path.join(stage, fn))
-            os.replace(stage, path)
         old = self._segments(meta)
         meta.last_seq = seq
         meta.base_seq = seq

@@ -73,9 +73,17 @@ def read_meta_record(store: DatasetStore, record_id: str) -> Any:
 
 def meta_vfs_df(spark, store: DatasetStore):
     """The VFS as a DataFrame in the store's (record_id, value) shape."""
-    rows = [(k, json.dumps(value_to_tagged(v), ensure_ascii=False))
-            for k, v in sorted(meta_records(store).items())]
-    return spark.createDataFrame(rows, "record_id string, value string")
+    import pyarrow as pa
+
+    recs = sorted(meta_records(store).items())
+    # an Arrow table goes to the JVM as Arrow batches; a list of rows
+    # would be pickled through a Python-worker job
+    return spark.createDataFrame(
+        pa.table({"record_id": pa.array([k for k, _v in recs], pa.string()),
+                  "value": pa.array(
+                      [json.dumps(value_to_tagged(v), ensure_ascii=False)
+                       for _k, v in recs], pa.string())}),
+        "record_id string, value string")
 
 
 # --------------------------------------------------------------------------

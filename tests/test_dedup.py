@@ -88,6 +88,20 @@ def test_connected_components_long_chain_converges(spark, monkeypatch):
     assert {r["component_id"] for r in rows} == {"n00"}
 
 
+def test_connected_components_loop_raises_when_unconverged(spark,
+                                                          monkeypatch):
+    """A 40-node chain needs more than 2 pointer-jumping rounds: the loop
+    raises at ``max_iter`` instead of returning unconverged components."""
+    from pigeon_optics_spark.pipeline import dedup
+
+    monkeypatch.setattr(dedup, "CC_COLLECT_MAX", -1)
+    pairs = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i+1:02d}") for i in range(39)],
+        "id_a string, id_b string")
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        dedup.connected_components(pairs, max_iter=2)
+
+
 def _components(monkeypatch, pairs, cap=None):
     """``connected_components``, with ``CC_COLLECT_MAX`` set to ``cap``
     unless None → (id → component_id, output schema)."""
